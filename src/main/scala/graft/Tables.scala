@@ -21,6 +21,11 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    pinSessionConf(spark)
+    spark.read.parquet(s"$dir/$name.parquet")
+  }
+
+  private def pinSessionConf(spark: SparkSession): Unit = {
     // Some driver datasets write events.ts as TIMESTAMP(NANOS); Spark 4
     // rejects that unless mapped to long. Runtime-settable, and set here
     // (not only in our mains) because the driver smoke-runs entry() with
@@ -35,7 +40,6 @@ object Tables {
     // before, the first table() call.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.read.parquet(s"$dir/$name.parquet")
   }
 
   /** The events table with `ts` normalized to BIGINT nanoseconds since
@@ -69,13 +73,22 @@ object Tables {
     * window/groupByKey plan at 5-way parallelism forever (the round-1
     * scale-killer). The DuckDB oracle (Sql.bars) mirrors this derivation
     * exactly.
+    *
+    * The four columns it reads are read with a declared schema (their
+    * types at every scale factor), so building a series plan launches no
+    * schema-inference job; the session conf is pinned as in [[table]].
     */
-  def series(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "events").select(
+  def series(spark: SparkSession, dir: String): DataFrame = {
+    pinSessionConf(spark)
+    spark.read.schema(SeriesColumns).parquet(s"$dir/events.parquet").select(
       concat(col("event_type"), lit("_"),
         (col("user_id") % SymbolBuckets).cast("string")).as("symbol"),
       col("event_id").as("ord"),
       col("value").as("close"))
+  }
+
+  /** The `events` columns [[series]] reads. */
+  private val SeriesColumns = "event_type STRING, user_id BIGINT, event_id BIGINT, value DOUBLE"
 
   /** Deterministic synthetic OHLCV bars from `events` — the shared input of
     * every indicator query. Body, upper/lower shadow, and open gap are
@@ -93,11 +106,14 @@ object Tables {
     val g  = (col("ord") * 7919 % 4000 - 2000).cast("double") / 9973.0  // body ±20%
     val us = (col("ord") * 104729 % 7).cast("double") / 401.0           // upper shadow 0–1.5%
     val ls = (col("ord") * 15485863 % 5).cast("double") / 499.0         // lower shadow 0–0.8%
-    series(spark, dir)
-      .withColumn("open", col("close") * (lit(1.0) + g))
-      .withColumn("high", greatest(col("open"), col("close")) * (lit(1.0) + us))
-      .withColumn("low", least(col("open"), col("close")) * (lit(1.0) - ls))
-      .withColumn("volume", (col("ord") % 1000 + 10).cast("double"))
+    val open = col("close") * (lit(1.0) + g)
+    // one projection, not a withColumn chain: each withColumn re-analyzes
+    // the whole plan, ~10 ms apiece at build time
+    series(spark, dir).select(col("*"),
+      open.as("open"),
+      (greatest(open, col("close")) * (lit(1.0) + us)).as("high"),
+      (least(open, col("close")) * (lit(1.0) - ls)).as("low"),
+      (col("ord") % 1000 + 10).cast("double").as("volume"))
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame =

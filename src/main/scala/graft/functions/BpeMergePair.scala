@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -23,6 +24,14 @@ case class BpeMergePair(child: Expression, a: String, b: String)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "bpe_merge_pair"
+
+  // a non-array<string> child is rejected at analysis, not with a
+  // ClassCastException inside a task
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<string> symbols, got ${other.catalogString}")
+  }
 
   private val aU = UTF8String.fromString(a)
   private val bU = UTF8String.fromString(b)

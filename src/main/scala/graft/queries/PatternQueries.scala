@@ -15,10 +15,7 @@ object PatternQueries {
 
   private def patternQ(p: graft.ta.PatternDsl.Pattern): Q = (spark, dir) => {
     implicit val w = Window.partitionBy("symbol").orderBy("ord")
-    // presentation sort behind a lineage barrier: the sort's range
-    // sampling otherwise re-executes the pattern's window stage (r18;
-    // see Present.sortedBarrier)
-    Present.sortedBarrier(Tables.bars(spark, dir)
+    Present.sorted(Tables.bars(spark, dir)
       .select(col("symbol"), col("ord"), p.column),
       "symbol", "ord")
   }

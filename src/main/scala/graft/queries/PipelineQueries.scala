@@ -14,15 +14,6 @@ object PipelineQueries {
 
   private def r6(c: Column): Column = round(c, 6) + lit(0.0)
 
-  /** Presentation sort with a lineage barrier — the ONE shared
-    * definition lives in [[Present.sortedBarrier]] (r19, advisor item:
-    * this file carried a byte-identical private copy whose semantics
-    * could drift). Applied ONLY where the body is scan-stage-heavy —
-    * window/join/agg queries already end at a shuffle boundary the
-    * sampler reuses, and there the barrier would be pure overhead. */
-  private def sortedBarrier(df: DataFrame, keys: String*): DataFrame =
-    Present.sortedBarrier(df, keys: _*)
-
   final case class Entry(name: String, q: Q, oracle: Option[String])
 
   /** Shared oracle CTEs for the text-quality stats: CTE `q` exposes
@@ -747,7 +738,7 @@ object PipelineQueries {
         |FROM documents ORDER BY doc_id""".stripMargin)),
 
     Entry("text_quality",
-      (spark, dir) => sortedBarrier({
+      (spark, dir) => Present.sorted({
         // project the language-score array once; the inlined argmax form
         // re-evaluated every score (and its tokenization) per tie-check
         val t = col("text")
@@ -1779,7 +1770,7 @@ object PipelineQueries {
       // on both engines and still hash-matches.
       (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        sortedBarrier(Dedup.decontaminateBloom(docs.where(col("doc_id") % 50 =!= 0),
+        Present.sorted(Dedup.decontaminateBloom(docs.where(col("doc_id") % 50 =!= 0),
             docs.where(col("doc_id") % 50 === 0)), "doc_id")
       },
       Some {
@@ -1902,7 +1893,7 @@ object PipelineQueries {
       // dedup). array_distinct preserves first-occurrence order; the
       // oracle re-derives that order via min(position).
       (spark, dir) =>
-        sortedBarrier(Dedup.dedupDocTokens(Tables.documents(spark, dir)), "doc_id"),
+        Present.sorted(Dedup.dedupDocTokens(Tables.documents(spark, dir)), "doc_id"),
       Some(
         s"""WITH ${DedupSql.tokCte},
           |pos AS (SELECT doc_id, unnest(toks) AS t, generate_subscripts(toks, 1) AS p FROM tok),
@@ -2063,7 +2054,7 @@ object PipelineQueries {
       // tokens starting every 56, short docs yield one chunk, the last
       // window runs short. Pure per-row explode — zero shuffles; all
       // arithmetic integral, text reassembly exact on both engines.
-      (spark, dir) => sortedBarrier(
+      (spark, dir) => Present.sorted(
         Packing.chunkTokens(Tables.documents(spark, dir), size = 64, overlap = 8),
         "doc_id", "chunk_id"),
       Some("""WITH tok AS (
@@ -2337,7 +2328,7 @@ object PipelineQueries {
       // arithmetic over the token array — zero shuffle, runs inside the
       // scan stage at any corpus size. Ratios are int/int divisions in
       // double, so the oracle's unnest-based replay is IEEE-identical.
-      (spark, dir) => sortedBarrier({
+      (spark, dir) => Present.sorted({
         // ONE native counting pass staged as an attribute (r19 —
         // RepetitionCounts; the r18 __toks staging subsumed): each RAW
         // signal is a couple of arithmetic ops over the counts struct,
@@ -2378,7 +2369,7 @@ object PipelineQueries {
       // combination. Counts follow the scrub order (email -> IP -> phone;
       // an IPv4 is also a valid phone match, so phones are counted after
       // IPs are gone). The scrubbed text itself is hash-compared.
-      (spark, dir) => sortedBarrier(
+      (spark, dir) => Present.sorted(
         Pii.withScrub(Pii.demoPii(Tables.documents(spark, dir)))
           .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
             col("text_scrubbed")), "doc_id"),
@@ -2578,9 +2569,11 @@ object PipelineQueries {
       // exchanges). minDocs=5 exercises both regimes the synthetic
       // corpora present: sparse tails (sf0.001/0.01 remove ~9%) and the
       // template-dominated sf0.1 (~99.8% removed — mass removal IS the
-      // honest stress of the rebuild path).
+      // honest stress of the rebuild path). The family keeps the
+      // barrier sort: its single-partition form measured 7–23% slower
+      // on two of the three legs (sf0.1, 4 cores).
       (spark, dir) =>
-        sortedBarrier(
+        Present.sortedBarrier(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5),
           "doc_id"),
       Some(removeFrequentSpansSql)),
@@ -2594,7 +2587,7 @@ object PipelineQueries {
       // probe the regime verdict picks. Its sf-corpus price (fp probe +
       // per-hit string build where ~every position hits) is deliberate.
       (spark, dir) =>
-        sortedBarrier(
+        Present.sortedBarrier(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5,
             fpRewrite = Some(true)),
           "doc_id"),
@@ -2610,7 +2603,7 @@ object PipelineQueries {
       // the set-placement dispatch cannot change a byte of output
       // (identical rebuild tail over identical flags).
       (spark, dir) =>
-        sortedBarrier(
+        Present.sortedBarrier(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5,
             maxLiteralSpans = 0),
           "doc_id"),

@@ -3,37 +3,37 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Presentation-sort lineage barrier shared by the query registrations
-  * (r18). Every registered query orders its output for the driver's
-  * row-order-sensitive hash, but a global sort's RangePartitioning
-  * SAMPLES its child in a separate pass — re-executing everything
-  * between the last materialization point and the sort. For a
-  * scan-stage body that is the whole query; for a window / typed
-  * flatMapGroups body it is the whole post-shuffle stage (the kernel
-  * compute — only the exchange's map side is reused via shuffle files).
-  * `localCheckpoint(eager = false)` materializes the body's partitions
-  * on first use, so the sampler and the sort shuffle read stored
-  * blocks instead of recomputing. Rows, their order (partition layout
-  * and intra-partition order are preserved, so ties sort identically)
-  * and the noop-materialize semantics are unchanged.
+/** The presentation sort every query registration ends with: output
+  * hashes are row-order-sensitive, so each output is ordered by unique
+  * keys. Two forms, both yielding the same rows in the same order
+  * (ties included: each is a stable sort of the body's partitions read
+  * in partition order):
   *
-  * 100 TB reading: one materialization of the OUTPUT in exchange for
-  * not re-running the body — and only on sorts that exist for
-  * presentation (the align(sorted = false) doctrine: production
-  * consumers that don't need row order should skip the sort entirely;
-  * those that do would otherwise pay the body twice). The trade is
-  * explicit: the checkpoint truncates lineage, so an executor lost
-  * AFTER the barrier materializes fails the query instead of
-  * recomputing it — presentation sorts are for bounded outputs a
-  * driver consumes; unbounded consumers take the unsorted leg.
+  *  - [[sorted]] — `repartition(1).sortWithinPartitions(keys)`. ONE plan:
+  *    the body runs once, its partitions gather into a single-partition
+  *    exchange and one task sorts them. No range sampler, no lineage
+  *    truncation, nothing to release, and nothing runs at build time.
+  *    The default for every registration whose output one task sorts
+  *    comfortably (the series, pattern and per-document queries).
   *
-  * The blocks are freed deterministically (r19): each barrier frame is
-  * tracked here and [[releaseBarriers]] unpersists it once its query's
-  * output is materialized — otherwise a long sweep pins every query's
-  * full output in block-manager storage until GC, and storage competes
-  * with execution memory (guide §5 "unpersist when done"; the r18
-  * sweeps' WARN churn and in-sweep stall inflation). */
+  *  - [[sortedBarrier]] — `localCheckpoint(eager = false)` + `orderBy`.
+  *    A global sort's RangePartitioning SAMPLES its child in a separate
+  *    pass, which would re-execute the body; the checkpoint materializes
+  *    the body's partitions on first use, so the sampler and the sort
+  *    shuffle read stored blocks instead. The sort then runs on every
+  *    core. Kept only where [[sorted]] measured slower: the align grid
+  *    family (the largest presentation-sorted outputs) and the
+  *    remove_frequent_spans family. The trade is explicit: the
+  *    checkpoint truncates lineage, so an executor lost AFTER the
+  *    barrier materializes fails the query instead of recomputing it,
+  *    and its blocks stay pinned until [[releaseBarriers]] frees them.
+  *
+  * Production consumers that don't need row order should skip both (the
+  * `align(sorted = false)` doctrine). */
 object Present {
+  def sorted(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys.map(col): _*)
+
   private val liveBarriers =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 

@@ -23,22 +23,20 @@ object TaQueries {
   private def r6(c: Column): Column = round(c, 6) + lit(0.0)
   private def W: WindowSpec = Window.partitionBy("symbol").orderBy("ord")
 
-  /** Frame-op query over bars: one select, one window exchange. The
-    * presentation sort rides [[Present.sortedBarrier]] so its range
-    * sampling reads the window stage's stored blocks instead of
-    * re-executing it (r18; see Present). */
+  /** Frame-op query over bars: one select, one window exchange, then
+    * the single-plan presentation sort ([[Present.sorted]]). */
   private def frameQ(outs: (String, WindowSpec => Column)*): Q = (spark, dir) => {
     val w = W
-    Present.sortedBarrier(Tables.bars(spark, dir)
+    Present.sorted(Tables.bars(spark, dir)
       .select(col("symbol") +: col("ord") +: outs.map { case (n, f) => r6(f(w)).as(n) }: _*),
       "symbol", "ord")
   }
 
-  /** Loop-op query: overSeries output (inputs carried) → rounded outputs.
-    * Barriered like [[frameQ]] — here the sampler would re-run the typed
-    * flatMapGroups kernel loop, the expensive half of every loop op. */
+  /** Loop-op query: overSeries output (inputs carried) → rounded outputs,
+    * sorted like [[frameQ]]: the typed flatMapGroups kernel loop runs
+    * once, feeding the single-partition sort directly. */
   private def recQ(outs: String*)(f: DataFrame => DataFrame): Q = (spark, dir) =>
-    Present.sortedBarrier(f(Tables.bars(spark, dir))
+    Present.sorted(f(Tables.bars(spark, dir))
       .select(col("symbol") +: col("ord") +: outs.map(n => r6(col(n)).as(n)): _*),
       "symbol", "ord")
 
@@ -1023,7 +1021,7 @@ object TaQueries {
         graft.ta.SeriesOps.overSeriesChunked(bars, Seq("close"), Seq("ema"),
             new graft.ta.Chunked.EmaStep(20), chunkRows = chunk)
           .select(col("symbol"), col("ord"), r6(col("ema")).as("ema"))
-          .transform(Present.sortedBarrier(_, "symbol", "ord"))
+          .transform(Present.sorted(_, "symbol", "ord"))
       },
       Some(s"""$B, $closeList
         |SELECT symbol, ord, ${Sql.r6(Sql.emaList("xs", 20), "ema")} FROM l $T""".stripMargin)),
@@ -1047,7 +1045,7 @@ object TaQueries {
             chunkRows = math.max(1, math.ceil(maxLen / 3.0).toInt))(
             a => Array(graft.ta.Kernels.ema(a(0), 20)))
           .select(col("symbol"), col("ord"), r6(col("ema")).as("ema"))
-          .transform(Present.sortedBarrier(_, "symbol", "ord"))
+          .transform(Present.sorted(_, "symbol", "ord"))
       },
       Some(s"""$B, $closeList
         |SELECT symbol, ord, ${Sql.r6(Sql.emaList("xs", 20), "ema")} FROM l $T""".stripMargin)),
@@ -1162,7 +1160,7 @@ object TaQueries {
         graft.ta.SeriesOps.overSeriesChunked(bars, Seq("high", "low"), Seq("sar"),
             new graft.ta.Chunked.SarStep(), chunkRows = chunk)
           .select(col("symbol"), col("ord"), r6(col("sar")).as("sar"))
-          .transform(Present.sortedBarrier(_, "symbol", "ord"))
+          .transform(Present.sorted(_, "symbol", "ord"))
       },
       Some(sarOracle(signed = false, "sar", 0.02, 0.02, 0.2, 0.02, 0.02, 0.2, 0.0))),
     Entry("stochrsi_14_5_3",
@@ -1234,7 +1232,7 @@ object TaQueries {
             new graft.ta.Chunked.MesaStep(), chunkRows = chunk)
           .select(col("symbol"), col("ord"),
             r6(col("mama")).as("mama"), r6(col("fama")).as("fama"))
-          .transform(Present.sortedBarrier(_, "symbol", "ord"))
+          .transform(Present.sorted(_, "symbol", "ord"))
       },
       Some(mesaQ(s"${Sql.r6("s.mam", "mama")}, ${Sql.r6("s.fam", "fama")}"))),
 
@@ -1246,7 +1244,7 @@ object TaQueries {
         graft.bt.Vectorized.run(sig)
           .select(col("symbol"), col("ord"), r6(col("position")).as("position"),
             r6(col("cash")).as("cash"), r6(col("equity")).as("equity"))
-          .transform(Present.sortedBarrier(_, "symbol", "ord"))
+          .transform(Present.sorted(_, "symbol", "ord"))
       },
       Some(s"""${B.replaceFirst("WITH ", "WITH RECURSIVE ")}, $btStateCtes
         |SELECT symbol, ord, ${Sql.r6("pos", "position")}, ${Sql.r6("cash", "cash")},
@@ -1258,7 +1256,7 @@ object TaQueries {
         val cols = graft.bt.Metrics.columns
         graft.bt.Vectorized.summary(sig)
           .select(col("symbol") +: cols.map(c => r6(col(c)).as(c)): _*)
-          .transform(Present.sortedBarrier(_, "symbol"))
+          .transform(Present.sorted(_, "symbol"))
       },
       // Metrics replayed per symbol over the recursive curve: list folds
       // for the sequential mean/variance sums, running-max window for
@@ -1275,7 +1273,7 @@ object TaQueries {
         val cols = graft.bt.Metrics.columns
         graft.bt.Vectorized.summaryVsPrice(sig)
           .select(col("symbol") +: cols.map(c => r6(col(c)).as(c)): _*)
-          .transform(Present.sortedBarrier(_, "symbol"))
+          .transform(Present.sorted(_, "symbol"))
       },
       Some(btSummaryOracle(withBench = true))),
 

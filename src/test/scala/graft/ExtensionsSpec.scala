@@ -90,4 +90,12 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("SELECT minhash_sig(array('a'), CAST(rand() * 4 AS INT))").head())
     assert(e.getMessage.contains("integer literal"))
   }
+
+  test("bpe_merge_pair rejects a non-array<string> argument at analysis") {
+    import org.apache.spark.sql.functions._
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(graft.functions.BpeMergePair.bpeMergePair(
+        array(lit(1), lit(2)), "a", "b")))
+    assert(e.getMessage.contains("array<string>"), e.getMessage)
+  }
 }

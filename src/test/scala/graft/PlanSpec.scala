@@ -228,6 +228,34 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"presentation sort must still be a single range sort:\n$plan")
   }
 
+  test("Present.sorted plans as one single-partition sort over the body") {
+    // the series registrations' presentation sort: one plan, no
+    // checkpoint leaf, no range sampler, one gather exchange
+    val df = graft.queries.Present.sorted(
+      docs(50).select(col("doc_id"), length(col("text")).as("len")), "doc_id")
+    val plan = executedPlan(df)
+    assert(!plan.contains("ExistingRDD"), s"no checkpoint leaf:\n$plan")
+    assert(!plan.contains("rangepartitioning"), s"no range sort:\n$plan")
+    val exchanges = physicalNodes(df.queryExecution.executedPlan).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }
+    assert(exchanges.map(_.outputPartitioning) ==
+      Seq(org.apache.spark.sql.catalyst.plans.physical.SinglePartition),
+      s"exactly one SinglePartition exchange:\n$plan")
+  }
+
+  test("Present.sorted and sortedBarrier yield the same rows in the same order, ties included") {
+    // 4 input partitions, 5 distinct keys over 200 rows: the tie order is
+    // what a row-order-sensitive hash sees, so the two forms must agree
+    val body = spark.range(0, 200, 1, 4)
+      .select((col("id") * 7 % 5).as("k"), col("id"))
+    val keyed = graft.queries.Present.sorted(body, "k").collect().toSeq
+    val barriered = graft.queries.Present.sortedBarrier(body, "k").collect().toSeq
+    graft.queries.Present.releaseBarriers()
+    assert(keyed.map(_.getLong(0)) == keyed.map(_.getLong(0)).sorted)
+    assert(keyed == barriered)
+  }
+
   test("identical-signature collapse adds exactly one exchange, and it is reused") {
     // plain: 1 shuffle (the chunk/key repartition, reused by both join
     // sides). collapsed: + the signature window's hash exchange = 2.

@@ -50,4 +50,31 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.orderBy("event_id").select("ts").collect().map(_.getLong(0)).toSeq ==
       (0 until 4).map(_ * 1_000_000_007L))
   }
+
+  test("series' declared-schema read equals the inferred-schema read, rows and types") {
+    // an events table in the testdata layout (all six columns, the
+    // declared four among them, spread over two files)
+    val dir = java.nio.file.Files.createTempDirectory("tables_spec_").toString
+    spark.range(0, 300, 1, 2).select(
+      col("id").as("event_id"),
+      expr("timestamp_micros(1700000000000000 + id * 1000)").as("ts"),
+      (col("id") * 37 % 101).as("user_id"),
+      element_at(array(Seq("click", "view", "buy", "cart", "search").map(lit): _*),
+        (col("id") % 5 + 1).cast("int")).as("event_type"),
+      (col("id") * 0.37 + 1.0).as("value"),
+      lit("{}").as("props"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val declared = Tables.series(spark, dir)
+    val inferred = spark.read.parquet(s"$dir/events.parquet").select(
+      concat(col("event_type"), lit("_"),
+        (col("user_id") % Tables.SymbolBuckets).cast("string")).as("symbol"),
+      col("event_id").as("ord"), col("value").as("close"))
+    assert(declared.schema == inferred.schema)
+    assert(declared.orderBy("ord").collect().toSeq == inferred.orderBy("ord").collect().toSeq)
+    // the session-conf side effects Tables.table applies still happen
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    Tables.series(spark, dir)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
 }
