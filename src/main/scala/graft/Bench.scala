@@ -40,11 +40,11 @@ object Bench {
         Window.partitionBy("symbol").orderBy("ord").rowsBetween(-4, 0))).count()
       ta.SeriesOps.overSeries(wdf, Seq("close"), Seq("o"))(a => Array(a(0))).count()
       // ... and the noop sink plus both presentation-sort forms
-      // (queries.Present): the single-partition sort every series query
-      // rides, and the global-sort range sampler over a localCheckpoint
-      // that the align family's barrier rides. The alphabetically-first
-      // query of each form was otherwise billed their one-time
-      // datasource/classload costs
+      // (queries.Present): the single-partition sort most registrations
+      // ride, and the global-sort range sampler over a localCheckpoint
+      // that the remove_frequent_spans barrier rides. The
+      // alphabetically-first query of each form was otherwise billed
+      // their one-time datasource/classload costs
       wdf.repartition(1).sortWithinPartitions("symbol", "ord")
         .write.format("noop").mode("overwrite").save()
       wdf.localCheckpoint(eager = false).orderBy("ord")

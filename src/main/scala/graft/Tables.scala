@@ -77,6 +77,11 @@ object Tables {
     * The four columns it reads are read with a declared schema (their
     * types at every scale factor), so building a series plan launches no
     * schema-inference job; the session conf is pinned as in [[table]].
+    * Those four types are part of the input contract: a file column
+    * Parquet can widen to its declared type (INT32 to BIGINT, FLOAT to
+    * DOUBLE) still reads, but one it cannot (a DECIMAL `value`, a
+    * STRING `user_id`) fails at read time, where an inferred read
+    * would have accepted it.
     */
   def series(spark: SparkSession, dir: String): DataFrame = {
     pinSessionConf(spark)

@@ -594,15 +594,12 @@ object EtlQueries {
         val sparse = Tables.bars(spark, dir)
           .select(col("symbol"), col("ord").as("date"), col("close"), col("volume"))
           .where((col("date") * 31 + length(col("symbol")) * 7) % 5 < 2)
-        // sorted = false + one terminal barriered sort (r18): align's
+        // sorted = false + one terminal presentation sort (r18): align's
         // internal presentation sort was immediately re-sorted by this
         // registration's own orderBy, and the sort's range sampling
         // re-executed the grid-join + fill stage; (date, symbol) is
-        // unique, so the single sort reproduces the same total order.
-        // The align family keeps the barrier form: its grid is the largest
-        // presentation-sorted output, and one sorting task is not faster
-        // than the range sort over the checkpoint (sf0.1, 4 cores)
-        Present.sortedBarrier(
+        // unique, so the single sort reproduces the same total order
+        Present.sorted(
           Align.align(sparse, dateCol = "date", sorted = false)
             .select(col("date"), col("symbol"),
               r6(col("close")).as("close"), r6(col("volume")).as("volume")),
@@ -678,7 +675,7 @@ object EtlQueries {
         val sparse = Tables.bars(spark, dir)
           .select(col("symbol"), col("ord").as("date"), col("close"))
           .where((col("date") * 31 + length(col("symbol")) * 7) % 5 < 2)
-        Present.sortedBarrier(
+        Present.sorted(
           Align.align(sparse, dateCol = "date", fillNullStrategy = "zero",
               sorted = false)
             .select(col("date"), col("symbol"), r6(col("close")).as("close")),
@@ -703,7 +700,7 @@ object EtlQueries {
         val sparse = Tables.bars(spark, dir)
           .select(col("symbol"), col("ord").as("date"), col("close"))
           .where((col("date") * 31 + length(col("symbol")) * 7) % 5 < 2)
-        Present.sortedBarrier(
+        Present.sorted(
           Align.align(sparse, dateCol = "date", fillNullStrategy = "backward",
               sorted = false)
             .select(col("date"), col("symbol"), r6(col("close")).as("close")),

@@ -2569,9 +2569,9 @@ object PipelineQueries {
       // exchanges). minDocs=5 exercises both regimes the synthetic
       // corpora present: sparse tails (sf0.001/0.01 remove ~9%) and the
       // template-dominated sf0.1 (~99.8% removed — mass removal IS the
-      // honest stress of the rebuild path). The family keeps the
-      // barrier sort: its single-partition form measured 7–23% slower
-      // on two of the three legs (sf0.1, 4 cores).
+      // honest stress of the rebuild path). Barrier sort: the frequent
+      // set rides the plan as an InSet literal, and the one-plan sort
+      // measured slower over it (see Present).
       (spark, dir) =>
         Present.sortedBarrier(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5),
@@ -2586,6 +2586,7 @@ object PipelineQueries {
       // confirm), while the dispatcher keeps real traffic on whichever
       // probe the regime verdict picks. Its sf-corpus price (fp probe +
       // per-hit string build where ~every position hits) is deliberate.
+      // Barrier sort for the same InSet literal as the leg above.
       (spark, dir) =>
         Present.sortedBarrier(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5,
@@ -2603,7 +2604,7 @@ object PipelineQueries {
       // the set-placement dispatch cannot change a byte of output
       // (identical rebuild tail over identical flags).
       (spark, dir) =>
-        Present.sortedBarrier(
+        Present.sorted(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5,
             maxLiteralSpans = 0),
           "doc_id"),

@@ -4,26 +4,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** The presentation sort every query registration ends with: output
-  * hashes are row-order-sensitive, so each output is ordered by unique
-  * keys. Two forms, both yielding the same rows in the same order
-  * (ties included: each is a stable sort of the body's partitions read
-  * in partition order):
+  * hashes are row-order-sensitive, so each output is ordered by its sort
+  * keys. Those keys MUST be unique per row: neither form specifies the
+  * order among rows with equal keys (a shuffle reader takes blocks in
+  * arrival order and a spilled sort merges its runs unstably), so ties
+  * would make the output hash depend on the run.
   *
   *  - [[sorted]] — `repartition(1).sortWithinPartitions(keys)`. ONE plan:
   *    the body runs once, its partitions gather into a single-partition
   *    exchange and one task sorts them. No range sampler, no lineage
   *    truncation, nothing to release, and nothing runs at build time.
-  *    The default for every registration whose output one task sorts
-  *    comfortably (the series, pattern and per-document queries).
+  *    The price is that the sort is one task at any core count. The
+  *    default.
   *
   *  - [[sortedBarrier]] — `localCheckpoint(eager = false)` + `orderBy`.
-  *    A global sort's RangePartitioning SAMPLES its child in a separate
-  *    pass, which would re-execute the body; the checkpoint materializes
-  *    the body's partitions on first use, so the sampler and the sort
-  *    shuffle read stored blocks instead. The sort then runs on every
-  *    core. Kept only where [[sorted]] measured slower: the align grid
-  *    family (the largest presentation-sorted outputs) and the
-  *    remove_frequent_spans family. The trade is explicit: the
+  *    The body is planned once, at build time, and the query the caller
+  *    runs plans and prints only the sort over the checkpoint's stored
+  *    blocks. That wins where the body's plan itself is expensive: the
+  *    literal legs of remove_frequent_spans carry the frequent-gram set
+  *    as an InSet literal (25,829 grams at sf0.1), which the write of a
+  *    one-plan query re-plans and describes (one formatted description
+  *    of the fp leg's body alone takes ~0.1 s); there the barrier form
+  *    measured faster in 9 of 10 pairs. The trade is explicit: the
   *    checkpoint truncates lineage, so an executor lost AFTER the
   *    barrier materializes fails the query instead of recomputing it,
   *    and its blocks stay pinned until [[releaseBarriers]] frees them.

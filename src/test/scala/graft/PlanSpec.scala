@@ -229,7 +229,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Present.sorted plans as one single-partition sort over the body") {
-    // the series registrations' presentation sort: one plan, no
+    // the default presentation sort: one plan, no
     // checkpoint leaf, no range sampler, one gather exchange
     val df = graft.queries.Present.sorted(
       docs(50).select(col("doc_id"), length(col("text")).as("len")), "doc_id")
@@ -244,16 +244,16 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"exactly one SinglePartition exchange:\n$plan")
   }
 
-  test("Present.sorted and sortedBarrier yield the same rows in the same order, ties included") {
-    // 4 input partitions, 5 distinct keys over 200 rows: the tie order is
-    // what a row-order-sensitive hash sees, so the two forms must agree
+  test("Present.sorted and sortedBarrier yield the body's rows ordered by unique keys") {
+    // 4 input partitions, each holding keys from across the range, so
+    // both forms must interleave them; keys are unique, as every
+    // registration's are (neither form specifies the order of ties)
     val body = spark.range(0, 200, 1, 4)
-      .select((col("id") * 7 % 5).as("k"), col("id"))
-    val keyed = graft.queries.Present.sorted(body, "k").collect().toSeq
-    val barriered = graft.queries.Present.sortedBarrier(body, "k").collect().toSeq
+      .select((col("id") * 7 % 200).as("k"), (col("id") * 3).as("v"))
+    val expected = body.collect().toSeq.sortBy(_.getLong(0))
+    assert(graft.queries.Present.sorted(body, "k").collect().toSeq == expected)
+    assert(graft.queries.Present.sortedBarrier(body, "k").collect().toSeq == expected)
     graft.queries.Present.releaseBarriers()
-    assert(keyed.map(_.getLong(0)) == keyed.map(_.getLong(0)).sorted)
-    assert(keyed == barriered)
   }
 
   test("identical-signature collapse adds exactly one exchange, and it is reused") {

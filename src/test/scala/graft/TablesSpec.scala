@@ -51,6 +51,18 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 4).map(_ * 1_000_000_007L))
   }
 
+  /** Tables.series against the same projection over an inferred-schema
+    * read of `dir`: same schema, same rows. */
+  private def assertSeriesMatchesInferred(dir: String): Unit = {
+    val declared = Tables.series(spark, dir)
+    val inferred = spark.read.parquet(s"$dir/events.parquet").select(
+      concat(col("event_type"), lit("_"),
+        (col("user_id") % Tables.SymbolBuckets).cast("string")).as("symbol"),
+      col("event_id").as("ord"), col("value").as("close"))
+    assert(declared.schema == inferred.schema)
+    assert(declared.orderBy("ord").collect().toSeq == inferred.orderBy("ord").collect().toSeq)
+  }
+
   test("series' declared-schema read equals the inferred-schema read, rows and types") {
     // an events table in the testdata layout (all six columns, the
     // declared four among them, spread over two files)
@@ -64,17 +76,20 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       (col("id") * 0.37 + 1.0).as("value"),
       lit("{}").as("props"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val declared = Tables.series(spark, dir)
-    val inferred = spark.read.parquet(s"$dir/events.parquet").select(
-      concat(col("event_type"), lit("_"),
-        (col("user_id") % Tables.SymbolBuckets).cast("string")).as("symbol"),
-      col("event_id").as("ord"), col("value").as("close"))
-    assert(declared.schema == inferred.schema)
-    assert(declared.orderBy("ord").collect().toSeq == inferred.orderBy("ord").collect().toSeq)
+    assertSeriesMatchesInferred(dir)
     // the session-conf side effects Tables.table applies still happen
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     Tables.series(spark, dir)
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("series' declared-schema read equals the inferred-schema read on the sf0.001 dataset") {
+    // the generated dataset, not a file staged in the declared types:
+    // SPARK_GRAFT_TESTDATA names the directory holding the sf* dirs
+    val dir = sys.env.get("SPARK_GRAFT_TESTDATA").map(_ + "/sf0.001")
+    assume(dir.exists(d => new java.io.File(s"$d/events.parquet").exists),
+      "SPARK_GRAFT_TESTDATA unset or without sf0.001/events.parquet")
+    assertSeriesMatchesInferred(dir.get)
   }
 }
