@@ -46,7 +46,7 @@ object BucketBench {
 
     val n = args.headOption.map(_.toLong).getOrElse(20_000_000L)
     val users = 100_000L
-    val base = java.nio.file.Files.createTempDirectory("graft_bktbench_").toString
+    val base = Scratch.dir("graft_bktbench_")
     val fact = spark.range(n).select(col("id").as("event_id"),
       (col("id") % users).as("user_id"), (col("id") % 997).cast("double").as("value"))
     val dim = spark.range(users).select(col("id").as("user_id"),

@@ -232,7 +232,7 @@ object ScaleBench {
       // pristine and the leg idempotent.
       "ivfpq_append" -> ((spark: SparkSession, dir: String) => {
         val basePath = hqScaledIndex(spark, dir)
-        val p = java.nio.file.Files.createTempDirectory("graft_append_").toString
+        val p = Scratch.dir("graft_append_")
         for (part <- Seq("centroids", "codebook", "meta"))
           spark.read.parquet(s"$basePath/$part")
             .coalesce(1).write.mode("overwrite").parquet(s"$p/$part")

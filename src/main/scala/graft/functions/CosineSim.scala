@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity of two double arrays.
   *
@@ -18,10 +18,14 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * Expression for the genuinely hot scalar (this) → UDF never.
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
-  // inputs are guaranteed array<double> by the Column entry point below
-  // (call sites cast); ExpectsInputTypes is private[sql] in Spark 4.
+  // the loop reads doubles: any other element type (the embeddings
+  // table's array<float> included) fails analysis, not a task. The
+  // inputTypes overrides leave their result type to inference: its
+  // element type, AbstractDataType, is private[sql].
+  override def inputTypes =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 

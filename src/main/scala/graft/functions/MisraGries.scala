@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -67,7 +67,9 @@ final class MGBuffer {
 case class MisraGries(child: Expression, capacity: Int,
                       mutableAggBufferOffset: Int = 0,
                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MGBuffer] {
+    extends TypedImperativeAggregate[MGBuffer] with ExpectsInputTypes {
+
+  override def inputTypes = Seq(StringType)
 
   require(capacity > 0, s"capacity must be positive, got $capacity")
 
@@ -216,7 +218,12 @@ object MisraGries {
 case class MisraGriesWeighted(child: Expression, weight: Expression, capacity: Int,
                               mutableAggBufferOffset: Int = 0,
                               inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {
+    extends TypedImperativeAggregate[mutable.HashMap[String, Long]] with ExpectsInputTypes {
+
+  // update reads the weight as a java.lang.Number: every non-decimal
+  // numeric type
+  override def inputTypes = Seq(StringType,
+    GraftBridge.anyOf(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType))
 
   require(capacity > 0, s"capacity must be positive, got $capacity")
 

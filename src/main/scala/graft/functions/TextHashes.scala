@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
 /** Native expressions for the per-document hash signatures of the dedup
   * pipeline. The composed formulation (explode shingles → 32/64 hash
@@ -43,6 +43,10 @@ object TextHashes {
   // 2^30, so a·f + b < 2^60): plain BIGINT arithmetic replays it exactly.
   // It is the verifiability mode; xxhash64 stays the fast default.
 
+  /** The input type of the token/shingle signatures: the loops read
+    * UTF8Strings, so any other element type fails analysis. */
+  private val Strings = Seq(ArrayType(StringType))
+
   /** Prime modulus of the portable family (fits products in a signed 64). */
   val PolyP: Long = 1000000007L
 
@@ -73,7 +77,9 @@ object TextHashes {
     * (a_p·fp(s) + b_p) mod P with fp = polyFingerprint. Same shape and
     * scale posture as MinhashSig (one fused pass inside the scan), but
     * every step is SQL-replayable. */
-  case class MinhashSigPoly(child: Expression, numPerms: Int) extends UnaryExpression {
+  case class MinhashSigPoly(child: Expression, numPerms: Int)
+      extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes = Strings
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_sig_poly"
     @transient private lazy val as: Array[Long] = Array.tabulate(numPerms)(p => polyA(p))
@@ -131,8 +137,9 @@ object TextHashes {
     * O(shingles·k·chars) re-hashing AND all per-shingle allocations from
     * the scan projection. */
   case class MinhashShinglePoly(child: Expression, shingleK: Int, numPerms: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with ExpectsInputTypes {
     require(shingleK >= 1, "shingleK must be >= 1")
+    override def inputTypes = Strings
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_shingle_poly"
     @transient private lazy val as: Array[Long] = Array.tabulate(numPerms)(p => polyA(p))
@@ -304,7 +311,8 @@ object TextHashes {
   /** Portable 64-bit SimHash: token "hash" bit j is the parity of
     * (a_{4096+j}·fp(token) + b_{4096+j}) mod P; signature bit j is the
     * sign of the ±1 vote sum — same vote structure as SimHash64. */
-  case class SimHashPoly64(child: Expression) extends UnaryExpression {
+  case class SimHashPoly64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes = Strings
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash_poly64"
     @transient private lazy val sa: Array[Long] = Array.tabulate(64)(j => polyA(4096L + j))
@@ -357,7 +365,9 @@ object TextHashes {
 
   /** MinHash signature: for each permutation p, min over shingles of
     * XXH64(shingle bytes, seed=p). Output array<long>[numPerms]. */
-  case class MinhashSig(child: Expression, numPerms: Int) extends UnaryExpression {
+  case class MinhashSig(child: Expression, numPerms: Int)
+      extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes = Strings
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_sig"
     override def nullSafeEval(v: Any): Any = {
@@ -401,7 +411,8 @@ object TextHashes {
   }
 
   /** 64-bit SimHash: sign of the per-bit ±1 sums of token hashes. */
-  case class SimHash64(child: Expression) extends UnaryExpression {
+  case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes = Strings
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash64"
     override def nullSafeEval(v: Any): Any = {
@@ -456,7 +467,10 @@ object TextHashes {
     * deterministic ±1 hyperplane components from a splitmix64 of
     * (t, p, d). Replaces planes×tables aggregate-over-array loops. */
   case class HyperplaneSigs(child: Expression, planes: Int, tables: Int)
-      extends UnaryExpression {
+      extends UnaryExpression with ExpectsInputTypes {
+    // the loop reads doubles: an array<float> (the embeddings table's
+    // element type) must be cast first, as Similarity's callers do
+    override def inputTypes = Seq(ArrayType(DoubleType))
     override def dataType: DataType = ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
     override def prettyName: String = "hyperplane_sigs"
     @inline private def mix(z0: Long): Long = {

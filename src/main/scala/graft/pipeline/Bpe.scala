@@ -63,7 +63,7 @@ object Bpe {
 
   /** The composed-builtins fold — the parity reference for the native
     * expression (the cosineComposed discipline). */
-  private[pipeline] def mergePairComposed(syms: Column, a: String, b: String): Column =
+  private[graft] def mergePairComposed(syms: Column, a: String, b: String): Column =
     aggregate(syms, typedLit(Seq.empty[String]),
       (acc, s) =>
         when(size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
@@ -113,17 +113,13 @@ object Bpe {
         df.write.mode("overwrite").parquet(p)
         spark.read.parquet(p)
     }
-    // free a SUPERSEDED round's checkpoint blocks (the Dedup.components
-    // discipline): round r's state, once round r+1's state is
+    // free a SUPERSEDED round's checkpoint blocks (Scratch.freeCheckpoint,
+    // as in Dedup.components): round r's state, once round r+1's state is
     // materialized, is never scanned again — without this, every train
     // call leaks numMerges vocabulary-sized block sets for the JVM
     // lifetime of the memoized model
-    def freeStage(df: DataFrame): Unit = if (scratchDir.isEmpty)
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false): Unit
-        case _ =>
-      }
+    def freeStage(df: DataFrame): Unit =
+      if (scratchDir.isEmpty) graft.Scratch.freeCheckpoint(df)
     var st = stage(wordCounts(docs, textCol)
       .select(col("word"), col("cnt"), split(col("word"), "").as("syms")), 0)
     // the state materialized two actions ago — dead once the action

@@ -30,52 +30,20 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Frames the plan builders persist for intra-plan reuse (minhash
-    * signatures, LSH buckets, frequent fps), tracked so a long-lived
-    * session dispatching over MANY distinct corpora — the incremental
-    * pipeline use case — can release them instead of accumulating cache
-    * entries (disk spill included) for the JVM lifetime. */
-  private val retainedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Persist `plan` MEMORY_AND_DISK unless an identical plan is already
-    * cached (a re-entrant call builds an IDENTICAL logical plan, which
-    * CacheManager would match and warn about — reusing the live entry
-    * keeps that warning a real finding), and track the handle for
-    * [[releaseCaches]]. MEMORY_AND_DISK, not the MEMORY_ONLY default:
-    * these frames are corpus-sized and feed several downstream joins;
-    * under memory pressure MEMORY_ONLY silently evicts and recomputes
-    * the expensive pass per join, while spilling overflow to local disk
-    * is strictly cheaper. */
-  private def guardedPersist(plan: DataFrame): DataFrame =
-    if (plan.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      val p = plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      retainedCaches.add(p)
-      p
-    } else plan
-
-  /** Release a DEAD localCheckpoint's storage blocks. A checkpointed
-    * frame's plan is one LogicalRDD leaf whose RDD owns the materialized
-    * blocks; freeing is safe ONLY once nothing will scan the frame again
-    * (the lineage is truncated, so a freed checkpoint cannot recompute —
-    * any later scan throws). [[components]] uses this to drop each label
-    * round's superseded checkpoint and the edge frame at loop end:
-    * without it, back-to-back CC calls in one session accumulate
-    * edge-scale block sets for the JVM lifetime (two ×1000 star-cluster
-    * queries OOMed a 16g JVM; each alone fits in 8g). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false): Unit
-      case _ =>
-    }
+    * signatures, LSH buckets, frequent fps), through the shared
+    * [[graft.Scratch.Retained]] guard: persisted MEMORY_AND_DISK unless an
+    * identical plan is already cached, and tracked for [[releaseCaches]]
+    * — a long-lived session dispatching over MANY distinct corpora (the
+    * incremental pipeline use case) releases them instead of accumulating
+    * cache entries for the JVM lifetime. */
+  private val retained = new graft.Scratch.Retained
 
   /** Unpersist every frame the dedup plan builders retained (and drop
     * memoized regime verdicts — stale after the data they probed
     * changes). Call between corpora in a long-lived session; safe while
     * no query built from those frames is still running. */
   def releaseCaches(): Unit = {
-    var df = retainedCaches.poll()
-    while (df != null) { df.unpersist(blocking = false); df = retainedCaches.poll() }
+    retained.release()
     clearRegimeCache()
   }
 
@@ -197,7 +165,7 @@ object Dedup {
     // builds an IDENTICAL logical plan, which CacheManager would match
     // and warn about ("already cached") — reuse the live entry instead,
     // so that warning stays a real finding when it appears
-    val rawSig = guardedPersist(
+    val rawSig = retained.guardedPersist(
       minhashSignatures(docs, textCol, idCol, numPerms, shingleK, portable))
     val (sig, identityEdges) =
       if (!collapseIdentical) (rawSig, None)
@@ -464,7 +432,7 @@ object Dedup {
         // the superseded label checkpoint is dead: merged is materialized
         // (eager) and changed already counted — free its blocks now
         // instead of accumulating a node-scale block set per round
-        freeCheckpoint(labels)
+        graft.Scratch.freeCheckpoint(labels)
         labels = merged.select(col("id"), col("label"))
         if (debug) System.err.println(s"[cc] round=$i changed=$changed")
         // zero changed labels ⇒ every node's label ≤ all neighbor labels
@@ -481,18 +449,19 @@ object Dedup {
     if (!converged) {
       // free BOTH live checkpoints before the throw: a failed CC run
       // must not leak its edge-scale (and label-scale) block sets for
-      // the JVM lifetime — exactly the accumulation freeCheckpoint
-      // exists to prevent on the success path
-      freeCheckpoint(edges)
-      freeCheckpoint(labels)
+      // the JVM lifetime — exactly the accumulation the success path's
+      // frees prevent
+      graft.Scratch.freeCheckpoint(edges)
+      graft.Scratch.freeCheckpoint(labels)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters iterations; raise maxIters")
     }
     // the returned frame reads only the final label checkpoint (+ the
     // driver-finish broadcast): the edge-scale checkpoint is dead weight
     // from here — free it so consecutive CC calls in one session don't
-    // stack corpus-sized block sets
-    freeCheckpoint(edges)
+    // stack corpus-sized block sets (two ×1000 star-cluster queries
+    // OOMed a 16g JVM that way; each alone fits in 8g)
+    graft.Scratch.freeCheckpoint(edges)
     labels.select(col("id").as(idCol), col("label").as("cluster_id"),
       (col("id") === col("label")).as("is_representative"))
   }
@@ -836,7 +805,7 @@ object Dedup {
       // prefilter can't help (the "frequent tail" is most of the corpus,
       // so the recount would shuffle most strings regardless) and the
       // direct path is the honest plan.
-      val freqFps = guardedPersist(freqFpsPlan)
+      val freqFps = retained.guardedPersist(freqFpsPlan)
       if (freqFps.count() > MaxBroadcastFps) {
         // the direct plan never reads freqFps — drop the cache now
         // instead of leaking it for the session lifetime
@@ -905,7 +874,7 @@ object Dedup {
     // the bucket frame feeds FOUR scans (both sides of the sampled pair
     // join, both sides of the k recount) — persist it (guarded) or the
     // shingle+minhash pass runs four times
-    val buckets = guardedPersist(lshBuckets(sig, idCol, numPerms, bands, portable = true))
+    val buckets = retained.guardedPersist(lshBuckets(sig, idCol, numPerms, bands, portable = true))
     val sampled = buckets.where(pmod(col("bucket"), lit(sampleMod.toLong)) === 0)
     val pairs = sampled.toDF("a_id", "band", "bucket")
       .join(sampled.toDF("b_id", "band", "bucket"), Seq("band", "bucket"))
@@ -971,7 +940,7 @@ object Dedup {
     // persist: the probe aggregation + whichever leg wins all read this
     // frame (the sampled leg's own guarded persist will find this entry
     // via CacheManager plan-equality, so nothing is cached twice)
-    val buckets = guardedPersist(lshBuckets(sig, idCol, numPerms, bands, portable = true))
+    val buckets = retained.guardedPersist(lshBuckets(sig, idCol, numPerms, bands, portable = true))
     val probe = buckets.groupBy("band", "bucket").agg(count(lit(1)).as("c"))
       .agg(sum((col("c") * (col("c") - lit(1))).cast("long") / lit(2)).cast("long").as("m"))
       .head()
@@ -1611,7 +1580,7 @@ object Dedup {
     // The frame is bounded by totalSpans/minDocs — the frequentSpans
     // broadcast bound — so caching it is batch-scale, and the literal
     // leg drops the handle as soon as the set moves into the driver.
-    val freq = guardedPersist(frequentSpans(docs, textCol, idCol, k, minDocs,
+    val freq = retained.guardedPersist(frequentSpans(docs, textCol, idCol, k, minDocs,
       fpPrefilter = singleton))
     val freqRows = freq.select("gram").limit(maxLiteralSpans + 1).collect()
     if (freqRows.length <= maxLiteralSpans)

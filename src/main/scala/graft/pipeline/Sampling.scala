@@ -23,25 +23,15 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  private val retainedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Same contract as Dedup's: persist MEMORY_AND_DISK unless an
-    * identical plan is already cached, track for [[releaseCaches]]. */
-  private def guardedPersist(plan: DataFrame): DataFrame =
-    if (plan.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      val p = plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      retainedCaches.add(p)
-      p
-    } else plan
+  /** Frames the selection planners persist, through the shared
+    * [[graft.Scratch.Retained]] guard (Dedup keeps its own instance, so
+    * each `releaseCaches` frees only its owner's frames). */
+  private val retained = new graft.Scratch.Retained
 
   /** Unpersist every frame the selection planners retained. Call between
     * corpora in a long-lived session; safe while no query built from
     * those frames is still running. */
-  def releaseCaches(): Unit = {
-    var df = retainedCaches.poll()
-    while (df != null) { df.unpersist(blocking = false); df = retainedCaches.poll() }
-  }
+  def releaseCaches(): Unit = retained.release()
 
   private val D = 10000L
   private[graft] val SeedIdx = 16384L
@@ -216,7 +206,7 @@ object Sampling {
       // without this the refined leg reads the text column three times,
       // which at 100 TB is the dominant cost. Released via
       // [[releaseCaches]] in long-lived sessions (the Dedup precedent).
-      val scored = guardedPersist(scoredPlan)
+      val scored = retained.guardedPersist(scoredPlan)
       val withCell = scored.withColumn("__qb",
         floor(col("quality") * buckets).cast("int"))
       // bounded collect: sources × (buckets + 1) rows

@@ -1,9 +1,10 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.etl.Align
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Registry.Q
 
 /** Driver-contract registration for the alignment ETL (the reference's one
   * real query-optimizer path, `python/polars_quant/backtest/sequential.py:
@@ -16,15 +17,12 @@ import org.apache.spark.sql.functions._
   * genuinely fills them (a dense frame would make the whole pipeline a
   * no-op and verify nothing).
   */
-object EtlQueries {
-  type Q = (SparkSession, String) => DataFrame
+object EtlQueries extends Registry {
 
   private def r6(c: Column): Column = round(c, 6) + lit(0.0)
 
   /** Keep ~40% of rows, phase-shifted per symbol via its length. */
   private val keepSql = "(ord * 31 + length(symbol) * 7) % 5 < 2"
-
-  final case class Entry(name: String, q: Q, oracle: Option[String])
 
   /** One bucketed-table pair per sf dir per JVM (the IVF build-once
     * pattern): events projected to (event_id, user_id, value) and its
@@ -32,35 +30,22 @@ object EtlQueries {
     * user_id. The write pays the one hash exchange; every later join or
     * aggregation on user_id reads co-located buckets shuffle-free —
     * the storage-side answer to "this join shuffles 100 TB every night".
-    */
-  private val bucketedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-  private def buildBucketed(spark: SparkSession, dir: String, base: String,
-                            evT: String, usrT: String): Unit = {
-    val ev = Tables.table(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), col("value"))
-    val usr = ev.groupBy("user_id").agg(
-      count(lit(1)).as("n_events"),
-      // DECIMAL sum: exact ⇒ order-independent, so Spark's partial-agg
-      // order and DuckDB's scan order can't disagree at 6 decimals
-      r6(sum(col("value").cast("decimal(38,12)")).cast("double")).as("total_value"))
-    graft.etl.Bucketing.writeBucketed(ev, evT, s"$base/ev", "user_id", 8, Some("user_id"))
-    graft.etl.Bucketing.writeBucketed(usr, usrT, s"$base/usr", "user_id", 8, Some("user_id"))
-  }
+    * Table names live in the session catalog: a fresh session in the
+    * same JVM re-stages them ([[Scratch.staged]]). */
   private def bucketedTablesFor(spark: SparkSession, dir: String): (String, String) = {
-    val (evT, usrT, base) = bucketedDirs.computeIfAbsent(dir, d => {
-      val tag = (d.hashCode & 0x7fffffff).toHexString
-      val b = java.nio.file.Files.createTempDirectory("graft_bkt_").toString
-      (s"graft_bkt_ev_$tag", s"graft_bkt_usr_$tag", b)
-    })
-    // Table NAMES live in the in-memory catalog of the session that made
-    // them; the data paths outlive it. A fresh SparkSession in the same
-    // JVM (driver smoke-run, then a new session) hits the JVM-global
-    // cache but has an empty catalog — re-run the bucketed write into the
-    // cached location so the names resolve again (build-once per session,
-    // same pattern as the path-cached IVF index).
-    if (!spark.catalog.tableExists(evT) || !spark.catalog.tableExists(usrT))
-      buildBucketed(spark, dir, base, evT, usrT)
+    val tag = (dir.hashCode & 0x7fffffff).toHexString
+    val (evT, usrT) = (s"graft_bkt_ev_$tag", s"graft_bkt_usr_$tag")
+    Scratch.staged(spark, Seq(evT, usrT), "graft_bkt_") { base =>
+      val ev = Tables.table(spark, dir, "events")
+        .select(col("event_id"), col("user_id"), col("value"))
+      val usr = ev.groupBy("user_id").agg(
+        count(lit(1)).as("n_events"),
+        // DECIMAL sum: exact ⇒ order-independent, so Spark's partial-agg
+        // order and DuckDB's scan order can't disagree at 6 decimals
+        r6(sum(col("value").cast("decimal(38,12)")).cast("double")).as("total_value"))
+      graft.etl.Bucketing.writeBucketed(ev, evT, s"$base/ev", "user_id", 8, Some("user_id"))
+      graft.etl.Bucketing.writeBucketed(usr, usrT, s"$base/usr", "user_id", 8, Some("user_id"))
+    }
     (evT, usrT)
   }
 
@@ -86,87 +71,62 @@ object EtlQueries {
   /** One lang-partitioned copy of the documents table per sf dir per JVM:
     * hive-style `lang=xx/` directories, so a language predicate becomes
     * directory pruning — non-matching languages cost zero I/O. */
-  private val partDocsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def partitionedDocsFor(spark: SparkSession, dir: String): String =
-    partDocsDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_part_").toString
-      graft.etl.Bucketing.writePartitioned(Tables.documents(spark, d), p, Seq("lang"))
-      p
-    })
+  private val partitionedDocsFor = Scratch.fixture("graft_part_") { (spark, d, p) =>
+    graft.etl.Bucketing.writePartitioned(Tables.documents(spark, d), p, Seq("lang"))
+  }
 
   /** One Z-ORDERED events copy per sf dir per JVM (etl.Layout.zOrderWrite
     * on (user_id, ts)): the multi-dimensional clustering a lakehouse
     * OPTIMIZE produces — row-group stats become selective on BOTH
     * interleaved columns at once. ts micro-truncated like every gated
     * events consumer (the DuckDB precision contract). */
-  private val zorderDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderEventsFor(spark: SparkSession, dir: String): String =
-    zorderDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-      graft.etl.Layout.zOrderWrite(
-        Tables.eventsNs(spark, d).withColumn("ts", expr("(ts div 1000) * 1000")),
-        Seq("user_id", "ts"), p)
-      p
-    })
+  private val zorderEventsFor = Scratch.fixture("graft_zorder_") { (spark, d, p) =>
+    graft.etl.Layout.zOrderWrite(
+      Tables.eventsNs(spark, d).withColumn("ts", expr("(ts div 1000) * 1000")),
+      Seq("user_id", "ts"), p)
+  }
+
+  /** The shared FULL-DOCS z-layout base the documents-layout fixtures
+    * fork (r18): zOrderWrite on (lang, doc_id) with precomputed stats +
+    * `_zstats` sidecar + `_manifest`. Built once per sf dir; each fork
+    * applies only its own lifecycle op (delete / tombstone forget /
+    * upsert / none) to its copy. */
+  private val zorderFullBaseFor = Scratch.fixture("graft_zorder_base_") { (spark, d, p) =>
+    val docs = Tables.documents(spark, d)
+    val zc = Seq("lang", "doc_id")
+    val st = graft.etl.Layout.zStats(docs, zc)
+    graft.etl.Layout.zOrderWrite(docs, zc, p, stats = Some(st))
+    graft.etl.Layout.saveZStats(spark, p, zc, st)
+    graft.etl.Layout.manifestRefresh(spark, p, zc)
+  }
+
+  /** The shared SNAPSHOT+APPENDS base (quarter snapshot + sidecars +
+    * three zOrderAppend increments + manifest reconcile) behind the
+    * append / maintain / forget-fold fixtures — same discipline. */
+  private val zorderSnapAppBaseFor = Scratch.fixture("graft_zorder_sab_") { (spark, d, p) =>
+    val docs = Tables.documents(spark, d)
+    val zc = Seq("lang", "doc_id")
+    val snap = docs.where(col("doc_id") % 4 === 0)
+    val st = graft.etl.Layout.zStats(snap, zc)
+    graft.etl.Layout.zOrderWrite(snap, zc, p, stats = Some(st))
+    graft.etl.Layout.saveZStats(spark, p, zc, st)
+    graft.etl.Layout.manifestRefresh(spark, p, zc)
+    val (zcLoaded, stLoaded) = graft.etl.Layout.loadZStats(spark, p)
+    for (r <- 1 to 3)
+      graft.etl.Layout.zOrderAppend(docs.where(col("doc_id") % 4 === r),
+        zcLoaded, p, stLoaded)
+    graft.etl.Layout.manifestUpdate(spark, p, zcLoaded)
+  }
 
   /** One documents copy z-ordered on a STRING + numeric key pair per sf
     * dir per JVM (Layout.zOrderWrite on (lang, doc_id)): the string
     * dimension enters through zStats' lexicographic dictionary — the
     * (source/lang, id/time) layout real corpora cluster on. Stats are
     * PRECOMPUTED and passed in, so the write itself is single-scan (the
-    * derived-pipeline posture the r15 verdict asked for). */
-  private val zorderDocsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared full-docs base (r18): identical data files; the
-    // base's extra underscore sidecars are invisible to the bare read
-    // this fixture serves
-    zorderDocsDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_docs_").toString
-      Fixtures.copyDir(zorderFullBaseFor(spark, d), p)
-      p
-    })
-
-  /** The shared FULL-DOCS z-layout base the four documents-layout
-    * fixtures derive from (r18): zOrderWrite on (lang, doc_id) with
-    * precomputed stats + `_zstats` sidecar + `_manifest`. Built once per
-    * sf dir; each fixture file-copies it and applies only its own
-    * lifecycle op (delete / tombstone forget / upsert / none). Every
-    * gate over these fixtures states a content property (rollup hashes,
-    * pruning losslessness) that a file copy preserves bit-for-bit. */
-  private val zorderFullBaseDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderFullBaseFor(spark: SparkSession, dir: String): String =
-    zorderFullBaseDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_base_").toString
-      val docs = Tables.documents(spark, d)
-      val zc = Seq("lang", "doc_id")
-      val st = graft.etl.Layout.zStats(docs, zc)
-      graft.etl.Layout.zOrderWrite(docs, zc, p, stats = Some(st))
-      graft.etl.Layout.saveZStats(spark, p, zc, st)
-      graft.etl.Layout.manifestRefresh(spark, p, zc)
-      p
-    })
-
-  /** The shared SNAPSHOT+APPENDS base (quarter snapshot + sidecars +
-    * three zOrderAppend increments + manifest reconcile) behind the
-    * append / maintain / forget-fold fixtures — same discipline. */
-  private val zorderSnapAppBaseDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderSnapAppBaseFor(spark: SparkSession, dir: String): String =
-    zorderSnapAppBaseDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_sab_").toString
-      val docs = Tables.documents(spark, d)
-      val zc = Seq("lang", "doc_id")
-      val snap = docs.where(col("doc_id") % 4 === 0)
-      val st = graft.etl.Layout.zStats(snap, zc)
-      graft.etl.Layout.zOrderWrite(snap, zc, p, stats = Some(st))
-      graft.etl.Layout.saveZStats(spark, p, zc, st)
-      graft.etl.Layout.manifestRefresh(spark, p, zc)
-      val (zcLoaded, stLoaded) = graft.etl.Layout.loadZStats(spark, p)
-      for (r <- 1 to 3)
-        graft.etl.Layout.zOrderAppend(docs.where(col("doc_id") % 4 === r),
-          zcLoaded, p, stLoaded)
-      graft.etl.Layout.manifestUpdate(spark, p, zcLoaded)
-      p
-    })
+    * derived-pipeline posture the r15 verdict asked for). A plain fork of
+    * the full-docs base: the base's underscore sidecars are invisible to
+    * the bare read this fixture serves. */
+  private val zorderDocsFor = Scratch.fork("graft_zorder_docs_", zorderFullBaseFor)((_, _, _) => ())
 
   /** One INCREMENTALLY-GROWN z-ordered documents copy per sf dir per
     * JVM: a %4==0 snapshot written with zOrderWrite, the remaining three
@@ -174,16 +134,10 @@ object EtlQueries {
     * SNAPSHOT's persisted ZStats — the daily-OPTIMIZE shape (resident
     * files never rewrite; each increment curve-orders among itself).
     * The gate's oracle is the zorder_lang_prune losslessness statement
-    * over the UNION: append must be content-invisible. */
-  private val zorderAppendDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderAppendDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared snapshot+appends base (r18): identical data
-    // files, hidden sidecars invisible to this fixture's bare read
-    zorderAppendDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_app_").toString
-      Fixtures.copyDir(zorderSnapAppBaseFor(spark, d), p)
-      p
-    })
+    * over the UNION: append must be content-invisible. A plain fork of
+    * the snapshot+appends base. */
+  private val zorderAppendDocsFor =
+    Scratch.fork("graft_zorder_app_", zorderSnapAppBaseFor)((_, _, _) => ())
 
   /** One FULL-LIFECYCLE z-ordered documents copy per sf dir per JVM:
     * quarter snapshot written with a persisted `_zstats` sidecar and a
@@ -192,19 +146,19 @@ object EtlQueries {
     * then zOrderMaintain compacting the small files under the staged
     * hide-promote-drop swap, and a final manifest reconcile. The two
     * gates over it state (a) maintain is content-invisible and (b)
-    * manifest file pruning is lossless for range predicates. */
-  private val zorderMaintDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderMaintDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared snapshot+appends base (r18) and runs ONLY its own
-    // subject — the compaction + reconcile
-    zorderMaintDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_mnt_").toString
-      Fixtures.copyDir(zorderSnapAppBaseFor(spark, d), p)
+    * manifest file pruning is lossless for range predicates. Forks the
+    * snapshot+appends base and runs only the compaction + reconcile. */
+  private val zorderMaintDocsFor =
+    Scratch.fork("graft_zorder_mnt_", zorderSnapAppBaseFor) { (spark, _, p) =>
       val (zcLoaded, stLoaded) = graft.etl.Layout.loadZStats(spark, p)
       graft.etl.Layout.zOrderMaintain(spark, p, zcLoaded, stLoaded)
       graft.etl.Layout.manifestUpdate(spark, p, zcLoaded)
-      p
-    })
+    }
+
+  /** The deterministic takedown batch of the forget fixtures. */
+  private def takedownBatch(spark: SparkSession, dir: String): IndexedSeq[Long] =
+    Tables.documents(spark, dir).where(col("doc_id") % 97 === 13)
+      .select("doc_id").collect().map(_.getLong(0)).toIndexedSeq
 
   /** One FORGOTTEN-FROM z-ordered documents copy per sf dir per JVM: the
     * full table written with stats + manifest sidecars, then a
@@ -214,22 +168,14 @@ object EtlQueries {
     * swap), and the manifest reconciles after. The gate's oracle is the
     * shrunk table: deletion must be indistinguishable from never having
     * written the batch (the cross_corpus_dedup_forget statement, on the
-    * base layout). */
-  private val zorderForgetDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderForgetDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared full-docs base (r18) and runs ONLY its own
-    // subject — the physical takedown + reconcile
-    zorderForgetDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_fgt_").toString
-      Fixtures.copyDir(zorderFullBaseFor(spark, d), p)
-      val docs = Tables.documents(spark, d)
+    * base layout). Forks the full-docs base and runs only the physical
+    * takedown + reconcile. */
+  private val zorderForgetDocsFor =
+    Scratch.fork("graft_zorder_fgt_", zorderFullBaseFor) { (spark, d, p) =>
       val (zc, st) = graft.etl.Layout.loadZStats(spark, p)
-      val batch = docs.where(col("doc_id") % 97 === 13)
-        .select("doc_id").collect().map(_.getLong(0)).toIndexedSeq
-      graft.etl.Layout.zOrderDelete(spark, p, zc, st, "doc_id", batch)
+      graft.etl.Layout.zOrderDelete(spark, p, zc, st, "doc_id", takedownBatch(spark, d))
       graft.etl.Layout.manifestUpdate(spark, p, zc)
-      p
-    })
+    }
 
   /** One LOGICALLY-forgotten z-ordered documents copy per sf dir per
     * JVM — the Θ(batch) twin of the zorder_forget fixture: the same
@@ -238,20 +184,12 @@ object EtlQueries {
     * zero data files move — the dedupIndexDelete design on base data)
     * and every read through [[graft.etl.Layout.readLayout]] masks it.
     * The gate's oracle is the SAME shrunk table: logical deletion must
-    * be indistinguishable from never having written the batch. */
-  private val zorderForgetTombDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderForgetTombDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared full-docs base (r18) and runs ONLY its own
-    // subject — the Θ(batch) tombstone write
-    zorderForgetTombDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_ftb_").toString
-      Fixtures.copyDir(zorderFullBaseFor(spark, d), p)
-      val docs = Tables.documents(spark, d)
-      val batch = docs.where(col("doc_id") % 97 === 13)
-        .select("doc_id").collect().map(_.getLong(0)).toIndexedSeq
-      graft.etl.Layout.zOrderForget(spark, p, "doc_id", batch)
-      p
-    })
+    * be indistinguishable from never having written the batch. Forks the
+    * full-docs base and runs only the tombstone write. */
+  private val zorderForgetTombDocsFor =
+    Scratch.fork("graft_zorder_ftb_", zorderFullBaseFor) { (spark, d, p) =>
+      graft.etl.Layout.zOrderForget(spark, p, "doc_id", takedownBatch(spark, d))
+    }
 
   /** The PHYSICAL half of tombstone forgetting, re-checked AFTER the
     * fold (the cross_corpus_dedup_forget_compact discipline): a
@@ -260,22 +198,14 @@ object EtlQueries {
     * [[graft.etl.Layout.zOrderMaintain]] folds the tombstones into the
     * compaction rewrite it already pays and clears the sidecar. The
     * gate reads the layout BARE — no mask — so it proves the rows are
-    * physically gone, not merely hidden. */
-  private val zorderForgetFoldDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderForgetFoldDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared snapshot+appends base (r18) and runs ONLY its own
-    // subject — the tombstone write + the folding maintenance pass
-    zorderForgetFoldDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_ffd_").toString
-      Fixtures.copyDir(zorderSnapAppBaseFor(spark, d), p)
-      val docs = Tables.documents(spark, d)
+    * physically gone, not merely hidden. Forks the snapshot+appends base
+    * and runs only the tombstone write + the folding maintenance pass. */
+  private val zorderForgetFoldDocsFor =
+    Scratch.fork("graft_zorder_ffd_", zorderSnapAppBaseFor) { (spark, d, p) =>
       val (zc, st) = graft.etl.Layout.loadZStats(spark, p)
-      val batch = docs.where(col("doc_id") % 97 === 13)
-        .select("doc_id").collect().map(_.getLong(0)).toIndexedSeq
-      graft.etl.Layout.zOrderForget(spark, p, "doc_id", batch)
+      graft.etl.Layout.zOrderForget(spark, p, "doc_id", takedownBatch(spark, d))
       graft.etl.Layout.zOrderMaintain(spark, p, zc, st)
-      p
-    })
+    }
 
   /** One MERGED (upserted) z-ordered documents copy per sf dir per JVM
     * ([[graft.etl.Layout.zOrderUpsert]]): a batch of re-scored rows
@@ -284,14 +214,10 @@ object EtlQueries {
     * ONE staged swap — the manifest names the affected files, their
     * survivors + the whole batch re-curve-order together, untouched
     * files never open. The oracle is the merged table (anti-join the
-    * updated ids, union the batch) computed by DuckDB from scratch. */
-  private val zorderUpsertDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zorderUpsertDocsFor(spark: SparkSession, dir: String): String =
-    // forks the shared full-docs base (r18) and runs ONLY its own
-    // subject — the MERGE
-    zorderUpsertDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_zorder_ups_").toString
-      Fixtures.copyDir(zorderFullBaseFor(spark, d), p)
+    * updated ids, union the batch) computed by DuckDB from scratch.
+    * Forks the full-docs base and runs only the MERGE. */
+  private val zorderUpsertDocsFor =
+    Scratch.fork("graft_zorder_ups_", zorderFullBaseFor) { (spark, d, p) =>
       val docs = Tables.documents(spark, d)
       val (zc, st) = graft.etl.Layout.loadZStats(spark, p)
       val upd = docs.where(col("doc_id") % 89 === 7)
@@ -300,8 +226,7 @@ object EtlQueries {
         .withColumn("doc_id", col("doc_id") + 10000000L)
       graft.etl.Layout.zOrderUpsert(spark, p, zc, st, "doc_id",
         upd.unionByName(ins))
-      p
-    })
+    }
 
   /** The ONE losslessness statement every z-layout gate makes: a
     * language-sliced id-range rollup over the rewritten / grown /
@@ -957,7 +882,4 @@ object EtlQueries {
         |  max(CAST(props->>'k' AS INT)) AS max_k
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin))
   )
-
-  val queries: Map[String, Q] = entries.map(e => e.name -> e.q).toMap
-  val oracle: Map[String, String] = entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

@@ -5,13 +5,13 @@ import graft.ta.Patterns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Registry.Q
 
 /** Driver-contract registration for all 61 candlestick patterns
   * (SURVEY.md §2.5). Implementation and oracle SQL both derive from the
   * same PatternDsl definition, so every pattern is oracle-checked.
   */
-object PatternQueries {
-  type Q = (SparkSession, String) => DataFrame
+object PatternQueries extends Registry {
 
   private def patternQ(p: graft.ta.PatternDsl.Pattern): Q = (spark, dir) => {
     implicit val w = Window.partitionBy("symbol").orderBy("ord")
@@ -42,6 +42,6 @@ object PatternQueries {
 
   private val allPatterns = Patterns.all ++ parameterized
 
-  val queries: Map[String, Q] = allPatterns.map(p => p.name -> patternQ(p)).toMap
-  val oracle: Map[String, String] = allPatterns.map(p => p.name -> patternSql(p)).toMap
+  val entries: Seq[Entry] =
+    allPatterns.map(p => Entry(p.name, patternQ(p), Some(patternSql(p))))
 }

@@ -1,20 +1,18 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.pipeline._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Registry.Q
 
 /** Driver-contract registrations for the LLM-training-data pipeline
   * operators (dedup, similarity search, text analysis, multimodal
   * plumbing) over the `documents` and `embeddings` tables.
   */
-object PipelineQueries {
-  type Q = (SparkSession, String) => DataFrame
+object PipelineQueries extends Registry {
 
   private def r6(c: Column): Column = round(c, 6) + lit(0.0)
-
-  final case class Entry(name: String, q: Q, oracle: Option[String])
 
   /** Shared oracle CTEs for the text-quality stats: CTE `q` exposes
     * (doc_id, text, norm, mtl, s_de..s_zh, best, qs) — the per-language
@@ -273,9 +271,8 @@ object PipelineQueries {
   /** One BPE model per sf dir per JVM (same memo pattern as the IVF
     * index): bpe_merges and bpe_encode share a single training run. */
   private val BpeNumMerges = 20
-  private val bpeModels = new java.util.concurrent.ConcurrentHashMap[String, Bpe.Model]()
-  private def bpeModelFor(spark: SparkSession, dir: String): Bpe.Model =
-    bpeModels.computeIfAbsent(dir, d => Bpe.train(Tables.documents(spark, d), BpeNumMerges))
+  private val bpeModelFor =
+    new Scratch.PerDir((spark, d) => Bpe.train(Tables.documents(spark, d), BpeNumMerges))
 
   /** DuckDB replay of the BPE training loop (Bpe.train): a recursive CTE
     * carries the (word, syms, cnt) state across rounds; the recursive
@@ -335,37 +332,26 @@ object PipelineQueries {
     * fixture memo, always computed from the parquet inputs in this run.
     * NOT used by the √n-cell (scaled) index or the even-half base —
     * different knobs / different corpus, different model. */
-  private val coarseCents =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-  private def coarseCentsFor(spark: SparkSession, dir: String): Array[Array[Double]] =
-    coarseCents.computeIfAbsent(dir, d =>
-      Similarity.ivfBuild(Tables.embeddings(spark, d),
-        sampleMod = Similarity.DefaultLloydSampleMod, portableSeed = true))
+  private val coarseCentsFor = new Scratch.PerDir((spark, d) =>
+    Similarity.ivfBuild(Tables.embeddings(spark, d),
+      sampleMod = Similarity.DefaultLloydSampleMod, portableSeed = true))
 
   /** One persisted IVF index per sf dir per JVM: built on first use (a
     * fresh temp dir, so a code change can never probe a stale index),
     * probed by every later call. */
-  private val ivfIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfIndexFor(spark: SparkSession, dir: String): String =
-    ivfIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
-      Similarity.ivfWrite(Tables.embeddings(spark, d), p, portableSeed = true,
-        sampleMod = Similarity.DefaultLloydSampleMod,
-        coarse = Some(coarseCentsFor(spark, d)))
-      p
-    })
+  private val ivfIndexFor = Scratch.fixture("graft_ivf_") { (spark, d, p) =>
+    Similarity.ivfWrite(Tables.embeddings(spark, d), p, portableSeed = true,
+      sampleMod = Similarity.DefaultLloydSampleMod,
+      coarse = Some(coarseCentsFor(spark, d)))
+  }
 
   /** One JSONL export of the documents table per sf dir per JVM (same
     * build-once pattern as the IVF index): the registered query then
     * reads it back through the explicit-schema JSONL source, so the
     * round-trip — writer escaping included — is what gets verified. */
-  private val jsonlDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def jsonlFor(spark: SparkSession, dir: String): String =
-    jsonlDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_jsonl_").toString
-      Jsonl.write(Tables.documents(spark, d), p)
-      p
-    })
+  private val jsonlFor = Scratch.fixture("graft_jsonl_") { (spark, d, p) =>
+    Jsonl.write(Tables.documents(spark, d), p)
+  }
 
   private val ivfPersistedProbe: Q = (spark, dir) => {
     val path = ivfIndexFor(spark, dir)
@@ -381,13 +367,9 @@ object PipelineQueries {
     * and the one-time encode-and-write, its probe twin measures the
     * amortized code-scan + ADC + re-rank cost — the build-once/
     * probe-many split every 100 TB index workflow has. */
-  private val pqIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def pqIndexFor(spark: SparkSession, dir: String): String =
-    pqIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_pq_").toString
-      Similarity.pqWrite(Tables.embeddings(spark, d), p)
-      p
-    })
+  private val pqIndexFor = Scratch.fixture("graft_pq_") { (spark, d, p) =>
+    Similarity.pqWrite(Tables.embeddings(spark, d), p)
+  }
 
   private val pqProbe: Q = (spark, dir) => {
     val emb = Tables.embeddings(spark, dir)
@@ -401,14 +383,10 @@ object PipelineQueries {
     * pattern): coarse lists partitioned by cid, each holding CODES —
     * the probe prunes to nprobe lists AND reads them compressed, the
     * two scale levers composed. */
-  private val ivfPqIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
-      Similarity.ivfPqWrite(Tables.embeddings(spark, d), p,
-        coarse = Some(coarseCentsFor(spark, d)))
-      p
-    })
+  private val ivfPqIndexFor = Scratch.fixture("graft_ivfpq_") { (spark, d, p) =>
+    Similarity.ivfPqWrite(Tables.embeddings(spark, d), p,
+      coarse = Some(coarseCentsFor(spark, d)))
+  }
 
   private val ivfPqProbe: Q = (spark, dir) => {
     val emb = Tables.embeddings(spark, dir)
@@ -424,21 +402,26 @@ object PipelineQueries {
     * catalog, so re-stage when a fresh session lost them rather than
     * caching only the name). Reference = the doc_id % 3 == 0 split the
     * cross_corpus_dedup family pins. */
-  private def ccIndexFor(spark: SparkSession, dir: String): String = {
-    val prefix = "graft_ccidx_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    this.synchronized {
-      if (!Seq("buckets", "shingles", "meta")
-            .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))) {
-        val p = java.nio.file.Files.createTempDirectory("graft_ccidx_").toString
-        // the index is built INCREMENTALLY on purpose — write one half,
-        // append the other (Dedup.dedupIndexAppend) — so the
-        // cross_corpus_dedup_indexed gate hash-verifies the append path
-        // against the same rebuild oracle (append ≡ rebuild: signatures
-        // are per-row)
-        val ref = Tables.documents(spark, dir).where(col("doc_id") % 3 === 0)
-        Dedup.dedupIndexWrite(ref.where(col("doc_id") % 2 === 0), prefix, p)
-        Dedup.dedupIndexAppend(ref.where(col("doc_id") % 2 === 1), prefix)
-      }
+  private def ccIndexFor(spark: SparkSession, dir: String): String =
+    dedupIndexFixture(spark, dir, "graft_ccidx_") { (prefix, p) =>
+      // the index is built INCREMENTALLY on purpose — write one half,
+      // append the other (Dedup.dedupIndexAppend) — so the
+      // cross_corpus_dedup_indexed gate hash-verifies the append path
+      // against the same rebuild oracle (append ≡ rebuild: signatures
+      // are per-row)
+      val ref = Tables.documents(spark, dir).where(col("doc_id") % 3 === 0)
+      Dedup.dedupIndexWrite(ref.where(col("doc_id") % 2 === 0), prefix, p)
+      Dedup.dedupIndexAppend(ref.where(col("doc_id") % 2 === 1), prefix)
+    }
+
+  /** A dedup index fixture: its three tables, named `<kind><sf dir>_*`,
+    * staged by `stage(prefix, path)` into a fresh scratch dir whenever
+    * the session's catalog lacks them ([[Scratch.staged]]). */
+  private def dedupIndexFixture(spark: SparkSession, dir: String, kind: String)(
+      stage: (String, String) => Unit): String = {
+    val prefix = kind + dir.replaceAll("[^a-zA-Z0-9]", "_")
+    Scratch.staged(spark, Seq("buckets", "shingles", "meta").map(t => s"${prefix}_$t"), kind) {
+      p => stage(prefix, p)
     }
     prefix
   }
@@ -451,26 +434,19 @@ object PipelineQueries {
     * The gate's oracle replays the direct pipeline over the SHRUNK
     * reference — forgetting must be indistinguishable from never having
     * indexed the removed docs. */
-  private def ccForgetIndexFor(spark: SparkSession, dir: String): String = {
-    val prefix = "graft_ccfgt_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    this.synchronized {
-      if (!Seq("buckets", "shingles", "meta")
-            .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))) {
-        val p = java.nio.file.Files.createTempDirectory("graft_ccfgt_").toString
-        // r19 note: cloning ccIndexFor here (the forget_compact
-        // discipline one level up) was TRIED and MEASURED WORSE — the
-        // incremental write+append base costs more to build than one
-        // full write, and its extra per-bucket files inflate the
-        // downstream delete discovery and the compact fixture's rewrite
-        // (family in-sweep 13.9 → 39 s). The fresh full write stays.
-        val ref = Tables.documents(spark, dir).where(col("doc_id") % 3 === 0)
-        Dedup.dedupIndexWrite(ref, prefix, p)
-        Dedup.dedupIndexDelete(
-          ref.where(col("doc_id") % 2 === 0).select("doc_id"), prefix)
-      }
+  private def ccForgetIndexFor(spark: SparkSession, dir: String): String =
+    dedupIndexFixture(spark, dir, "graft_ccfgt_") { (prefix, p) =>
+      // r19 note: cloning ccIndexFor here (the forget_compact
+      // discipline one level up) was TRIED and MEASURED WORSE — the
+      // incremental write+append base costs more to build than one
+      // full write, and its extra per-bucket files inflate the
+      // downstream delete discovery and the compact fixture's rewrite
+      // (family in-sweep 13.9 → 39 s). The fresh full write stays.
+      val ref = Tables.documents(spark, dir).where(col("doc_id") % 3 === 0)
+      Dedup.dedupIndexWrite(ref, prefix, p)
+      Dedup.dedupIndexDelete(
+        ref.where(col("doc_id") % 2 === 0).select("doc_id"), prefix)
     }
-    prefix
-  }
 
   /** The PHYSICAL half of dedup-index forgetting: same logical deletes
     * as [[ccForgetIndexFor]], then Dedup.dedupIndexCompact folds the
@@ -486,18 +462,11 @@ object PipelineQueries {
     * exact state the old code recomputed, and the gate's own subject —
     * the tombstone-folding compaction — still runs in full on the
     * private copy. */
-  private def ccForgetCompactIndexFor(spark: SparkSession, dir: String): String = {
-    val prefix = "graft_ccfgc_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    this.synchronized {
-      if (!Seq("buckets", "shingles", "meta")
-            .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))) {
-        val p = java.nio.file.Files.createTempDirectory("graft_ccfgc_").toString
-        Dedup.dedupIndexClone(spark, ccForgetIndexFor(spark, dir), prefix, p)
-        Dedup.dedupIndexCompact(spark, prefix)
-      }
+  private def ccForgetCompactIndexFor(spark: SparkSession, dir: String): String =
+    dedupIndexFixture(spark, dir, "graft_ccfgc_") { (prefix, p) =>
+      Dedup.dedupIndexClone(spark, ccForgetIndexFor(spark, dir), prefix, p)
+      Dedup.dedupIndexCompact(spark, prefix)
     }
-    prefix
-  }
 
   /** The shared even-half BASE index the three lifecycle fixtures below
     * derive from (r18): ivfPqWrite is bit-deterministic given its corpus
@@ -511,19 +480,10 @@ object PipelineQueries {
     * model is still computed from the parquet inputs in this JVM — this
     * removes two redundant re-trainings of the same model (~2–3 s
     * each), not any query compute. */
-  private val ivfPqEvenBaseDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqEvenBaseFor(spark: SparkSession, dir: String): String =
-    ivfPqEvenBaseDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_base_").toString
-      Similarity.ivfPqWrite(
-        Tables.embeddings(spark, d).where(col("vec_id") % 2 === 0), p)
-      p
-    })
-
-  /** Recursive file copy of a persisted index directory — the fixture
-    * fork primitive behind the shared-base discipline above. */
-  private def copyIndexDir(src: String, dst: String): Unit =
-    Fixtures.copyDir(src, dst)
+  private val ivfPqEvenBaseFor = Scratch.fixture("graft_ivfpq_base_") { (spark, d, p) =>
+    Similarity.ivfPqWrite(
+      Tables.embeddings(spark, d).where(col("vec_id") % 2 === 0), p)
+  }
 
   /** One persisted INCREMENTALLY-BUILT fused index per sf dir per JVM:
     * the model trains on the even-vec_id half only (ivfPqWrite — shared
@@ -531,15 +491,10 @@ object PipelineQueries {
     * — encode-only, no retrain, append-mode partitioned write. The
     * ann_ivfpq_append_top5 gate probes the union lists against an oracle
     * that trains on the same prefix and encodes the full corpus. */
-  private val ivfPqAppendIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqAppendIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqAppendIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_app_").toString
-      val emb = Tables.embeddings(spark, d)
-      copyIndexDir(ivfPqEvenBaseFor(spark, d), p)
-      Similarity.ivfPqAppend(emb.where(col("vec_id") % 2 === 1), p)
-      p
-    })
+  private val ivfPqAppendIndexFor =
+    Scratch.fork("graft_ivfpq_app_", ivfPqEvenBaseFor) { (spark, d, p) =>
+      Similarity.ivfPqAppend(Tables.embeddings(spark, d).where(col("vec_id") % 2 === 1), p)
+    }
 
   /** One persisted APPEND-FRAGMENTED-THEN-COMPACTED fused index per sf
     * dir per JVM: the same prefix-trained model as ivfPqAppendIndexFor,
@@ -547,17 +502,13 @@ object PipelineQueries {
     * cells) and Similarity.ivfPqCompact(maxFilesPerCell = 1) then
     * rewrites every multi-file cell to one file. Content must be
     * invariant, so the gate shares the append leg's oracle verbatim. */
-  private val ivfPqCompactIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqCompactIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqCompactIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_cmp_").toString
+  private val ivfPqCompactIndexFor =
+    Scratch.fork("graft_ivfpq_cmp_", ivfPqEvenBaseFor) { (spark, d, p) =>
       val emb = Tables.embeddings(spark, d)
-      copyIndexDir(ivfPqEvenBaseFor(spark, d), p)
       (1 to 7 by 2).foreach(r =>
         Similarity.ivfPqAppend(emb.where(col("vec_id") % 8 === r), p))
       Similarity.ivfPqCompact(spark, p, maxFilesPerCell = 1)
-      p
-    })
+    }
 
   /** One persisted MAINTAINED fused index per sf dir per JVM: model
     * trained on the even half (ivfPqWrite), the odd half arrives in TWO
@@ -567,49 +518,37 @@ object PipelineQueries {
     * composes the append replay (prefix-trained models, full-corpus
     * encode) with the delete replay (survivor exclusion); compaction is
     * content-invariant so the same text covers it. */
-  private val ivfPqMaintainIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqMaintainIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqMaintainIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_mnt_").toString
+  private val ivfPqMaintainIndexFor =
+    Scratch.fork("graft_ivfpq_mnt_", ivfPqEvenBaseFor) { (spark, d, p) =>
       val emb = Tables.embeddings(spark, d)
-      copyIndexDir(ivfPqEvenBaseFor(spark, d), p)
       Seq(1, 3).foreach(r =>
         Similarity.ivfPqAppend(emb.where(col("vec_id") % 4 === r), p))
       Similarity.ivfPqMaintain(emb.where(col("vec_id") % 4 === 1).select("vec_id"),
         p, maxFilesPerCell = 1)
-      p
-    })
+    }
 
   /** One persisted DELETED-FROM fused index per sf dir per JVM: the
     * full-corpus model and lists (ivfPqWrite), then every odd vec_id
     * removed through Similarity.ivfPqDelete — affected cells rewritten
     * to survivors via the staging swap, emptied cells dropped. The
     * ann_ivfpq_delete_top5 gate probes what remains. */
-  private val ivfPqDeleteIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqDeleteIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqDeleteIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_del_").toString
-      val emb = Tables.embeddings(spark, d)
-      // fork the memoized full-corpus index (ivfPqIndexFor — the same
-      // deterministic ivfPqWrite(emb) this fixture used to re-train) and
-      // delete on the private copy, leaving the probe gates' index intact
-      copyIndexDir(ivfPqIndexFor(spark, d), p)
-      Similarity.ivfPqDelete(emb.where(col("vec_id") % 2 === 1).select("vec_id"), p)
-      p
-    })
+  private val ivfPqDeleteIndexFor =
+    // forks the memoized full-corpus index (ivfPqIndexFor — the same
+    // deterministic ivfPqWrite(emb) this fixture used to re-train) and
+    // deletes on the private copy, leaving the probe gates' index intact
+    Scratch.fork("graft_ivfpq_del_", ivfPqIndexFor) { (spark, d, p) =>
+      Similarity.ivfPqDelete(
+        Tables.embeddings(spark, d).where(col("vec_id") % 2 === 1).select("vec_id"), p)
+    }
 
   /** One persisted QUALITY-TIER fused index per sf dir per JVM: same
     * layout as ivfPqIndexFor but trained at Similarity.HqPqK codewords
     * per subspace — the production-recall config whose gates price what
     * the codebook/probe knobs buy (the r14 verdict's unpriced curve). */
-  private val ivfPqHqIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqHqIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqHqIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_hq_").toString
-      Similarity.ivfPqWrite(Tables.embeddings(spark, d), p, ksub = Similarity.HqPqK,
-        coarse = Some(coarseCentsFor(spark, d)))
-      p
-    })
+  private val ivfPqHqIndexFor = Scratch.fixture("graft_ivfpq_hq_") { (spark, d, p) =>
+    Similarity.ivfPqWrite(Tables.embeddings(spark, d), p, ksub = Similarity.HqPqK,
+      coarse = Some(coarseCentsFor(spark, d)))
+  }
 
   /** One persisted PRODUCTION-CELL-COUNT quality-tier index per sf dir
     * per JVM: the hq knobs with numCentroids = max(16, ⌈√n⌉)
@@ -617,16 +556,12 @@ object PipelineQueries {
     * indexes use and the one a real index derives from corpus size).
     * Registering it hash-pins cell-count-DEPENDENT code paths (the √n
     * Lloyd loop that hid the ×35 plan bug) at every gated SF. */
-  private val ivfPqHqScaledIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqHqScaledIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqHqScaledIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_hqs_").toString
-      val emb = Tables.embeddings(spark, d)
-      val n = emb.where(col("embedding").isNotNull).count()
-      Similarity.ivfPqWrite(emb, p,
-        numCentroids = Similarity.scaledNumCentroids(n), ksub = Similarity.HqPqK)
-      p
-    })
+  private val ivfPqHqScaledIndexFor = Scratch.fixture("graft_ivfpq_hqs_") { (spark, d, p) =>
+    val emb = Tables.embeddings(spark, d)
+    val n = emb.where(col("embedding").isNotNull).count()
+    Similarity.ivfPqWrite(emb, p,
+      numCentroids = Similarity.scaledNumCentroids(n), ksub = Similarity.HqPqK)
+  }
 
   private val ivfPqHqScaledProbe: Q = (spark, dir) => {
     val emb = Tables.embeddings(spark, dir)
@@ -672,14 +607,10 @@ object PipelineQueries {
     * same layout, but PQ codebooks train on (v − cent[cid]) — the
     * FAISS-IVFPQ refinement priced against the raw leg by the paired
     * recall gates. */
-  private val ivfPqResIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqResIndexFor(spark: SparkSession, dir: String): String =
-    ivfPqResIndexDirs.computeIfAbsent(dir, d => {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivfpqres_").toString
-      Similarity.ivfPqResWrite(Tables.embeddings(spark, d), p,
-        coarse = Some(coarseCentsFor(spark, d)))
-      p
-    })
+  private val ivfPqResIndexFor = Scratch.fixture("graft_ivfpqres_") { (spark, d, p) =>
+    Similarity.ivfPqResWrite(Tables.embeddings(spark, d), p,
+      coarse = Some(coarseCentsFor(spark, d)))
+  }
 
   private val ivfPqResProbe: Q = (spark, dir) => {
     val emb = Tables.embeddings(spark, dir)
@@ -2674,7 +2605,4 @@ object PipelineQueries {
       |        ORDER BY quality DESC, doc_id ASC) AS cum FROM tb)
       |SELECT doc_id, source, quality, n_tokens FROM w WHERE cum <= 800
       |ORDER BY doc_id""".stripMargin
-
-  val queries: Map[String, Q] = entries.map(e => e.name -> e.q).toMap
-  val oracle: Map[String, String] = entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

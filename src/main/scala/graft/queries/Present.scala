@@ -45,20 +45,14 @@ object Present {
     cp.orderBy(keys.map(col): _*)
   }
 
-  /** Free every live barrier's storage blocks. Call ONLY between
+  /** Free every live barrier's storage blocks
+    * ([[graft.Scratch.freeCheckpoint]]). Call ONLY between
     * queries (harness loop / after an oracle collect): the lineage is
     * truncated, so a freed barrier cannot recompute — any later scan of
     * the same DataFrame object throws. Each registration call builds a
     * fresh barrier, so re-running a query after release is safe. */
   def releaseBarriers(): Unit = {
     var df = liveBarriers.poll()
-    while (df != null) {
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false): Unit
-        case _ =>
-      }
-      df = liveBarriers.poll()
-    }
+    while (df != null) { graft.Scratch.freeCheckpoint(df); df = liveBarriers.poll() }
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Registry.Q
 
 /** Classic relational-OLAP queries over the TPC-H-style tables — the
   * bread-and-butter shapes (pricing-summary rollup, dimension-filtered
@@ -22,8 +23,7 @@ import org.apache.spark.sql.functions._
   * direct comparison lands in PushedFilters (plan-pinned), which at
   * 100 TB is row-group/page skipping on the scan itself.
   */
-object RelationalQueries {
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries extends Registry {
 
   private def r6(c: Column): Column = round(c, 6) + lit(0.0)
   // The TPC-H money/rate columns are 2-decimal by construction (verified
@@ -34,8 +34,6 @@ object RelationalQueries {
   // identical exact decimals and cast the identical value to double.
   private def dec(c: Column): Column = c.cast("decimal(12,2)")
   private def fac(c: Column): Column = c.cast("decimal(4,2)")
-
-  final case class Entry(name: String, q: Q, oracle: Option[String])
 
   val entries: Seq[Entry] = Seq(
 
@@ -163,7 +161,4 @@ object RelationalQueries {
         |WHERE o_orderdate >= TIMESTAMP '1995-06-01 00:00:00'
         |ORDER BY custkey""".stripMargin))
   )
-
-  val queries: Map[String, Q] = entries.map(e => e.name -> e.q).toMap
-  val oracle: Map[String, String] = entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

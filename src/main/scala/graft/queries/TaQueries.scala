@@ -5,6 +5,7 @@ import graft.ta.{Frames, Recursive}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import Registry.Q
 
 /** Driver-contract query registrations for the TA indicator library
   * (SURVEY.md §2.1–§2.3). EVERY operator carries a DuckDB oracle —
@@ -17,8 +18,7 @@ import org.apache.spark.sql.functions._
   * `round(x, 6) + 0.0` (−0.0 normalized), rows ordered by (symbol, ord) —
   * mirrored exactly in each oracle so the driver's hash compare is stable.
   */
-object TaQueries {
-  type Q = (SparkSession, String) => DataFrame
+object TaQueries extends Registry {
 
   private def r6(c: Column): Column = round(c, 6) + lit(0.0)
   private def W: WindowSpec = Window.partitionBy("symbol").orderBy("ord")
@@ -537,8 +537,6 @@ object TaQueries {
        |  ${Sql.r6("macd - sig", "macd_hist")} FROM s $T""".stripMargin
 
   // ---------------------------------------------------------------- entries
-
-  final case class Entry(name: String, q: Q, oracle: Option[String])
 
   val entries: Seq[Entry] = Seq(
 
@@ -1350,7 +1348,4 @@ object TaQueries {
       (lit(50.0) + col("close") % lit(2.0)).as("price"),
       (col("ord") * 2654435761L % 97 < 14).as("buy_sig"),
       (col("ord") * 2654435761L % 97 >= 83).as("sell_sig"))
-
-  val queries: Map[String, Q] = entries.map(e => e.name -> e.q).toMap
-  val oracle: Map[String, String] = entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

@@ -15,13 +15,13 @@ object StreamingDemo {
     spark.sparkContext.setLogLevel("ERROR")
 
     // stage the events file into its own dir (file source reads a directory)
-    val stage = java.nio.file.Files.createTempDirectory("stream_in")
+    val stage = graft.Scratch.dir("graft_stream_in_")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      stage.resolve("events.parquet"))
+      java.nio.file.Paths.get(stage, "events.parquet"))
 
     val schema = graft.Tables.table(spark, sfDir, "events").schema // sets nanosAsLong + UTC tz
-    val raw = spark.readStream.schema(schema).parquet(stage.toString)
+    val raw = spark.readStream.schema(schema).parquet(stage)
 
     // ts arrives as nanos-since-epoch long (TIMESTAMP(NANOS) data under
     // nanosAsLong) or as a timestamp type (MICROS data) — windowedStats
@@ -34,7 +34,7 @@ object StreamingDemo {
     val winQ = StreamingOps.windowedStats(events, "6 hours", "6 hours", "1 hour")
       .writeStream.format("memory").queryName("win").outputMode("update")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck1").toString).start()
+        graft.Scratch.dir("graft_ck1_")).start()
 
     val bars = raw.select(
       concat(col("event_type"), lit("_"), (col("user_id") % 16).cast("string")).as("symbol"),
@@ -42,7 +42,7 @@ object StreamingDemo {
     val emaQ = StreamingOps.emaStream(bars, 5)
       .writeStream.format("memory").queryName("ema").outputMode("update")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ck2").toString).start()
+        graft.Scratch.dir("graft_ck2_")).start()
 
     winQ.processAllAvailable(); emaQ.processAllAvailable()
     println("WINDOW_ROWS=" + spark.sql("SELECT count(*) FROM win").head.getLong(0))

@@ -131,18 +131,9 @@ object SeriesOps {
       col("ord").cast(LongType) +:
       carried.map(c => col(c).cast(DoubleType)): _*)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("symbol").orderBy("ord")
-    val scratch = scratchDir.getOrElse {
-      val d = java.nio.file.Files.createTempDirectory("graft_chunked_")
-      // the returned frame is lazy, so the staged copy must outlive this
-      // call — tie cleanup to JVM exit for caller-less temp dirs
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(d.toFile)
-      }
-      d.toString
-    }
+    // the returned frame is lazy, so the staged copy must outlive this
+    // call: a caller-less scratch dir is deleted at JVM exit
+    val scratch = scratchDir.getOrElse(graft.Scratch.dir("graft_chunked_"))
     val dataDir = s"$scratch/data"
     proj.withColumn("__chunk",
         ((row_number().over(w) - 1) / chunkRows).cast(IntegerType))

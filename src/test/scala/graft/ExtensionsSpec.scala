@@ -91,6 +91,26 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("integer literal"))
   }
 
+  test("every SQL function rejects a wrong-type argument at analysis") {
+    // one wrong type per function; the array<float> legs are the
+    // embeddings table's own element type, which the double loops must
+    // not read unconverted
+    val wrong = Seq(
+      "cosine_sim(array(1.0f, 2.0f), array(1.0d, 2.0d))",
+      "simhash64(array(1, 2))",
+      "misra_gries(t, 16) FROM VALUES (1), (2) AS v(t)",
+      "misra_gries_weighted(t, w, 16) FROM VALUES ('a', 1.5) AS v(t, w)",
+      "minhash_sig(array(1, 2), 4)",
+      "simhash_poly64(array(1.0d))",
+      "minhash_sig_poly(array(1, 2), 4)",
+      "minhash_shingle_poly(array(1, 2), 3, 4)",
+      "hyperplane_sigs(array(1.0f, -1.0f), 4, 2)")
+    wrong.foreach { call =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $call"))
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$call: ${e.getMessage}")
+    }
+  }
+
   test("bpe_merge_pair rejects a non-array<string> argument at analysis") {
     import org.apache.spark.sql.functions._
     val e = intercept[org.apache.spark.sql.AnalysisException](

@@ -2624,14 +2624,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("native BPE pair merge is identical to the composed aggregate fold") {
-    import org.apache.spark.sql.functions.{aggregate, array, concat, element_at, lit, size, slice, typedLit, when}
-    // the composed reference (Bpe.mergePairComposed's exact text)
-    def composed(syms: org.apache.spark.sql.Column, a: String, b: String) =
-      aggregate(syms, typedLit(Seq.empty[String]),
-        (acc, s) =>
-          when(size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-            .otherwise(concat(acc, array(s))))
     val rows = Seq(
       Seq("a", "a", "a"),                    // overlap: greedy non-overlapping
       Seq("a", "b", "a", "b", "b"),          // repeated pair + trailing b
@@ -2643,9 +2635,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("id", "syms")
     val out = df.select(col("id"),
         graft.functions.BpeMergePair.bpeMergePair(col("syms"), "a", "b").as("nat"),
-        composed(col("syms"), "a", "b").as("ref"),
+        Bpe.mergePairComposed(col("syms"), "a", "b").as("ref"),
         graft.functions.BpeMergePair.bpeMergePair(col("syms"), "a", "a").as("nat2"),
-        composed(col("syms"), "a", "a").as("ref2"))
+        Bpe.mergePairComposed(col("syms"), "a", "a").as("ref2"))
       .collect()
     out.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2), s"(a,b) mismatch: $r")
