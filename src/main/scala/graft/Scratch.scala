@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -131,10 +131,12 @@ private[graft] object Scratch {
     * frame's plan is one LogicalRDD leaf whose RDD owns the materialized
     * blocks; freeing is safe ONLY once nothing will scan the frame again
     * (the lineage is truncated, so a freed checkpoint cannot recompute —
-    * any later scan throws). */
+    * any later scan throws). The blocks go through the context directly:
+    * `RDD.unpersist` would log its "cannot be recomputed" WARN for every
+    * free, and every free here is deliberate. */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false): Unit
+      case lr: LogicalRDD => GraftBridge.freeBlocks(lr.rdd, blocking = false)
       case _ =>
     }
 }

@@ -15,9 +15,12 @@ import org.apache.spark.sql.functions._
   * precision issues (events.ts is nanosecond parquet).
   *
   * Scale notes (100 TB design): all per-series operators partition by
-  * `symbol`, so Spark parallelizes across series natively; the bar
-  * derivation itself is a single window over (symbol, ord) — one shuffle,
-  * reused by every downstream indicator in the same plan.
+  * `symbol`, so Spark parallelizes across series natively. [[series]]
+  * (and so [[bars]]) is hash-partitioned on `symbol` at the source
+  * ([[graft.ta.SeriesOps.bySeries]]): one shuffle, reused by every
+  * downstream window, pattern and typed fold in the same plan, and kept
+  * at the session's shuffle partition count (adaptive execution does not
+  * coalesce it).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -82,14 +85,20 @@ object Tables {
     * DOUBLE) still reads, but one it cannot (a DECIMAL `value`, a
     * STRING `user_id`) fails at read time, where an inferred read
     * would have accepted it.
+    *
+    * The frame comes out in the series partitioning
+    * ([[graft.ta.SeriesOps.bySeries]]): every per-series operator over
+    * it rides this one exchange instead of adding its own. Even a
+    * `limit(1)` read (the harness warm-ups) goes through the shuffle.
     */
   def series(spark: SparkSession, dir: String): DataFrame = {
     pinSessionConf(spark)
-    spark.read.schema(SeriesColumns).parquet(s"$dir/events.parquet").select(
-      concat(col("event_type"), lit("_"),
-        (col("user_id") % SymbolBuckets).cast("string")).as("symbol"),
-      col("event_id").as("ord"),
-      col("value").as("close"))
+    graft.ta.SeriesOps.bySeries(
+      spark.read.schema(SeriesColumns).parquet(s"$dir/events.parquet").select(
+        concat(col("event_type"), lit("_"),
+          (col("user_id") % SymbolBuckets).cast("string")).as("symbol"),
+        col("event_id").as("ord"),
+        col("value").as("close")))
   }
 
   /** The `events` columns [[series]] reads. */
@@ -102,7 +111,8 @@ object Tables {
     * long bodies (up to ±20%), zero and long shadows, and up/down gaps
     * versus the (i.i.d.) previous close. The DuckDB oracle (Sql.bars)
     * recomputes the identical derivation with the same IEEE expression
-    * structure, so comparisons are bit-exact.
+    * structure, so comparisons are bit-exact. A per-row projection of
+    * [[series]], so it keeps the series partitioning.
     */
   def bars(spark: SparkSession, dir: String): DataFrame = {
     // Prime denominators keep derived prices non-terminating in decimal, so

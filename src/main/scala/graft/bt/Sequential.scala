@@ -142,13 +142,15 @@ object Sequential {
   }
 
   /** Distributed multi-portfolio driver: each portfolio's event loop runs
-    * inside ONE task via `groupByKey(portfolio).flatMapGroups` — the same
-    * shape Vectorized uses per symbol. Portfolios are embarrassingly
-    * parallel across executors; each loop stays sequential, as an
-    * order-queue simulation must. Nothing is collected to the driver: the
-    * aligned bars of one portfolio (its whole simulation input) are
-    * materialized inside the task, bounded by one portfolio's history —
-    * the unit a user sizes anyway.
+    * inside ONE task via `SeriesOps.groupsBySeries(portfolio).flatMapGroups`
+    * — the same shape Vectorized uses per symbol, with `portfolio` as the
+    * series key: a fixed hash partitioning that adaptive execution does
+    * not coalesce, so portfolios spread over every core. Portfolios are
+    * embarrassingly parallel across executors; each loop stays
+    * sequential, as an order-queue simulation must. Nothing is collected
+    * to the driver: the aligned bars of one portfolio (its whole
+    * simulation input) are materialized inside the task, bounded by one
+    * portfolio's history — the unit a user sizes anyway.
     *
     * @param df         `(portfolio, symbol, ord, close)` — bars of every
     *                   asset in every portfolio (pre-align sparse symbols
@@ -167,7 +169,7 @@ object Sequential {
     val schema = StructType(Seq(
       StructField("portfolio", StringType), StructField("ord", LongType),
       StructField("equity", DoubleType)))
-    proj.groupByKey(_.getString(0))(Encoders.STRING)
+    graft.ta.SeriesOps.groupsBySeries(proj, "portfolio")
       .flatMapGroups { (pf: String, it: Iterator[Row]) =>
         val rows = it.toArray
         val ords = rows.map(_.getLong(2)).distinct.sorted

@@ -1,5 +1,6 @@
 package graft.bt
 
+import graft.ta.SeriesOps
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -7,9 +8,12 @@ import org.apache.spark.sql.types._
 /** Signal-driven vectorized backtester — port of reference
   * `src/backtest/vectorized.rs:69-224`, lifted from single-asset to
   * per-symbol-parallel: the same scan-fold runs inside
-  * `groupByKey(symbol).flatMapGroups`, so a universe of symbols backtests
-  * in one shuffle with each symbol's fold sequential (as it must be) and
-  * symbols embarrassingly parallel across executors.
+  * `SeriesOps.groupsBySeries(symbol).flatMapGroups`, so a universe of
+  * symbols backtests in one shuffle with each symbol's fold sequential
+  * (as it must be) and symbols embarrassingly parallel across executors.
+  * That shuffle is the series partitioning ([[SeriesOps.bySeries]]): a
+  * signal frame derived from `bars` already has it, so the fold adds no
+  * exchange.
   *
   * Fill semantics (faithful to the reference):
   *   - buy only when flat: deploy equity·positionSize at price+buySlippage,
@@ -85,7 +89,7 @@ object Vectorized {
       col("symbol").cast(StringType), col("ord").cast(LongType),
       col("price").cast(DoubleType), col("buy_sig").cast(BooleanType),
       col("sell_sig").cast(BooleanType))
-    proj.groupByKey(_.getString(0))(Encoders.STRING)
+    SeriesOps.groupsBySeries(proj, "symbol")
       .flatMapGroups { (sym: String, it: Iterator[Row]) =>
         val rows = it.toArray
         java.util.Arrays.sort(rows, Ordering.by((r: Row) => r.getLong(1)))

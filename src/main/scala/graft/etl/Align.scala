@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ta.SeriesOps
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +17,12 @@ import org.apache.spark.sql.functions._
   *   - left-join the data onto the grid, sort, per-symbol forward/backward/
   *     zero fill via `last/first(ignoreNulls)` windows, then default fill
   *
-  * Scale: the only shuffles are the distinct()s and the grid join; fills
-  * are windows over the (symbol) partitioning the join already produced.
+  * Scale: the shuffles are the distinct()s, the grid join and one
+  * repartition of the join output by symbol for the fill windows. That
+  * repartition is the series partitioning
+  * ([[graft.ta.SeriesOps.bySeries]]): a fixed hash partitioning that
+  * adaptive execution does not coalesce, so the fill runs one task per
+  * shuffle partition even when the grid is small.
   */
 object Align {
 
@@ -77,25 +82,25 @@ object Align {
     var aligned = grid.join(master, Seq(dateCol, symbolCol), "left")
 
     if (valueCols.nonEmpty) {
-      val wFwd = Window.partitionBy(symbolCol).orderBy(dateCol)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      // backward fill = forward fill over the REVERSED date order. The
-      // natural formulation — first(ignoreNulls) over (0,
-      // unboundedFollowing) — makes Spark re-scan the remainder of the
-      // partition for EVERY row (growing-from-below frames are not
-      // maintained incrementally): O(rows²) per symbol, measured 573 s at
-      // sf0.1 vs 8.5 s for the forward twin. A running
-      // (unboundedPreceding, 0) frame over descending dates is the same
-      // value, maintained incrementally — O(rows).
-      val wBwd = Window.partitionBy(symbolCol).orderBy(col(dateCol).desc)
-        .rowsBetween(Window.unboundedPreceding, 0)
+      // a running last-non-null over the series partitioning of the join
+      // output, in the given date order
+      def fill(order: Column): DataFrame = {
+        val w = Window.partitionBy(symbolCol).orderBy(order)
+          .rowsBetween(Window.unboundedPreceding, 0)
+        SeriesOps.bySeries(aligned, symbolCol).select(col(dateCol) +: col(symbolCol) +:
+          valueCols.map(c => last(col(c), ignoreNulls = true).over(w).as(c)): _*)
+      }
       fillNullStrategy match {
-        case "forward" =>
-          aligned = aligned.select(col(dateCol) +: col(symbolCol) +:
-            valueCols.map(c => last(col(c), ignoreNulls = true).over(wFwd).as(c)): _*)
-        case "backward" =>
-          aligned = aligned.select(col(dateCol) +: col(symbolCol) +:
-            valueCols.map(c => last(col(c), ignoreNulls = true).over(wBwd).as(c)): _*)
+        case "forward" => aligned = fill(col(dateCol))
+        // backward fill = forward fill over the REVERSED date order. The
+        // natural formulation — first(ignoreNulls) over (0,
+        // unboundedFollowing) — makes Spark re-scan the remainder of the
+        // partition for EVERY row (growing-from-below frames are not
+        // maintained incrementally): O(rows²) per symbol, measured 573 s at
+        // sf0.1 vs 8.5 s for the forward twin. A running
+        // (unboundedPreceding, 0) frame over descending dates is the same
+        // value, maintained incrementally — O(rows).
+        case "backward" => aligned = fill(col(dateCol).desc)
         case "zero" =>
           aligned = aligned.select(col(dateCol) +: col(symbolCol) +:
             valueCols.map(c => coalesce(col(c), lit(0.0)).as(c)): _*)

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Argmax-cosine against a fixed centroid table, fused into ONE native
   * expression: the IVF coarse-quantizer assignment (Similarity.ivfAssign)
@@ -19,8 +19,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * zero-norm input or centroid scores 0 (CosineSim's convention).
   */
 case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(cents.nonEmpty, "NearestCentroid needs at least one centroid")
+
+  // the loop reads doubles: any other input fails analysis
+  override def inputTypes = Seq(ArrayType(DoubleType))
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid"

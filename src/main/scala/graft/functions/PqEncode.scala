@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Product-quantization encoder: splits a dim-length vector into
   * `m = codebook.length` contiguous subvectors and, per subspace j, emits
@@ -24,12 +24,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * agree across engines (see queries.PqSql).
   */
 case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(codebook.nonEmpty && codebook.forall(_.nonEmpty),
     "PqEncode needs a non-empty codebook per subspace")
 
   private val m = codebook.length
   private val sub = codebook(0)(0).length
+
+  // the loop reads doubles: any other input fails analysis
+  override def inputTypes = Seq(ArrayType(DoubleType))
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   // a wrong-length vector encodes as NULL even when the child column is

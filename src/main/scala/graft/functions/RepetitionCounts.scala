@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -41,9 +41,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * never produces) take a string-building fallback that reproduces
   * concat_ws's null-skipping verbatim.
   */
-case class RepetitionCounts(child: Expression) extends UnaryExpression {
+case class RepetitionCounts(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
-  // input is guaranteed array<string> by the Column entry point below
+  // the counting pass reads UTF8Strings: any other input fails analysis
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = RepetitionCounts.OutType
   override def prettyName: String = "repetition_counts"
 

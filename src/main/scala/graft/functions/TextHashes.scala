@@ -232,8 +232,10 @@ object TextHashes {
     * them into minima) — the candidate-generation primitive for n-gram
     * overlap checks (decontamination). Same short-text fallback: fewer
     * than k tokens ⇒ the one all-tokens shingle. */
-  case class ShingleFps(child: Expression, shingleK: Int) extends UnaryExpression {
+  case class ShingleFps(child: Expression, shingleK: Int)
+      extends UnaryExpression with ExpectsInputTypes {
     require(shingleK >= 1, "shingleK must be >= 1")
+    override def inputTypes = Strings
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "shingle_fps"
     override def nullSafeEval(v: Any): Any = {

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -48,9 +48,12 @@ final class TopKBuffer(k: Int) {
 case class TopKByScore(score: Expression, id: Expression, k: Int,
                        mutableAggBufferOffset: Int = 0,
                        inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKBuffer] {
+    extends TypedImperativeAggregate[TopKBuffer] with ExpectsInputTypes {
 
   require(k > 0, s"k must be positive, got $k")
+
+  // update reads a Double score and a Long id: any other input fails analysis
+  override def inputTypes = Seq(DoubleType, LongType)
 
   override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
 

@@ -1,6 +1,6 @@
 package graft.ta
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,6 +11,22 @@ import org.apache.spark.sql.types._
   * `(symbol, ord, outCols…)` rows. This is the idiomatic Spark shape for
   * order-dependent state machines (SURVEY.md §7.2): one shuffle on the
   * series key, then embarrassingly parallel sequential folds.
+  *
+  * Partitioning contract: every per-series stage in graft (this fold,
+  * [[graft.bt.Vectorized]], [[graft.bt.Sequential.runPortfolios]], the
+  * [[graft.etl.Align]] fill window, and every Column window over
+  * [[graft.Tables.bars]]) runs on [[bySeries]]'s partitioning, a fixed
+  * hash partitioning on the series key into the session's shuffle
+  * partition count. Adaptive execution never coalesces such a
+  * repartition, so a small universe still runs one task per core rather
+  * than one task in all (AQE will not make a coalesced partition smaller
+  * than `coalescePartitions.minPartitionSize`, 1 MB). A frame that is
+  * already partitioned that way (everything derived from `bars`) is not
+  * shuffled again: the planner drops a repartition whose child already
+  * has the same hash partitioning. The typed folds group on the key
+  * COLUMN ([[groupsBySeries]]), not on a key lambda, so no
+  * `AppendColumns` deserializes each row just to read its key, and the
+  * grouping can reuse the series exchange.
   *
   * Scale: one series' full history is materialized on one executor —
   * correct for daily/bar-level data (thousands of rows per key, millions of
@@ -23,6 +39,18 @@ object SeriesOps {
   /** Hard cap on rows materialized per series inside one task (~50M rows
     * ≈ a few GB of doubles — a comfortable executor working set). */
   val MaxRowsPerSeries: Int = 50_000_000
+
+  /** The series partitioning: `df` hash-partitioned on `key` into the
+    * partition count Spark's own exchanges start from
+    * (`SQLConf.numShufflePartitions`: `spark.sql.shuffle.partitions`, or
+    * AQE's initial partition number when one is set). */
+  def bySeries(df: DataFrame, key: String = "symbol"): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(key))
+
+  /** [[bySeries]], grouped on the (string) `key` column itself; each
+    * group's values are `df`'s full rows, key included. */
+  def groupsBySeries(df: DataFrame, key: String): KeyValueGroupedDataset[String, Row] =
+    bySeries(df, key).groupBy(col(key)).as[String, Row](Encoders.STRING, Encoders.row(df.schema))
 
   /** @param df   input with `symbol` (string), `ord` (castable to long) and `in` numeric columns
     * @param in   input column names fed to the kernel (cast to double; null → NaN)
@@ -46,8 +74,7 @@ object SeriesOps {
       StructField("ord", LongType) ::
       (carried.toList ++ out.toList).map(StructField(_, DoubleType)))
     val inIdx = in.map(c => carried.indexOf(c) + 2)
-    proj
-      .groupByKey(_.getString(0))(Encoders.STRING)
+    groupsBySeries(proj, "symbol")
       .flatMapGroups { (sym: String, it: Iterator[Row]) =>
         val rows = it.toArray
         // One series' history is materialized on one executor. Guard the

@@ -6,10 +6,16 @@ import org.apache.spark.sql.types.{AbstractDataType, TypeCollection}
 /** Minimal bridge to the `private[sql]` Column ↔ Expression converters
   * and type collections, so
   * graft can expose native Catalyst expressions as user-facing Columns
-  * (Spark 4 moved Column construction behind ColumnNode). */
+  * (Spark 4 moved Column construction behind ColumnNode), and to the
+  * `private[spark]` block release under `RDD.unpersist`. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   /** An input type accepting any of `types` (for ExpectsInputTypes). */
   def anyOf(types: AbstractDataType*): AbstractDataType = TypeCollection(types: _*)
+  /** Drop `rdd`'s stored blocks: `RDD.unpersist` without its per-call
+    * WARN for a locally checkpointed RDD, for callers that free a
+    * checkpoint only once nothing will scan it again. */
+  def freeBlocks(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking)
 }

@@ -118,4 +118,25 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         array(lit(1), lit(2)), "a", "b")))
     assert(e.getMessage.contains("array<string>"), e.getMessage)
   }
+
+  test("every Column-only native expression rejects a wrong-type argument at analysis") {
+    // the expressions themselves, not their entry points (which cast):
+    // each input type is exactly what its eval loop reads
+    import graft.functions._
+    import org.apache.spark.sql.GraftBridge.{column, expression}
+    import org.apache.spark.sql.functions._
+    val floats = expression(array(lit(1.0f), lit(2.0f)))
+    val ints = expression(array(lit(1), lit(2)))
+    val wrong = Seq(
+      "nearest_centroid" -> column(NearestCentroid(floats, Array(Array(1.0, 0.0)))),
+      "pq_encode" -> column(PqEncode(floats, Array(Array(Array(1.0), Array(0.0))))),
+      "top_k_by_score" -> column(TopKByScore(expression(lit(1.0f)), expression(lit(1L)), 2)
+        .toAggregateExpression()),
+      "shingle_fps" -> column(TextHashes.ShingleFps(ints, 2)),
+      "repetition_counts" -> column(RepetitionCounts(ints)))
+    wrong.foreach { case (name, c) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.range(1).select(c))
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$name: ${e.getMessage}")
+    }
+  }
 }

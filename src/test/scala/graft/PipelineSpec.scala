@@ -336,7 +336,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vecs = (0L until 80L).map(i => (i, Array.fill(8)(rnd.nextFloat() - 0.5f)))
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     val q = df.where(col("vec_id") < 4)
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
+    val dir = Scratch.dir("graft_ivf_")
     Similarity.ivfWrite(df, dir, numCentroids = 5)
     val persisted = Similarity.ivfQuery(spark, dir, q, k = 3, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -825,7 +825,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     val q = df.where(col("vec_id") < 3)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val dir = Scratch.dir("graft_ivfpq_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     def key(r: org.apache.spark.sql.Row) =
@@ -856,8 +856,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val d1 = java.nio.file.Files.createTempDirectory("ivfpq_self").toString
-    val d2 = java.nio.file.Files.createTempDirectory("ivfpq_reuse").toString
+    val d1 = Scratch.dir("graft_ivfpq_self_")
+    val d2 = Scratch.dir("graft_ivfpq_reuse_")
     Similarity.ivfPqWrite(df, d1, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     val cents = Similarity.ivfBuild(df, numCentroids = 4, lloydIters = 1,
@@ -1011,7 +1011,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_guard").toString
+    val dir = Scratch.dir("graft_ivfpq_guard_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 2, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     val e = intercept[IllegalArgumentException] {
@@ -1041,7 +1041,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def listKeys(p: String) = spark.read.parquet(s"$p/lists")
       .collect().map(r => (r.getAs[Long]("corpus_id"),
         r.getAs[Number]("cid").intValue, r.getAs[Seq[Int]]("codes"))).toSet
-    val p1 = java.nio.file.Files.createTempDirectory("ivfpq_app1").toString
+    val p1 = Scratch.dir("graft_ivfpq_app1_")
     Similarity.ivfPqWrite(base, p1, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     val resident = listKeys(p1)
@@ -1052,7 +1052,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.filter(_._1 < 20) == resident, "append must not touch resident lists")
     assert(after.map(_._1) == (0L until 40L).toSet, "every appended id must land")
     // batch-split invariance: one append ≡ two successive appends
-    val p2 = java.nio.file.Files.createTempDirectory("ivfpq_app2").toString
+    val p2 = Scratch.dir("graft_ivfpq_app2_")
     Similarity.ivfPqWrite(base, p2, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     Similarity.ivfPqAppend(inc.where(col("vec_id") < 30), p2)
@@ -1081,7 +1081,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     val base = df.where(col("vec_id") < 20)
     val inc = df.where(col("vec_id") >= 20)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_appres").toString
+    val dir = Scratch.dir("graft_ivfpq_appres_")
     Similarity.ivfPqResWrite(base, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     Similarity.ivfPqAppend(inc, dir)
@@ -1117,7 +1117,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getAs[Long]("corpus_id") -> r.getAs[Seq[Int]]("codes")).toMap
     assert(stored == expect, "appended codes must quantize the residuals, not the raw vectors")
     // an index with no encoding-mode marker is refused loudly
-    val bare = java.nio.file.Files.createTempDirectory("ivfpq_bare").toString
+    val bare = Scratch.dir("graft_ivfpq_bare_")
     Similarity.ivfPqResWrite(base, bare, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -1135,7 +1135,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_del").toString
+    val dir = Scratch.dir("graft_ivfpq_del_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     val before = spark.read.parquet(s"$dir/lists")
@@ -1190,7 +1190,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_cmp").toString
+    val dir = Scratch.dir("graft_ivfpq_cmp_")
     Similarity.ivfPqWrite(df.where(col("vec_id") < 20), dir,
       numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
@@ -1239,7 +1239,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("ivfpq_mnt").toString
+      val dir = Scratch.dir("graft_ivfpq_mnt_")
       Similarity.ivfPqWrite(df.where(col("vec_id") < 40), dir,
         numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
         m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
@@ -1281,7 +1281,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_tight").toString
+    val dir = Scratch.dir("graft_ivfpq_tight_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 4, lloydIters = 1,
       ivfSampleMod = 1, m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     def sidecarRows() = spark.read.parquet(s"$dir/ids").count()
@@ -1317,7 +1317,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("ivfpq_sc").toString
+      val dir = Scratch.dir("graft_ivfpq_sc_")
       Similarity.ivfPqWrite(df.where(col("vec_id") < 40), dir,
         numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
         m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
@@ -1391,7 +1391,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // single-scan write with PRECOMPUTED stats from a previous snapshot:
     // an unseen lang ("zz") clamps to cell 0 but every row survives
     val grown = spark.createDataFrame(rows :+ (("zz", 50L, "zz-0"))).toDF("lang", "k", "payload")
-    val out = java.nio.file.Files.createTempDirectory("zorder_str").toString + "/t"
+    val out = Scratch.dir("graft_zorder_str_") + "/t"
     graft.etl.Layout.zOrderWrite(grown, Seq("lang", "k"), out, bits = 8, stats = Some(st))
     val back = spark.read.parquet(out).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
@@ -1448,7 +1448,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cols = Seq("lang", "k")
     val snap = df.where(col("k") % 4 === 0)
     val st = graft.etl.Layout.zStats(snap, cols)
-    val out = java.nio.file.Files.createTempDirectory("zorder_life").toString + "/t"
+    val out = Scratch.dir("graft_zorder_life_") + "/t"
     // one BIG resident file + a persisted stats sidecar + a manifest
     graft.etl.Layout.zOrderWrite(snap, cols, out, bits = 8, numFiles = 1,
       stats = Some(st))
@@ -1606,7 +1606,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(rows).toDF("lang", "k", "payload")
     val cols = Seq("lang", "k")
     val st = graft.etl.Layout.zStats(df, cols)
-    val out = java.nio.file.Files.createTempDirectory("zdel").toString + "/t"
+    val out = Scratch.dir("graft_zdel_") + "/t"
     graft.etl.Layout.zOrderWrite(df, cols, out, bits = 8, numFiles = 4,
       stats = Some(st))
     graft.etl.Layout.saveZStats(spark, out, cols, st)
@@ -1651,7 +1651,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(rows).toDF("lang", "k", "payload")
     val cols = Seq("lang", "k")
     val st = Layout.zStats(df, cols)
-    val out = java.nio.file.Files.createTempDirectory("zfgt").toString + "/t"
+    val out = Scratch.dir("graft_zfgt_") + "/t"
     Layout.zOrderWrite(df, cols, out, bits = 8, numFiles = 4, stats = Some(st))
     Layout.saveZStats(spark, out, cols, st)
     Layout.manifestRefresh(spark, out, cols)
@@ -1703,7 +1703,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Layout.zOrderMaintain(spark, out, cols, st, bits = 8,
       smallFileBytes = 1, targetFileBytes = 1L << 30) == 0)
     // a maintain asked to fold WITHOUT a manifest must refuse loudly
-    val out2 = java.nio.file.Files.createTempDirectory("zfgt2").toString + "/t"
+    val out2 = Scratch.dir("graft_zfgt2_") + "/t"
     Layout.zOrderWrite(df, cols, out2, bits = 8, numFiles = 2, stats = Some(st))
     Layout.zOrderForget(spark, out2, "k", Seq(1L))
     val e = intercept[IllegalArgumentException] {
@@ -1722,7 +1722,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(rows).toDF("lang", "k", "payload")
     val cols = Seq("lang", "k")
     val st = Layout.zStats(df, cols)
-    val out = java.nio.file.Files.createTempDirectory("zups").toString + "/t"
+    val out = Scratch.dir("graft_zups_") + "/t"
     Layout.zOrderWrite(df, cols, out, bits = 8, numFiles = 4, stats = Some(st))
     Layout.saveZStats(spark, out, cols, st)
     Layout.manifestRefresh(spark, out, cols)
@@ -1790,7 +1790,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(rows).toDF("lang", "k", "payload")
     val cols = Seq("lang", "k")
     val st = Layout.zStats(df, cols)
-    val out = java.nio.file.Files.createTempDirectory("zgrd").toString + "/t"
+    val out = Scratch.dir("graft_zgrd_") + "/t"
     Layout.zOrderWrite(df, cols, out, bits = 8, numFiles = 2, stats = Some(st))
     Layout.manifestRefresh(spark, out, cols)
     // a file the manifest has never seen: landed by append, no reconcile
@@ -1836,7 +1836,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(rows).toDF("lang", "k", "payload")
     val cols = Seq("lang", "k")
     val st = Layout.zStats(df, cols)
-    val out = java.nio.file.Files.createTempDirectory("znul").toString + "/t"
+    val out = Scratch.dir("graft_znul_") + "/t"
     Layout.zOrderWrite(df, cols, out, bits = 8, numFiles = 4, stats = Some(st))
     Layout.manifestRefresh(spark, out, cols)
     // null k encodes to cell 0, so the null rows cluster at the curve's
@@ -1906,7 +1906,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // roundtrip: the z-ordered rewrite is a pure reorder — same multiset
     val rows = (0L until 500L).map(i => (i, i % 37, (i * 31) % 101))
     val src = spark.createDataFrame(rows).toDF("id", "a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = Scratch.dir("graft_zorder_")
     graft.etl.Layout.zOrderWrite(src, Seq("a", "b"), dir, bits = 8, numFiles = 4)
     val back = spark.read.parquet(dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
@@ -1931,7 +1931,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = docs(texts: _*)
     val ref = all.where(col("doc_id") % 3 === 0)
     val batch = all.where(col("doc_id") % 3 =!= 0)
-    val ipath = java.nio.file.Files.createTempDirectory("ccidx").toString
+    val ipath = Scratch.dir("graft_ccidx_")
     Dedup.dedupIndexWrite(ref, "test_ccidx", ipath, numBuckets = 4, bands = 8)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       r.getLong(0) -> (r.getBoolean(1),
@@ -1966,7 +1966,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       r.getLong(0) -> (r.getBoolean(1),
         Option(r.get(2)).map(v => math.round(r.getDouble(2) * 1e9)))).toMap
     // fragmented build: write one third, append the rest in two batches
-    val p1 = java.nio.file.Files.createTempDirectory("didx_frag").toString
+    val p1 = Scratch.dir("graft_didx_frag_")
     Dedup.dedupIndexWrite(ref.where(col("doc_id") < 12), "didx_frag", p1,
       numBuckets = 4, bands = 8)
     Dedup.dedupIndexAppend(ref.where(col("doc_id") >= 12 && col("doc_id") < 27), "didx_frag")
@@ -1997,7 +1997,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "logical delete must not rewrite the physical tables")
     assert(spark.table("didx_frag_tombstones").count() == removed,
       "the tombstone table must hold exactly the forgotten ids")
-    val p2 = java.nio.file.Files.createTempDirectory("didx_ref2").toString
+    val p2 = Scratch.dir("graft_didx_ref2_")
     Dedup.dedupIndexWrite(ref.where(col("doc_id") % 2 =!= 0), "didx_ref2", p2,
       numBuckets = 4, bands = 8)
     val survivors = key(Dedup.crossCorpusNearDupIndexed(batch, "didx_frag"))
@@ -2045,13 +2045,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       r.getLong(0) -> (r.getBoolean(1),
         Option(r.get(2)).map(v => math.round(r.getDouble(2) * 1e9)))).toMap
-    val p1 = java.nio.file.Files.createTempDirectory("didx_src").toString
+    val p1 = Scratch.dir("graft_didx_src_")
     Dedup.dedupIndexWrite(ref, "didx_src", p1, numBuckets = 4, bands = 8)
     // tombstone some ids on the SOURCE so the clone must carry them too
     val dead = ref.where(col("doc_id") % 2 === 0)
     Dedup.dedupIndexDelete(dead.select("doc_id"), "didx_src")
     val srcProbe = key(Dedup.crossCorpusNearDupIndexed(batch, "didx_src"))
-    val p2 = java.nio.file.Files.createTempDirectory("didx_cln").toString
+    val p2 = Scratch.dir("graft_didx_cln_")
     Dedup.dedupIndexClone(spark, "didx_src", "didx_cln", p2)
     // content-identical fork: probe results, tombstones, bucket spec
     assert(key(Dedup.crossCorpusNearDupIndexed(batch, "didx_cln")) == srcProbe,
@@ -2109,7 +2109,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     val q = df.where(col("vec_id") < 3)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqres").toString
+    val dir = Scratch.dir("graft_ivfpqres_")
     Similarity.ivfPqResWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     def key(r: org.apache.spark.sql.Row) =
@@ -2848,7 +2848,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until (2 + rnd.nextInt(5))).map(_ => "wxyz"(rnd.nextInt(4))).mkString)
     val d = docs((0 until 100).map(i =>
       i.toLong -> words(rnd.nextInt(words.length))): _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_test_").toString
+    val dir = Scratch.dir("graft_bpe_test_")
     try {
       val fast = Bpe.train(d, numMerges = 5)
       val staged = Bpe.train(d, numMerges = 5, scratchDir = Some(dir))
@@ -2966,7 +2966,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, "unicode: é中文 😀", "zh", "web", 12L),
       (5L, null, null, "web", 0L))
     val df = spark.createDataFrame(tricky).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("jsonl_rt_").toString
+    val dir = Scratch.dir("graft_jsonl_rt_")
     graft.pipeline.Jsonl.write(df, dir)
     val back = graft.pipeline.Jsonl.readDocuments(spark, dir)
       .collect().map(r => (r.getLong(0),

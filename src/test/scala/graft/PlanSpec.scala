@@ -86,7 +86,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parquet filter + projection push down to the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("plan_pushdown_").toString
+    val dir = Scratch.dir("graft_plan_pushdown_")
     docs(100).write.mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir).where(col("doc_id") < 10).select("doc_id")
     val plan = executedPlan(q)
@@ -103,7 +103,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.etl.Layout
     val rows = for (a <- 0L until 40L; b <- 0L until 10L) yield (a, b, a * 100 + b)
     val df = spark.createDataFrame(rows).toDF("a", "b", "v")
-    val dir = java.nio.file.Files.createTempDirectory("plan_manifest_").toString + "/t"
+    val dir = Scratch.dir("graft_plan_manifest_") + "/t"
     Layout.zOrderWrite(df, Seq("a", "b"), dir, bits = 8, numFiles = 4)
     Layout.manifestRefresh(spark, dir, Seq("a", "b"))
     val bounds = Seq(Layout.Bound("a", 0L, 5L), Layout.Bound("b", 0L, 5L))
@@ -132,7 +132,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("plan_sidecar_").toString
+    val dir = Scratch.dir("graft_plan_sidecar_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
     // the exact probe shape ivfPqDelete builds under the cap
@@ -196,7 +196,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a REAL parquet scan: a LocalRelation is constant-folded before the
     // filter ever reaches a plan (ConvertToLocalRelation), and the trap
     // being pinned lives in the scan-filter substitution
-    val dir = java.nio.file.Files.createTempDirectory("repkeep_plan").toString
+    val dir = Scratch.dir("graft_repkeep_plan_")
     docs(80).write.mode("overwrite").parquet(dir)
     val plan = executedPlan(
       spark.read.parquet(dir).where(Repetition.repetitionKeep(col("text"))))
@@ -226,6 +226,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"barriered sort must scan the checkpointed leaf:\n$plan")
     assert(plan.contains("rangepartitioning"),
       s"presentation sort must still be a single range sort:\n$plan")
+  }
+
+  test("releaseBarriers frees the barrier's checkpoint blocks") {
+    val df = graft.queries.Present.sortedBarrier(spark.range(0, 100, 1, 2).toDF("k"), "k")
+    df.collect()
+    val ids = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+    graft.queries.Present.releaseBarriers()
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains))
   }
 
   test("Present.sorted plans as one single-partition sort over the body") {
@@ -444,7 +455,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("persisted IVF probe prunes unprobed lists via cid partition filter") {
     val e = embs(80)
-    val dir = java.nio.file.Files.createTempDirectory("plan_ivf_").toString
+    val dir = Scratch.dir("graft_plan_ivf_")
     Similarity.ivfWrite(e, dir, numCentroids = 4, portableSeed = true)
     val probe = Similarity.ivfQuery(spark, dir, e.where(col("vec_id") < 2), k = 2, nprobe = 1)
     val plan = executedPlan(probe)
@@ -456,7 +467,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("IVF-PQ probe prunes unprobed lists at the source and keeps the two-window shuffle bound") {
     val e = embs(80)
-    val dir = java.nio.file.Files.createTempDirectory("plan_ivfpq_").toString
+    val dir = Scratch.dir("graft_plan_ivfpq_")
     Similarity.ivfPqWrite(e, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     val probe = Similarity.ivfPqQuery(spark, dir, e, e.where(col("vec_id") < 2),
@@ -480,7 +491,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("residual IVF-PQ probe keeps the raw fused probe's plan shape") {
     val e = embs(80)
-    val dir = java.nio.file.Files.createTempDirectory("plan_ivfpqres_").toString
+    val dir = Scratch.dir("graft_plan_ivfpqres_")
     Similarity.ivfPqResWrite(e, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     val probe = Similarity.ivfPqResQuery(spark, dir, e, e.where(col("vec_id") < 2),
@@ -635,7 +646,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucketed join executes with zero shuffle exchanges") {
-    val base = java.nio.file.Files.createTempDirectory("bkt_plan_").toString
+    val base = Scratch.dir("graft_bkt_plan_")
     val ev = spark.range(0, 1000).select(col("id").as("event_id"),
       (col("id") % 50).as("user_id"), (col("id") * 1.5).as("value"))
     val usr = ev.groupBy("user_id").agg(count(lit(1)).as("n_events"))
@@ -658,7 +669,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reference buckets table is bucketed+sorted on the join key
     // (band, bucket), so the candidate join's ONLY exchange is the
     // arriving batch's — a 100 TB reference never re-shuffles
-    val base = java.nio.file.Files.createTempDirectory("ccidx_plan_").toString
+    val base = Scratch.dir("graft_ccidx_plan_")
     val d = docs(60)
     // built INCREMENTALLY (write-half + append-half) — the appended
     // bucket files must keep the co-located join property, since that
@@ -713,7 +724,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the same property as the join, one hop earlier: a groupBy on the
     // bucket column reads pre-hashed buckets and needs no exchange at all.
     // Stages its own table so the test runs standalone.
-    val base = java.nio.file.Files.createTempDirectory("bkt_agg_plan_").toString
+    val base = Scratch.dir("graft_bkt_agg_plan_")
     graft.etl.Bucketing.writeBucketed(
       spark.range(0, 1000).select((col("id") % 50).as("user_id"),
         (col("id") * 1.5).as("value")),
@@ -726,7 +737,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned scan prunes to the selected partition directory") {
-    val p = java.nio.file.Files.createTempDirectory("part_plan_").toString
+    val p = Scratch.dir("graft_part_plan_")
     val d = docs(40).withColumn("lang",
         when(col("doc_id") % 4 === 0, "en").otherwise(
           when(col("doc_id") % 4 === 1, "de").otherwise(
@@ -748,7 +759,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("runtime-filtered join dynamic-prunes the partitioned fact scan") {
-    val p = java.nio.file.Files.createTempDirectory("dpp_plan_").toString
+    val p = Scratch.dir("graft_dpp_plan_")
     val d = docs(40).withColumn("lang",
         when(col("doc_id") % 4 === 0, "en").otherwise(
           when(col("doc_id") % 4 === 1, "de").otherwise(
@@ -762,7 +773,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // not DPP). The dim must live in a file scan too: a filter over a
     // LocalRelation is folded away at optimize time and DPP sees no
     // selective predicate.
-    val dimPath = java.nio.file.Files.createTempDirectory("dpp_dim_").toString
+    val dimPath = Scratch.dir("graft_dpp_dim_")
     spark.createDataFrame(Seq(("en", "low"), ("de", "high"), ("fr", "high"), ("zh", "low")))
       .toDF("lang", "tier").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).where(col("tier") === "high").select(col("lang"))
@@ -836,5 +847,84 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!genChildHasNearest(oneStep),
       "one-step select evaluates NearestCentroid above the Generate — if Spark " +
       "starts pinning it below, the two-step workaround in ivfBuild/pqTrain can be dropped")
+  }
+
+  // ---- the series partitioning (ta.SeriesOps.bySeries) ----
+
+  /** An events table in the testdata layout: 8 series of 40 rows. */
+  private lazy val eventsDir: String = {
+    val dir = Scratch.dir("graft_plan_events_")
+    spark.range(0, 320, 1, 2).select(
+      col("id").as("event_id"), (col("id") % 8).as("user_id"),
+      lit("click").as("event_type"), (col("id") * 0.37 % 5 + 1.0).as("value"))
+      .write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  private def nodesAfterRun(df: DataFrame) = {
+    df.collect()
+    physicalNodes(df.queryExecution.executedPlan)
+  }
+  private def hasAppendColumns(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.AppendColumnsExec])
+  private def shuffles(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    nodes.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+
+  test("Recursive.multi over bars plans ONE exchange: the source's fixed series partitioning") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val kernels: Seq[(String, Array[Array[Double]] => Array[Double])] =
+      Seq("ema5" -> (a => graft.ta.Kernels.ema(a(0), 5)))
+    val nodes = nodesAfterRun(
+      graft.ta.Recursive.multi(Tables.bars(spark, eventsDir), Seq("close"), kernels))
+    val ex = shuffles(nodes)
+    assert(ex.size == 1, s"the fold must ride the source exchange: $ex")
+    assert(ex.head.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM,
+      s"the series exchange is a fixed repartition: ${ex.head.shuffleOrigin}")
+    ex.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), 4) if a.name == "symbol" =>
+      case other => fail(s"expected hashpartitioning(symbol, 4), got $other")
+    }
+    assert(!hasAppendColumns(nodes), "the fold groups on the key column, not a key lambda")
+  }
+
+  test("Frames + Patterns over bars add no exchange beyond the source one") {
+    implicit val w: org.apache.spark.sql.expressions.WindowSpec =
+      org.apache.spark.sql.expressions.Window.partitionBy("symbol").orderBy("ord")
+    val df = Tables.bars(spark, eventsDir).select(col("symbol"), col("ord"),
+      graft.ta.Frames.sma(col("close"), 5).as("sma5"),
+      graft.ta.Patterns.cdlengulfing.column.as("engulfing"))
+    assert(countShuffleExchanges(df) == 1)
+  }
+
+  test("the vectorized and sequential backtests group on the key column: no AppendColumns") {
+    val sig = Tables.bars(spark, eventsDir).select(col("symbol"), col("ord"),
+      col("close").as("price"), (col("ord") % 7 === 0).as("buy_sig"),
+      (col("ord") % 7 === 3).as("sell_sig"))
+    val vec = nodesAfterRun(graft.bt.Vectorized.summaryVsPrice(sig))
+    assert(!hasAppendColumns(vec))
+    assert(shuffles(vec).size == 1, "the vectorized fold must ride the source exchange")
+    val pf = Tables.bars(spark, eventsDir)
+      .select(concat(lit("P"), (col("ord") % 2).cast("string")).as("portfolio"),
+        col("symbol"), col("ord"), col("close"))
+    val seq = nodesAfterRun(graft.bt.Sequential.runPortfolios(pf,
+      (syms, closes) => (ctx, p) => ctx.buy(syms(0), 1, closes(syms(0))(p))))
+    assert(!hasAppendColumns(seq))
+    assert(seq.exists(_.isInstanceOf[org.apache.spark.sql.execution.MapGroupsExec]))
+  }
+
+  test("a small series query keeps every series partition: no coalesced AQE read") {
+    // AQE will not coalesce below 1 MB per partition, so an
+    // ENSURE_REQUIREMENTS exchange of this frame would read as ONE
+    // partition; the fixed series repartition keeps all four
+    implicit val w: org.apache.spark.sql.expressions.WindowSpec =
+      org.apache.spark.sql.expressions.Window.partitionBy("symbol").orderBy("ord")
+    val df = Tables.bars(spark, eventsDir)
+      .select(col("symbol"), col("ord"), graft.ta.Frames.sma(col("close"), 5).as("sma5"))
+    val reads = nodesAfterRun(df).collect {
+      case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec => r
+    }
+    assert(!reads.exists(_.hasCoalescedPartition), s"coalesced series read: $reads")
+    assert(df.rdd.getNumPartitions == 4)
   }
 }

@@ -81,7 +81,7 @@ class SparkBtSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Align.prepareSequentialData: stem symbol injection, grid, forward fill") {
-    val dir = java.nio.file.Files.createTempDirectory("align").toFile
+    val dir = new java.io.File(Scratch.dir("graft_align_"))
     // aaa.csv lacks a symbol column → injected from the stem
     val csv = new java.io.File(dir, "aaa.csv")
     java.nio.file.Files.writeString(csv.toPath,

@@ -25,7 +25,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmpCheckpoint() =
-    java.nio.file.Files.createTempDirectory("ckpt").toString
+    Scratch.dir("graft_ckpt_")
 
   test("streaming EMA equals the batch kernel across micro-batch boundaries") {
     implicit val enc = Encoders.product[BarIn]
@@ -208,9 +208,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dedup = graft.pipeline.Dedup
     // one index built in full, one built write-half + append-half
     dedup.dedupIndexWrite(refDf, "sidx_full",
-      java.nio.file.Files.createTempDirectory("sidx_f").toString, numBuckets = 4)
+      Scratch.dir("graft_sidx_f_"), numBuckets = 4)
     dedup.dedupIndexWrite(refDf.where(col("doc_id") < 102), "sidx_inc",
-      java.nio.file.Files.createTempDirectory("sidx_i").toString, numBuckets = 4)
+      Scratch.dir("graft_sidx_i_"), numBuckets = 4)
     dedup.dedupIndexAppend(refDf.where(col("doc_id") >= 102), "sidx_inc")
     def asMap(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       r.getLong(0) -> (r.getBoolean(1),
@@ -662,7 +662,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // including across a restart replaying the same batch (exactly-once
     // via the sink's _spark_metadata log, not writer idempotence)
     val ms = MemoryStream[(Long, String, String)](spark)
-    val out = java.nio.file.Files.createTempDirectory("stream_part_").toString
+    val out = Scratch.dir("graft_stream_part_")
     val ck = tmpCheckpoint()
     def start() = ms.toDF().toDF("doc_id", "lang", "text")
       .writeStream.format("parquet").partitionBy("lang")
@@ -698,7 +698,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_s").toString
+    val dir = Scratch.dir("graft_ivfpq_s_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     val index = Similarity.loadIvfPq(spark, dir)
@@ -735,7 +735,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqres_s").toString
+    val dir = Scratch.dir("graft_ivfpqres_s_")
     Similarity.ivfPqResWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     val index = Similarity.loadIvfPq(spark, dir)
@@ -774,7 +774,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_sj").toString
+    val dir = Scratch.dir("graft_ivfpq_sj_")
     Similarity.ivfPqWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     implicit val enc = Encoders.product[(Long, Seq[Double])]
@@ -813,7 +813,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_sj_maint").toString
+    val dir = Scratch.dir("graft_ivfpq_sj_maint_")
     Similarity.ivfPqWrite(df.where(col("vec_id") < 40), dir,
       numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
@@ -853,7 +853,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           .toDouble / 500.0) - 1.0))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqres_sj").toString
+    val dir = Scratch.dir("graft_ivfpqres_sj_")
     Similarity.ivfPqResWrite(df, dir, numCentroids = 4, lloydIters = 1, ivfSampleMod = 1,
       m = 4, ksub = 4, pqIters = 1, pqSampleMod = 1)
     // the persisted marker must gate the mode: a raw probe of the
@@ -891,7 +891,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val zc = Seq("lang", "k")
     val snap = df.where(col("k") < 30)
     val st = graft.etl.Layout.zStats(snap, zc)
-    val out = java.nio.file.Files.createTempDirectory("zsink").toString + "/t"
+    val out = Scratch.dir("graft_zsink_") + "/t"
     graft.etl.Layout.zOrderWrite(snap, zc, out, bits = 8, numFiles = 1,
       stats = Some(st))
     graft.etl.Layout.saveZStats(spark, out, zc, st)
@@ -952,7 +952,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val zc = Seq("lang", "k")
     val snap = df.where(col("k") < 20)
     val st = graft.etl.Layout.zStats(snap, zc)
-    val out = java.nio.file.Files.createTempDirectory("zsinkfgt").toString + "/t"
+    val out = Scratch.dir("graft_zsinkfgt_") + "/t"
     graft.etl.Layout.zOrderWrite(snap, zc, out, bits = 8, numFiles = 1,
       stats = Some(st))
     graft.etl.Layout.saveZStats(spark, out, zc, st)

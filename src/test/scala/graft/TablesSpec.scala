@@ -22,7 +22,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def stage(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_").toString
+    val dir = Scratch.dir("graft_tables_spec_")
     // Tables.table reads $dir/events.parquet — a directory named like the
     // driver's single-file layout works identically through the Hadoop FS
     df.repartition(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -66,7 +66,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("series' declared-schema read equals the inferred-schema read, rows and types") {
     // an events table in the testdata layout (all six columns, the
     // declared four among them, spread over two files)
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_").toString
+    val dir = Scratch.dir("graft_tables_spec_")
     spark.range(0, 300, 1, 2).select(
       col("id").as("event_id"),
       expr("timestamp_micros(1700000000000000 + id * 1000)").as("ts"),
