@@ -21,8 +21,7 @@ object Bench {
     // absorb JVM/classloader/scheduler/parquet-reader warmup before the
     // timed loop — otherwise the alphabetically-first query of each table
     // is billed one-time open/footer cost that has nothing to do with its
-    // plan; warm all three source tables (the bars read goes through the
-    // series shuffle, Tables.series, so it scans the whole events table)
+    // plan; warm all three source tables
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables.bars(spark, sfDir).limit(1).collect()
     Tables.documents(spark, sfDir).limit(1).collect()

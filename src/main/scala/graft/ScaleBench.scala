@@ -481,8 +481,7 @@ object ScaleBench {
     if (queries.exists(_.startsWith("remove_spans_singleton")))
       singletonDocs(spark, out).limit(1).collect(): Unit
 
-    // same warmups as Bench: tables + window/overSeries machinery (the
-    // bars read goes through the series shuffle and scans all of events)
+    // same warmups as Bench: tables + window/overSeries machinery
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables.bars(spark, out).limit(1).collect()
     Tables.documents(spark, out).limit(1).collect()

@@ -131,9 +131,11 @@ private[graft] object Scratch {
     * frame's plan is one LogicalRDD leaf whose RDD owns the materialized
     * blocks; freeing is safe ONLY once nothing will scan the frame again
     * (the lineage is truncated, so a freed checkpoint cannot recompute —
-    * any later scan throws). The blocks go through the context directly:
-    * `RDD.unpersist` would log its "cannot be recomputed" WARN for every
-    * free, and every free here is deliberate. */
+    * any later scan throws). The blocks go through the context directly
+    * ([[GraftBridge.freeBlocks]]): `RDD.unpersist` would log its "cannot
+    * be recomputed" WARN for every free, and every free here is
+    * deliberate. The freed RDD keeps reporting its old storage level, so
+    * it must never be persisted or scanned again. */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: LogicalRDD => GraftBridge.freeBlocks(lr.rdd, blocking = false)

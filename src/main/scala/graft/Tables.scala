@@ -15,12 +15,15 @@ import org.apache.spark.sql.functions._
   * precision issues (events.ts is nanosecond parquet).
   *
   * Scale notes (100 TB design): all per-series operators partition by
-  * `symbol`, so Spark parallelizes across series natively. [[series]]
-  * (and so [[bars]]) is hash-partitioned on `symbol` at the source
-  * ([[graft.ta.SeriesOps.bySeries]]): one shuffle, reused by every
-  * downstream window, pattern and typed fold in the same plan, and kept
-  * at the session's shuffle partition count (adaptive execution does not
-  * coalesce it).
+  * `symbol`, so Spark parallelizes across series natively. [[series]] and
+  * [[bars]] themselves are a scan plus per-row projections, with no
+  * shuffle: each per-series operator brings its own exchange. The typed
+  * folds and the Align fill use the series partitioning
+  * ([[graft.ta.SeriesOps.bySeries]], a fixed hash partitioning that
+  * adaptive execution does not coalesce); Column windows use the
+  * window's own exchange, one per distinct window partitioning in a
+  * plan. A reader that never partitions by `symbol` (a grid or as-of
+  * join, a `limit(1)` warm-up) scans without shuffling.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -86,19 +89,15 @@ object Tables {
     * STRING `user_id`) fails at read time, where an inferred read
     * would have accepted it.
     *
-    * The frame comes out in the series partitioning
-    * ([[graft.ta.SeriesOps.bySeries]]): every per-series operator over
-    * it rides this one exchange instead of adding its own. Even a
-    * `limit(1)` read (the harness warm-ups) goes through the shuffle.
+    * The frame carries no partitioning (see the scale notes above).
     */
   def series(spark: SparkSession, dir: String): DataFrame = {
     pinSessionConf(spark)
-    graft.ta.SeriesOps.bySeries(
-      spark.read.schema(SeriesColumns).parquet(s"$dir/events.parquet").select(
-        concat(col("event_type"), lit("_"),
-          (col("user_id") % SymbolBuckets).cast("string")).as("symbol"),
-        col("event_id").as("ord"),
-        col("value").as("close")))
+    spark.read.schema(SeriesColumns).parquet(s"$dir/events.parquet").select(
+      concat(col("event_type"), lit("_"),
+        (col("user_id") % SymbolBuckets).cast("string")).as("symbol"),
+      col("event_id").as("ord"),
+      col("value").as("close"))
   }
 
   /** The `events` columns [[series]] reads. */
@@ -111,8 +110,7 @@ object Tables {
     * long bodies (up to ±20%), zero and long shadows, and up/down gaps
     * versus the (i.i.d.) previous close. The DuckDB oracle (Sql.bars)
     * recomputes the identical derivation with the same IEEE expression
-    * structure, so comparisons are bit-exact. A per-row projection of
-    * [[series]], so it keeps the series partitioning.
+    * structure, so comparisons are bit-exact.
     */
   def bars(spark: SparkSession, dir: String): DataFrame = {
     // Prime denominators keep derived prices non-terminating in decimal, so

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
   * `SeriesOps.groupsBySeries(symbol).flatMapGroups`, so a universe of
   * symbols backtests in one shuffle with each symbol's fold sequential
   * (as it must be) and symbols embarrassingly parallel across executors.
-  * That shuffle is the series partitioning ([[SeriesOps.bySeries]]): a
-  * signal frame derived from `bars` already has it, so the fold adds no
-  * exchange.
+  * That shuffle is the series partitioning ([[SeriesOps.bySeries]]), a
+  * fixed hash partitioning adaptive execution does not coalesce; a
+  * signal frame already partitioned that way is not shuffled again.
   *
   * Fill semantics (faithful to the reference):
   *   - buy only when flat: deploy equity·positionSize at price+buySlippage,

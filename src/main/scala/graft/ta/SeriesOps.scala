@@ -12,21 +12,25 @@ import org.apache.spark.sql.types._
   * order-dependent state machines (SURVEY.md §7.2): one shuffle on the
   * series key, then embarrassingly parallel sequential folds.
   *
-  * Partitioning contract: every per-series stage in graft (this fold,
-  * [[graft.bt.Vectorized]], [[graft.bt.Sequential.runPortfolios]], the
-  * [[graft.etl.Align]] fill window, and every Column window over
-  * [[graft.Tables.bars]]) runs on [[bySeries]]'s partitioning, a fixed
-  * hash partitioning on the series key into the session's shuffle
-  * partition count. Adaptive execution never coalesces such a
-  * repartition, so a small universe still runs one task per core rather
-  * than one task in all (AQE will not make a coalesced partition smaller
-  * than `coalescePartitions.minPartitionSize`, 1 MB). A frame that is
-  * already partitioned that way (everything derived from `bars`) is not
-  * shuffled again: the planner drops a repartition whose child already
-  * has the same hash partitioning. The typed folds group on the key
-  * COLUMN ([[groupsBySeries]]), not on a key lambda, so no
-  * `AppendColumns` deserializes each row just to read its key, and the
-  * grouping can reuse the series exchange.
+  * Partitioning contract: the typed per-series stages in graft (this
+  * fold, [[graft.bt.Vectorized]], [[graft.bt.Sequential.runPortfolios]])
+  * and the [[graft.etl.Align]] fill window run on [[bySeries]]'s
+  * partitioning, a fixed hash partitioning on the series key into the
+  * session's shuffle partition count. Adaptive execution never coalesces
+  * such a repartition, so a small universe still runs one task per core
+  * rather than one task in all (AQE will not make a coalesced partition
+  * smaller than `coalescePartitions.minPartitionSize`, 1 MB). A frame
+  * that is already partitioned that way is not shuffled again: the
+  * planner drops a repartition whose child already has the same hash
+  * partitioning. The sources ([[graft.Tables.series]]/`bars`) carry no
+  * partitioning, so a reader that never groups by series pays no
+  * shuffle, and Column windows keep Spark's own window exchange. The
+  * typed folds group on the key COLUMN ([[groupsBySeries]]), not on a
+  * key lambda, so no `AppendColumns` deserializes each row just to read
+  * its key, and the grouping reuses the series exchange. (Not when the
+  * key is a literal, e.g. `lit("p0")` as the portfolio: the optimizer
+  * folds it into the repartition, and the grouping adds its own
+  * exchange.)
   *
   * Scale: one series' full history is materialized on one executor —
   * correct for daily/bar-level data (thousands of rows per key, millions of
@@ -44,7 +48,7 @@ object SeriesOps {
     * partition count Spark's own exchanges start from
     * (`SQLConf.numShufflePartitions`: `spark.sql.shuffle.partitions`, or
     * AQE's initial partition number when one is set). */
-  def bySeries(df: DataFrame, key: String = "symbol"): DataFrame =
+  def bySeries(df: DataFrame, key: String): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(key))
 
   /** [[bySeries]], grouped on the (string) `key` column itself; each

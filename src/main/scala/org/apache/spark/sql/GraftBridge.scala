@@ -13,9 +13,12 @@ object GraftBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   /** An input type accepting any of `types` (for ExpectsInputTypes). */
   def anyOf(types: AbstractDataType*): AbstractDataType = TypeCollection(types: _*)
-  /** Drop `rdd`'s stored blocks: `RDD.unpersist` without its per-call
-    * WARN for a locally checkpointed RDD, for callers that free a
-    * checkpoint only once nothing will scan it again. */
+  /** Drop `rdd`'s stored blocks and its entry in the context's
+    * persistent set, without the WARN `RDD.unpersist` logs for a
+    * locally checkpointed RDD. Unlike `RDD.unpersist` it does NOT reset
+    * the RDD's storage level: `rdd.getStorageLevel` still reports the
+    * level the blocks had. So the RDD must never be persisted or
+    * scanned again; only a checkpoint nothing will read qualifies. */
   def freeBlocks(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking)
 }

@@ -870,7 +870,11 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def shuffles(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
     nodes.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
 
-  test("Recursive.multi over bars plans ONE exchange: the source's fixed series partitioning") {
+  test("bars plans no exchange: a reader that never groups by series scans without a shuffle") {
+    assert(countShuffleExchanges(Tables.bars(spark, eventsDir)) == 0)
+  }
+
+  test("Recursive.multi over bars plans ONE exchange: the fold's fixed series partitioning") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val kernels: Seq[(String, Array[Array[Double]] => Array[Double])] =
@@ -878,7 +882,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nodes = nodesAfterRun(
       graft.ta.Recursive.multi(Tables.bars(spark, eventsDir), Seq("close"), kernels))
     val ex = shuffles(nodes)
-    assert(ex.size == 1, s"the fold must ride the source exchange: $ex")
+    assert(ex.size == 1, s"the fold must plan exactly one exchange: $ex")
     assert(ex.head.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM,
       s"the series exchange is a fixed repartition: ${ex.head.shuffleOrigin}")
     ex.head.outputPartitioning match {
@@ -888,7 +892,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!hasAppendColumns(nodes), "the fold groups on the key column, not a key lambda")
   }
 
-  test("Frames + Patterns over bars add no exchange beyond the source one") {
+  test("Frames + Patterns over bars share one window exchange") {
     implicit val w: org.apache.spark.sql.expressions.WindowSpec =
       org.apache.spark.sql.expressions.Window.partitionBy("symbol").orderBy("ord")
     val df = Tables.bars(spark, eventsDir).select(col("symbol"), col("ord"),
@@ -903,7 +907,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       (col("ord") % 7 === 3).as("sell_sig"))
     val vec = nodesAfterRun(graft.bt.Vectorized.summaryVsPrice(sig))
     assert(!hasAppendColumns(vec))
-    assert(shuffles(vec).size == 1, "the vectorized fold must ride the source exchange")
+    assert(shuffles(vec).size == 1, "the vectorized fold plans exactly one exchange")
     val pf = Tables.bars(spark, eventsDir)
       .select(concat(lit("P"), (col("ord") % 2).cast("string")).as("portfolio"),
         col("symbol"), col("ord"), col("close"))
@@ -917,10 +921,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // AQE will not coalesce below 1 MB per partition, so an
     // ENSURE_REQUIREMENTS exchange of this frame would read as ONE
     // partition; the fixed series repartition keeps all four
-    implicit val w: org.apache.spark.sql.expressions.WindowSpec =
-      org.apache.spark.sql.expressions.Window.partitionBy("symbol").orderBy("ord")
-    val df = Tables.bars(spark, eventsDir)
-      .select(col("symbol"), col("ord"), graft.ta.Frames.sma(col("close"), 5).as("sma5"))
+    val kernels: Seq[(String, Array[Array[Double]] => Array[Double])] =
+      Seq("ema5" -> (a => graft.ta.Kernels.ema(a(0), 5)))
+    val df = graft.ta.Recursive.multi(Tables.bars(spark, eventsDir), Seq("close"), kernels)
     val reads = nodesAfterRun(df).collect {
       case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec => r
     }
