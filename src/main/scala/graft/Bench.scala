@@ -59,33 +59,11 @@ object Bench {
     // scale audit). Captured OUTSIDE the timed region — the counter is
     // read after the wall clock stops, so the drain's listener-bus wait
     // never inflates a query's recorded seconds (only sweep wall).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    // a named listener instance: removed on exit so a second main() call
-    // in the same JVM can't double-count every task
-    val shuffleListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(shuffleListener)
-    // drain until the listener bus is CONFIRMED quiet (4 stable reads),
-    // with a cap generous enough that late TaskEnd events from query N
-    // can't leak into query N+1's counter under post-sweep bus lag — the
-    // 2 s cap this replaces was measurably crossable right after the
-    // align family's multi-GB shuffles
-    def drained(): Long = {
-      var last = -1L; var stable = 0; var waited = 0
-      while (stable < 4 && waited < 10000) {
-        Thread.sleep(25); waited += 25
-        val cur = shuffleBytes.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      shuffleBytes.get()
-    }
+    val counter = new TaskCounter(spark)
     val shuffleMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     val timings = toRun.map { case (name, fn) =>
-      drained(); shuffleBytes.set(0)
+      counter.reset()
       val t0 = System.nanoTime()
       // noop sink, NOT .count(): count() lets Catalyst prune every column
       // a projection computes — a pure-projection query was timed as its
@@ -114,7 +92,7 @@ object Bench {
       // timed region, like the shuffle drain: per-query timing
       // methodology is unchanged.
       graft.queries.Present.releaseBarriers()
-      shuffleMb(name) = math.rint(drained() / 1e6 * 100) / 100
+      shuffleMb(name) = math.rint(counter.shuffleWriteBytes / 1e6 * 100) / 100
       name -> wall
     }
     if (args.nonEmpty) timings.foreach { case (n, t) =>
@@ -163,7 +141,7 @@ object Bench {
       writeFull(s"BENCH_FULL_${sfTag}_c$cpus.json")
       if (cpus == "32") writeFull("BENCH_FULL.json")
     }
-    spark.sparkContext.removeSparkListener(shuffleListener)
+    counter.close()
     spark.stop()
   }
 }

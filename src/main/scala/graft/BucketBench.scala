@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -26,23 +25,7 @@ object BucketBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    // TaskEnd events ride the async listener bus; poll until the counter
-    // stops moving before reading it (same discipline as SkewBench).
-    def drained(): Long = {
-      var last = -1L; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 3000) {
-        Thread.sleep(100); waited += 100
-        val cur = shuffleBytes.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      shuffleBytes.get()
-    }
+    val counter = new TaskCounter(spark)
 
     val n = args.headOption.map(_.toLong).getOrElse(20_000_000L)
     val users = 100_000L
@@ -61,11 +44,11 @@ object BucketBench {
 
     def run(what: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       df.select(sum(col("value") + col("dimv"))).collect() // warm-up
-      drained(); shuffleBytes.set(0)
+      counter.reset()
       val t0 = System.nanoTime()
       val s = df.select(sum(col("value") + col("dimv"))).collect()(0).getDouble(0)
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[bucket] $what%-24s wall ${wall}%6.2f s   shuffle-write ${drained() / 1e6}%8.2f MB   checksum $s%.3f")
+      println(f"[bucket] $what%-24s wall ${wall}%6.2f s   shuffle-write ${counter.shuffleWriteBytes / 1e6}%8.2f MB   checksum $s%.3f")
     }
 
     run("plain parquet join") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -28,31 +27,17 @@ object GramBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    def drained(): Long = {
-      var last = -1L; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 3000) {
-        Thread.sleep(100); waited += 100
-        val cur = shuffleBytes.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      shuffleBytes.get()
-    }
+    val counter = new TaskCounter(spark)
 
     val docs = Tables.documents(spark, dir)
 
     def run(what: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       df.count() // warm-up (tables, JVM, and any driver-side plan collect)
-      drained(); shuffleBytes.set(0)
+      counter.reset()
       val t0 = System.nanoTime()
       val n = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[gram] $what%-28s wall ${wall}%6.2f s   shuffle-write ${drained() / 1e6}%8.2f MB   rows $n%d")
+      println(f"[gram] $what%-28s wall ${wall}%6.2f s   shuffle-write ${counter.shuffleWriteBytes / 1e6}%8.2f MB   rows $n%d")
     }
 
     run("sf frequent_spans direct") {

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Z-order layout evidence (the SkewBench/BucketBench convention:
   * correctness lives in the registered `zorder_prune` gate, the physics
@@ -121,10 +120,7 @@ object LayoutBench {
       val compacted = Layout.zOrderMaintain(spark, lp, zc, st,
         smallFileBytes = residentMin)
       val wMaintain = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      Layout.manifestUpdate(spark, lp, zc)
-      val wUpd2 = (System.nanoTime() - t0) / 1e9
-      println(f"[lifecycle x$mult] maintain: compacted $compacted%4d files -> ${live().length}%4d live   wall $wMaintain%6.2f s   manifest reconcile $wUpd2%5.2f s")
+      println(f"[lifecycle x$mult] maintain: compacted $compacted%4d files -> ${live().length}%4d live   wall $wMaintain%6.2f s (manifest included)")
       needle(spark.read.parquet(lp), "maintained")
       // the honest comparator: what a FULL re-cluster of the table costs
       val fullPath = s"$out/events_zorder_full_rw.parquet"
@@ -140,10 +136,7 @@ object LayoutBench {
       val (dropped, rewritten) = Layout.zOrderDelete(spark, lp, zc, st,
         "user_id", Seq(700L, 701L, 702L))
       val wDel = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      Layout.manifestUpdate(spark, lp, zc)
-      val wUpd3 = (System.nanoTime() - t0) / 1e9
-      println(f"[lifecycle x$mult] forget: dropped $dropped%d rows, rewrote $rewritten%d/${live().length}%d files   wall $wDel%6.2f s   manifest reconcile $wUpd3%5.2f s")
+      println(f"[lifecycle x$mult] forget: dropped $dropped%d rows, rewrote $rewritten%d/${live().length}%d files   wall $wDel%6.2f s (manifest included)")
       needle(spark.read.parquet(lp), "forgotten")
       // ---- Θ(batch) LOGICAL forgetting (zOrderForget): the same
       // per-user takedown shape, but the batch lands in the _tombstones
@@ -164,7 +157,7 @@ object LayoutBench {
       println(f"[lifecycle x$mult] forget-fold: rewrote $folded%d files   wall $wFold%6.2f s   tombstones cleared")
       needle(spark.read.parquet(lp), "fgt-folded")
       // ---- MERGE (zOrderUpsert): one user's history re-scored in ONE
-      // swap + ONE reconcile, vs the delete-then-append two-pass. Both
+      // commit, vs the delete-then-append two-pass. Both
       // batches stage to a scratch parquet first so their lineage never
       // reads files the mutation is about to rename away.
       val scratch = s"$out/upsert_batch.parquet"
@@ -187,7 +180,7 @@ object LayoutBench {
       Layout.zOrderAppend(batch2, zc, lp, st)
       Layout.manifestUpdate(spark, lp, zc)
       val wDelApp = (System.nanoTime() - t0) / 1e9
-      println(f"[lifecycle x$mult] upsert comparator (delete-then-append): wall $wDelApp%6.2f s   (two swaps + reconcile)")
+      println(f"[lifecycle x$mult] upsert comparator (delete-then-append): wall $wDelApp%6.2f s   (two commits + reconcile)")
       fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
       fs.delete(new org.apache.hadoop.fs.Path(scratch2), true)
       spark.stop(); return

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -143,7 +142,7 @@ object ScaleBench {
       // ≥0.999 star at class-sized buckets → components → graph over
       // representatives; collapsePlanes left to the library's
       // DefaultCollapseBucket derivation, which lands on 16 planes at
-      // ×1000's 2M vectors — the value the recipe pinned by hand)
+      // ×1000's 2M vectors — the value the recipe used to pin explicitly)
       "knn_graph_collapsed" -> ((spark: SparkSession, dir: String) =>
         graft.pipeline.Similarity.knnGraphCollapsed(
           Tables.embeddings(spark, dir), k = 3, tables = 4, dim = 64)),
@@ -449,21 +448,7 @@ object ScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    def drained(): Long = {
-      var last = -1L; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        val cur = shuffleBytes.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      shuffleBytes.get()
-    }
+    val counter = new TaskCounter(spark)
 
     // _DONE doubles as a replica FORMAT marker: a format change bumps
     // ReplicaFormat and stale replicas regenerate instead of silently
@@ -497,7 +482,7 @@ object ScaleBench {
 
     queries.foreach { name =>
       val fn = ExtraQueries.getOrElse(name, SparkEntry.queries(name))
-      drained(); shuffleBytes.set(0)
+      counter.reset()
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, out)
@@ -516,7 +501,7 @@ object ScaleBench {
             }
           }
         val wall = (System.nanoTime() - t0) / 1e9
-        println(f"[scale x$mult] $name%-22s wall ${wall}%7.2f s   shuffle-write ${drained() / 1e6}%9.2f MB$recallNote")
+        println(f"[scale x$mult] $name%-22s wall ${wall}%7.2f s   shuffle-write ${counter.shuffleWriteBytes / 1e6}%9.2f MB$recallNote")
       } catch { case e: Throwable =>
         println(s"[scale x$mult] $name FAILED: ${e.toString.linesIterator.next()}")
       }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -27,11 +26,7 @@ object SkewBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        maxTaskMs.getAndUpdate(m => math.max(m, te.taskInfo.duration))
-    })
+    val counter = new TaskCounter(spark)
 
     val n = args.headOption.map(_.toLong).getOrElse(20_000_000L)
     // 60% of the big side on key 0, the rest uniform over 999 other keys
@@ -41,27 +36,14 @@ object SkewBench {
     def small = spark.range(1000).select(col("id").as("key"),
       (col("id") * 3).as("dimv"))
 
-    // TaskEnd events arrive on the ASYNC listener bus — the straggler's
-    // event can land after collect() unblocks. Poll until the max stops
-    // moving before reading or resetting it.
-    def drained(): Long = {
-      var last = -1L; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 3000) {
-        Thread.sleep(100); waited += 100
-        val cur = maxTaskMs.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      maxTaskMs.get()
-    }
-
     def run(what: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       // warm-up pass absorbs codegen/scheduler one-time cost, then measure
       df.select(sum(col("payload") + col("dimv"))).collect()
-      drained(); maxTaskMs.set(0)
+      counter.reset()
       val t0 = System.nanoTime()
       val s = df.select(sum(col("payload") + col("dimv"))).collect()(0).getLong(0)
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[skew] $what%-28s wall ${wall}%6.2f s   max-task ${drained() / 1000.0}%6.2f s   checksum $s")
+      println(f"[skew] $what%-28s wall ${wall}%6.2f s   max-task ${counter.longestTaskMs / 1000.0}%6.2f s   checksum $s")
     }
 
     run("unsalted join")(big.join(small, Seq("key")))

@@ -160,9 +160,11 @@ object Layout {
     * forgotten id is [[zOrderUpsert]]'s contract (it un-forgets the
     * batch ids), not a plain append. */
   def zOrderAppend(df: DataFrame, zCols: Seq[String], path: String,
-                   stats: ZStats, bits: Int = 16, numFiles: Int = 0): Unit =
+                   stats: ZStats, bits: Int = 16, numFiles: Int = 0): Unit = {
+    graft.Swap.recovered(df.sparkSession, path)
     zOrderedFrame(df, zCols, bits, numFiles, Some(stats))
       .write.mode("append").parquet(path)
+  }
 
   private def zOrderedFrame(df: DataFrame, zCols: Seq[String], bits: Int,
                             numFiles: Int, stats: Option[ZStats]): DataFrame = {
@@ -175,12 +177,17 @@ object Layout {
   }
 
   import org.apache.spark.sql.SparkSession
-  import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+  import graft.Swap
+
+  private val ManifestName = "_manifest"
+  private val TombName = "_tombstones"
 
   private def fsFor(spark: SparkSession, path: String): (FileSystem, HPath) = {
     val p = new HPath(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
+
 
   /** A live DATA file of the layout: skips Spark metadata (`_SUCCESS`),
     * sidecars (`_zstats`, `_manifest`) and any dot-hidden staging or
@@ -246,28 +253,19 @@ object Layout {
     * whose [min, max] interval can hold any tombstoned id, those files
     * join the victim set (resident files no tombstone touches still
     * never rewrite), their tombstoned rows drop from the staged rewrite,
-    * and the sidecar clears AFTER the swap (the dedupIndexCompact crash
-    * order: a crash between leaves tombstones over already-removed rows,
-    * and a mask that never matches is harmless — the next maintain
-    * clears them). Folding requires a COMPLETE `_manifest` (live files ⊆
+    * and the sidecar clears. Folding requires a COMPLETE `_manifest` (live files ⊆
     * manifest) so no file can smuggle a tombstoned row past the rewrite;
     * the pass refuses loudly otherwise.
     *
-    * Swap discipline (the [[graft.pipeline.Similarity]] cell-swap
-    * contract): staged files are fully written first, then every victim
-    * renames to a dot-hidden `.<name>.maintained`, then staged files
-    * promote into the root, then the hidden originals drop — every
-    * step's boolean checked, nothing deleted before its replacement
-    * exists, so ANY intermediate state is hand-recoverable (the rows
-    * live in the staging dir and/or the hidden files at all times).
-    * Readers racing the swap can see a partial file set — run
-    * maintenance in the same exclusion window as any lakehouse OPTIMIZE.
+    * The rewrite, the tombstone clear and the manifest of the new file
+    * set land in one [[graft.Swap]] commit: a crash at any step leaves
+    * either the old layout or, once the next mutating call rolls the
+    * commit forward, the new one. Readers racing the commit can see a
+    * partial file set — run maintenance in the same exclusion window as
+    * any lakehouse OPTIMIZE.
     *
     * Returns the number of files rewritten (0 = nothing to do: fewer
-    * than two small files and no tombstone touches any file). When a
-    * `_manifest` exists it reconciles in place after the swap
-    * (Θ(new files)); calling [[manifestUpdate]] again is an idempotent
-    * no-op. */
+    * than two small files and no tombstone touches any file). */
   def zOrderMaintain(spark: SparkSession, path: String, zCols: Seq[String],
                      stats: ZStats, bits: Int = 16,
                      smallFileBytes: Long = 64L << 20,
@@ -276,13 +274,7 @@ object Layout {
       s"zOrderMaintain: targetFileBytes ($targetFileBytes) below " +
       s"smallFileBytes ($smallFileBytes) would re-emit files the next pass " +
       "calls small again — the compaction would never converge to a no-op")
-    val (fs, root) = fsFor(spark, path)
-    // refuse to run over the debris of an interrupted swap: .maintained
-    // files hold rows that are INVISIBLE to readers until an operator
-    // either un-hides them (their staged replacements never promoted) or
-    // drops them (promotion completed, only the drop step was lost) —
-    // compacting on top would entangle two recovery states
-    requireNoSwapDebris(fs, root)
+    val (fs, root) = Swap.recovered(spark, path)
     val small = dataFiles(fs, root).filter(_.getLen < smallFileBytes)
     // tombstone fold: the manifest names every file whose interval can
     // hold a tombstoned id — they rewrite alongside the small files and
@@ -291,14 +283,7 @@ object Layout {
     val tomb = loadTombstones(spark, path)
     val (affNames, survivorPred) = tomb match {
       case Some((idCol, ids)) =>
-        require(fs.exists(new HPath(s"$path/_manifest")),
-          "zOrderMaintain: _tombstones present but no _manifest — the fold " +
-          "names affected files from manifest intervals; run manifestRefresh first")
-        val manifest = readSidecar(spark, s"$path/_manifest")
-        requireManifestComplete(fs, root, manifest, "zOrderMaintain")
-        require(manifest.columns.contains(s"min_$idCol"),
-          s"zOrderMaintain: manifest does not track tombstone column $idCol")
-        (affectedFiles(manifest, idCol, ids).toSet,
+        (affectedFiles(keyedManifest(spark, path, idCol, "zOrderMaintain"), idCol, ids).toSet,
          Some(col(idCol).isNull || !col(idCol).isInCollection(ids)))
       case None => (Set.empty[String], None)
     }
@@ -306,70 +291,44 @@ object Layout {
     if (small.length <= 1 && affNames.isEmpty) {
       // every tombstoned id is already physically absent (the complete
       // manifest proves no file interval holds one) — safe to clear
-      if (tomb.isDefined) clearTombstones(spark, path)
+      if (tomb.isDefined) Swap.commit(fs, root, Seq(Swap.Move(TombName, None)))
       return 0
     }
     val victims = dataFiles(fs, root)
       .filter(s => victimNames(s.getPath.getName)).toIndexedSeq
-    val staging = new HPath(root, ".maint_staging")
-    if (fs.exists(staging)) require(fs.delete(staging, true),
-      s"zOrderMaintain: could not clear stale $staging")
     val numFiles = math.max(1L,
       (victims.map(_.getLen).sum + targetFileBytes - 1) / targetFileBytes).toInt
     val df0 = spark.read.parquet(victims.map(_.getPath.toString): _*)
     val df = survivorPred.map(df0.where).getOrElse(df0)
-    zOrderedFrame(df, zCols, bits, numFiles, Some(stats))
-      .write.mode("overwrite").parquet(staging.toString)
-    swapInStaged(fs, root, staging, victims)
-    if (tomb.isDefined) clearTombstones(spark, path)
-    manifestReconcile(spark, path)
+    swapIn(spark, path, victims,
+      zOrderedFrame(df, zCols, bits, numFiles, Some(stats)), tomb.map(_ => Nil))
     victims.length
   }
 
-  /** Refuse to run a swap over the debris of an interrupted one:
-    * `.maintained` files hold rows INVISIBLE to readers until an
-    * operator either un-hides them (their staged replacements never
-    * promoted) or drops them (promotion completed, only the drop step
-    * was lost) — a second swap on top would entangle two recovery
-    * states. */
-  private def requireNoSwapDebris(fs: FileSystem, root: HPath): Unit = {
-    val stale = fs.listStatus(root).filter(s => s.isFile
-      && s.getPath.getName.endsWith(".maintained"))
-    require(stale.isEmpty,
-      s"${stale.length} dot-hidden .maintained file(s) under " +
-      s"$root from an interrupted swap — if ${stale.headOption.map(_.getPath
-        .getName.stripSuffix(".maintained").stripPrefix(".")).getOrElse("")}'s " +
-      "replacement was promoted (new part files present), delete the hidden " +
-      "files; otherwise rename them back (strip the dot and suffix) before retrying")
-  }
-
-  /** The hide-promote-drop swap shared by [[zOrderMaintain]] and
-    * [[zOrderDelete]]: every victim renames to a dot-hidden
-    * `.<name>.maintained`, the staged part files promote into the root
-    * under their own names (per-write UUIDs — no collision with
-    * residents), then the hidden victims and the emptied staging dir
-    * drop. Every boolean checked; nothing is deleted before its
-    * replacement is in place, so ANY intermediate state is
-    * hand-recoverable (the rows live in staging and/or the hidden files
-    * at all times). */
-  private def swapInStaged(fs: FileSystem, root: HPath, staging: HPath,
-                           victims: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
-    val stagedParts = dataFiles(fs, staging)
-    val hidden = victims.map { s =>
-      val h = new HPath(root, s".${s.getPath.getName}.maintained")
-      require(fs.rename(s.getPath, h),
-        s"swapInStaged: rename ${s.getPath} -> $h failed (layout fully live)")
-      h
-    }
-    stagedParts.foreach { s =>
-      require(fs.rename(s.getPath, new HPath(root, s.getPath.getName)),
-        s"swapInStaged: promote ${s.getPath} failed (recover from $staging " +
-        "and the .maintained files)")
-    }
-    hidden.foreach(h => require(fs.delete(h, false),
-      s"swapInStaged: could not remove superseded $h"))
-    require(fs.delete(staging, true),
-      s"swapInStaged: could not remove emptied $staging")
+  /** Replace `victims` with `rewritten` in ONE [[graft.Swap]] commit,
+    * shared by [[zOrderMaintain]], [[zOrderDelete]] and [[zOrderUpsert]].
+    * The rewrite is staged first, and so is the `_manifest` of the
+    * post-swap file set when the layout keeps one (rows of surviving
+    * files carry over, only the new files are scanned). The commit then
+    * drops the victims and promotes the new files (per-write UUID names,
+    * no collision with residents), the manifest and, when given,
+    * `tombstones` as the new `_tombstones` content (empty drops the
+    * sidecar). So a crash never leaves data without its manifest, nor a
+    * shrunk mask over rows the rewrite has not yet replaced. */
+  private def swapIn(spark: SparkSession, path: String, victims: Seq[FileStatus],
+                     rewritten: DataFrame, tombstones: Option[Seq[Any]]): Unit = {
+    val (fs, root) = fsFor(spark, path)
+    val staged = new HPath(Swap.staging(root), "data")
+    rewritten.write.mode("overwrite").parquet(staged.toString)
+    val parts = dataFiles(fs, staged).toSeq
+    val gone = victims.map(_.getPath.getName).toSet
+    val manifest = manifestColumns(spark, path).map(cols => stageManifest(spark, path,
+      dataFiles(fs, root).filterNot(s => gone(s.getPath.getName)) ++ parts, cols, reuse = true))
+    Swap.commit(fs, root,
+      victims.map(v => Swap.Move(v.getPath.getName, None)) ++
+      parts.map(p => Swap.Move(p.getPath.getName,
+        Some(s"${Swap.StagingName}/data/${p.getPath.getName}"))) ++
+      tombstones.map(stageTombstones(spark, path, _)) ++ manifest)
   }
 
   /** Right-to-be-forgotten on the LAYOUT itself: drop `ids` (values of
@@ -378,11 +337,8 @@ object Layout {
     * manifest turns a takedown batch into a Θ(affected files) pass, the
     * same discipline ivfPqDelete's id sidecar buys the ANN index. The
     * affected files' survivors re-curve-order under the snapshot stats
-    * and swap in through the [[zOrderMaintain]] hide-promote-drop chain
-    * (every rename checked, nothing deleted before its replacement
-    * exists); untouched files never open. Run [[manifestUpdate]]
-    * afterwards (one Θ(new files) reconcile covers the dropped and
-    * added files).
+    * and replace them in one [[graft.Swap]] commit, together with the
+    * reconciled manifest; untouched files never open.
     *
     * Deletion is PHYSICAL and immediate — the strongest takedown
     * contract, at the cost of rewriting every affected file NOW; on
@@ -396,43 +352,56 @@ object Layout {
     * driver-side interval test per file). Requires a COMPLETE manifest
     * (live files ⊆ manifest) — a file landed since the last reconcile
     * could otherwise keep ids physically alive while the call reports
-    * success; the manifest reconciles in place after the swap. */
+    * success. */
   def zOrderDelete(spark: SparkSession, path: String, zCols: Seq[String],
                    stats: ZStats, idCol: String, ids: Seq[Any],
                    bits: Int = 16): (Long, Int) = {
     require(ids.nonEmpty, "zOrderDelete: give at least one id")
-    val (fs, root) = fsFor(spark, path)
-    requireNoSwapDebris(fs, root)
-    val manifest = readSidecar(spark, s"$path/_manifest")
-    requireManifestComplete(fs, root, manifest, "zOrderDelete")
-    val affected = affectedFiles(manifest, idCol, ids)
+    val affected = affectedStatus(spark, path, idCol, ids, "zOrderDelete")
     if (affected.isEmpty) return (0L, 0)
-    val affectedSet = affected.toSet
-    val affStatus = dataFiles(fs, root)
-      .filter(s => affectedSet(s.getPath.getName))
-    require(affStatus.length == affected.length,
-      s"zOrderDelete: manifest names ${affected.length} affected file(s) but " +
-      s"${affStatus.length} are on disk — reconcile with manifestUpdate first")
-    val staging = new HPath(root, ".delete_staging")
-    if (fs.exists(staging)) require(fs.delete(staging, true),
-      s"zOrderDelete: could not clear stale $staging")
     // persist between the dropped-count and the survivor rewrite — the
     // affected files would otherwise scan twice (the dedupIndexDelete
     // residency-probe lesson: measured ~2× on the read half)
-    val src = spark.read.parquet(
-        affStatus.map(_.getPath.toString).toIndexedSeq: _*)
+    val src = spark.read.parquet(affected.map(_.getPath.toString): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val dropped = src.where(col(idCol).isInCollection(ids)).count()
       // null-safe survivor predicate: a bare !isin evaluates to NULL for
       // null ids and would silently drop rows the batch never named
-      zOrderedFrame(src.where(col(idCol).isNull || !col(idCol).isInCollection(ids)),
-          zCols, bits, math.max(1, affStatus.length), Some(stats))
-        .write.mode("overwrite").parquet(staging.toString)
-      swapInStaged(fs, root, staging, affStatus.toIndexedSeq)
-      manifestReconcile(spark, path)
+      swapIn(spark, path, affected,
+        zOrderedFrame(src.where(col(idCol).isNull || !col(idCol).isInCollection(ids)),
+          zCols, bits, affected.length, Some(stats)), None)
       (dropped, affected.length)
     } finally src.unpersist()
+  }
+
+  /** The live files a keyed mutation ([[zOrderDelete]], [[zOrderUpsert]])
+    * rewrites: those whose manifest interval on `idCol` can hold any of
+    * `ids`. Rolls an interrupted commit forward first. */
+  private def affectedStatus(spark: SparkSession, path: String, idCol: String,
+                             ids: Seq[Any], op: String): IndexedSeq[FileStatus] = {
+    val (fs, root) = Swap.recovered(spark, path)
+    val names = affectedFiles(keyedManifest(spark, path, idCol, op), idCol, ids).toSet
+    val affected = dataFiles(fs, root).filter(s => names(s.getPath.getName)).toIndexedSeq
+    require(affected.length == names.size,
+      s"$op: manifest names ${names.size} affected file(s) but " +
+      s"${affected.length} are on disk — run manifestUpdate first")
+    affected
+  }
+
+  /** The `_manifest` a keyed rewrite names its affected files from: it
+    * must exist, be complete and track `idCol`. */
+  private def keyedManifest(spark: SparkSession, path: String, idCol: String,
+                            op: String): DataFrame = {
+    val (fs, root) = fsFor(spark, path)
+    require(fs.exists(new HPath(root, ManifestName)),
+      s"$op: no _manifest — affected files are named from manifest " +
+      "intervals; run manifestRefresh first")
+    val manifest = readSidecar(spark, s"$path/$ManifestName")
+    requireManifestComplete(fs, root, manifest, op)
+    require(manifest.columns.contains(s"min_$idCol"),
+      s"$op: manifest does not track id column $idCol")
+    manifest
   }
 
   /** The driver-side interval test shared by [[zOrderDelete]],
@@ -466,17 +435,15 @@ object Layout {
       "cannot name them as affected; run manifestUpdate first")
   }
 
-  /** Reconcile `_manifest` in place when one exists, deriving the
-    * tracked columns from the manifest's own schema (the min_<col>
-    * fields) — what lets every mutating op leave the manifest current
-    * without threading the column list through application state. No-op
+  /** The columns `_manifest` tracks, from its own schema (the min_<col>
+    * fields) — what lets every mutating op keep the manifest current
+    * without threading the column list through application state. None
     * when the layout carries no manifest. */
-  def manifestReconcile(spark: SparkSession, path: String): Unit = {
-    val (fs, _) = fsFor(spark, path)
-    if (!fs.exists(new HPath(s"$path/_manifest"))) return
-    val cols = readSidecar(spark, s"$path/_manifest").schema.fieldNames
-      .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toIndexedSeq
-    manifestUpdate(spark, path, cols)
+  private def manifestColumns(spark: SparkSession, path: String): Option[Seq[String]] = {
+    val (fs, root) = fsFor(spark, path)
+    if (!fs.exists(new HPath(root, ManifestName))) None
+    else Some(readSidecar(spark, s"$path/$ManifestName").schema.fieldNames
+      .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toIndexedSeq)
   }
 
   // ---------------------------------------------------------------------
@@ -491,8 +458,8 @@ object Layout {
     * through [[readLayout]] / [[readPruned]] masks them with a null-safe
     * anti filter, and the NEXT [[zOrderMaintain]] folds accumulated
     * tombstones into the compaction rewrite it already pays (only
-    * manifest-named affected files rewrite; the sidecar clears after the
-    * swap). Nothing table-proportional moves at forget time — on the
+    * manifest-named affected files rewrite; the sidecar clears in the
+    * same commit). Nothing table-proportional moves at forget time — on the
     * curve-adversarial per-user takedown shape where [[zOrderDelete]]
     * rewrites ~40% of a compacted layout, this writes one batch-sized
     * file.
@@ -506,7 +473,7 @@ object Layout {
   def zOrderForget(spark: SparkSession, path: String, idCol: String,
                    ids: Seq[Any]): Long = {
     require(ids.nonEmpty, "zOrderForget: give at least one id")
-    val (fs, root) = fsFor(spark, path)
+    val (fs, root) = Swap.recovered(spark, path)
     val existing = loadTombstones(spark, path)
     existing.foreach { case (c, _) => require(c == idCol,
       s"zOrderForget: _tombstones is keyed on $c, not $idCol") }
@@ -530,11 +497,11 @@ object Layout {
     // append-only sidecar write: a crash mid-append loses at most THIS
     // batch (caller retries), never the resident tombstones
     val dt = spark.read.parquet(path).schema(idCol).dataType
-    writeTombstoneRows(spark, path, idCol, dt, fresh, append = true)
+    writeTombstoneRows(spark, tombDir(path), idCol, dt, fresh, append = true)
     resident
   }
 
-  private def tombDir(path: String) = s"$path/_tombstones"
+  private def tombDir(path: String) = s"$path/$TombName"
 
   /** The `_tombstones` sidecar's content: (id column name, distinct
     * ids). None when the sidecar is absent or empty. Collect is
@@ -552,7 +519,7 @@ object Layout {
     if (vals.isEmpty) None else Some((idCol, vals))
   }
 
-  private def writeTombstoneRows(spark: SparkSession, path: String,
+  private def writeTombstoneRows(spark: SparkSession, dir: String,
                                  idCol: String,
                                  dt: org.apache.spark.sql.types.DataType,
                                  vals: Seq[Any], append: Boolean): Unit = {
@@ -561,18 +528,24 @@ object Layout {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(
         vals.map(org.apache.spark.sql.Row(_)), 1), schema)
-    df.write.mode(if (append) "append" else "overwrite")
-      .parquet(tombDir(path))
+    df.write.mode(if (append) "append" else "overwrite").parquet(dir)
   }
 
-  /** Drop the `_tombstones` sidecar entirely — the post-fold steady
-    * state: an absent sidecar means [[maskForgotten]] is a no-op and
-    * reads pay nothing (the empty-set lesson from the dedup probes). */
-  private def clearTombstones(spark: SparkSession, path: String): Unit = {
-    val (fs, root) = fsFor(spark, tombDir(path))
-    if (fs.exists(root)) require(fs.delete(root, true),
-      s"clearTombstones: could not remove $root")
-  }
+  /** The commit move that makes `keep` the `_tombstones` content, staged
+    * in the sidecar's own column and type. An empty `keep` drops the
+    * sidecar — the post-fold steady state: an absent sidecar means
+    * [[maskForgotten]] is a no-op and reads pay nothing (the empty-set
+    * lesson from the dedup probes). */
+  private def stageTombstones(spark: SparkSession, path: String,
+                              keep: Seq[Any]): Swap.Move =
+    if (keep.isEmpty) Swap.Move(TombName, None)
+    else {
+      val (_, root) = fsFor(spark, path)
+      val field = spark.read.parquet(tombDir(path)).schema.head
+      writeTombstoneRows(spark, new HPath(Swap.staging(root), TombName).toString,
+        field.name, field.dataType, keep, append = false)
+      Swap.Move(TombName, Some(s"${Swap.StagingName}/$TombName"))
+    }
 
   /** Apply the layout's tombstone mask to `df` (normally a read of the
     * layout itself): forgotten ids drop through a null-safe anti filter —
@@ -609,15 +582,15 @@ object Layout {
     * id are superseded by the batch's rows (the classic keyed upsert
     * when the batch carries one row per id; replace-the-id's-history in
     * general). The manifest names the affected files; their survivors,
-    * the updated rows, and the inserted rows curve-order together
-    * through the existing staged swap — untouched files never open, and
-    * the whole MERGE is one swap + one manifest reconcile instead of
-    * the delete-then-append two-pass (two swaps, two reconciles).
+    * the updated rows, and the inserted rows curve-order together and
+    * replace the affected files in one [[graft.Swap]] commit — untouched
+    * files never open, and the whole MERGE is one commit instead of the
+    * delete-then-append two-pass.
     *
     * Upserted ids also leave the `_tombstones` sidecar (an id forgotten
-    * yesterday and re-ingested today is live again) — the sidecar
-    * shrink rides the same checked rename chain as the manifest, so a
-    * crash never widens the mask.
+    * yesterday and re-ingested today is live again). The shrunk sidecar
+    * rides the same commit as the rows that replace the forgotten ones,
+    * so a crash never shows a forgotten id's old rows.
     *
     * Returns (resident rows superseded, batch rows written, files
     * rewritten). Batch-sized `batch` by contract (its ids drive the
@@ -627,91 +600,33 @@ object Layout {
   def zOrderUpsert(spark: SparkSession, path: String, zCols: Seq[String],
                    stats: ZStats, idCol: String, batch: DataFrame,
                    bits: Int = 16): (Long, Long, Int) = {
-    val (fs, root) = fsFor(spark, path)
-    requireNoSwapDebris(fs, root)
-    require(fs.exists(new HPath(s"$path/_manifest")),
-      "zOrderUpsert: no _manifest — the MERGE names affected files from " +
-      "manifest intervals; run manifestRefresh first")
-    val manifest = readSidecar(spark, s"$path/_manifest")
-    requireManifestComplete(fs, root, manifest, "zOrderUpsert")
-    require(manifest.columns.contains(s"min_$idCol"),
-      s"zOrderUpsert: manifest does not track id column $idCol")
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val ids = b.select(col(idCol)).distinct().collect().map(_.get(0)).toIndexedSeq
       require(ids.nonEmpty, "zOrderUpsert: empty batch")
       require(!ids.contains(null), "zOrderUpsert: batch carries null ids — MERGE is keyed")
       val written = b.count()
+      val affected = affectedStatus(spark, path, idCol, ids, "zOrderUpsert")
       // un-forget: a tombstoned id the batch re-ingests must be live
-      existingMinus(spark, path, idCol, ids.toSet)
-      val affected = affectedFiles(manifest, idCol, ids)
-      if (affected.isEmpty) {
-        // pure insert — no resident file can hold any batch id
-        zOrderAppend(b, zCols, path, stats, bits)
-        manifestReconcile(spark, path)
-        (0L, written, 0)
-      } else {
-        val affectedSet = affected.toSet
-        val affStatus = dataFiles(fs, root)
-          .filter(s => affectedSet(s.getPath.getName)).toIndexedSeq
-        require(affStatus.length == affected.length,
-          s"zOrderUpsert: manifest names ${affected.length} affected file(s) " +
-          s"but ${affStatus.length} are on disk — run manifestUpdate first")
-        val staging = new HPath(root, ".upsert_staging")
-        if (fs.exists(staging)) require(fs.delete(staging, true),
-          s"zOrderUpsert: could not clear stale $staging")
-        val src = spark.read.parquet(affStatus.map(_.getPath.toString): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val superseded = src.where(col(idCol).isInCollection(ids)).count()
-          val survivors = src.where(
-            col(idCol).isNull || !col(idCol).isInCollection(ids))
-          zOrderedFrame(
-              survivors.unionByName(b.select(src.columns.map(col): _*)),
-              zCols, bits, math.max(1, affStatus.length), Some(stats))
-            .write.mode("overwrite").parquet(staging.toString)
-          swapInStaged(fs, root, staging, affStatus)
-          manifestReconcile(spark, path)
-          (superseded, written, affStatus.length)
-        } finally src.unpersist()
+      val tombstones = loadTombstones(spark, path).flatMap { case (tCol, tIds) =>
+        require(tCol == idCol, s"zOrderUpsert: _tombstones is keyed on $tCol, not $idCol")
+        val keep = tIds.filterNot(ids.toSet)
+        if (keep.length == tIds.length) None else Some(keep)
       }
+      // no affected file: a pure insert, the batch alone is staged
+      val src = if (affected.isEmpty) None
+        else Some(spark.read.parquet(affected.map(_.getPath.toString): _*)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      try {
+        val superseded = src.map(_.where(col(idCol).isInCollection(ids)).count()).getOrElse(0L)
+        val rows = src.map(s => s.where(col(idCol).isNull || !col(idCol).isInCollection(ids))
+          .unionByName(b.select(s.columns.map(col): _*))).getOrElse(b)
+        swapIn(spark, path, affected,
+          zOrderedFrame(rows, zCols, bits, affected.length, Some(stats)), tombstones)
+        (superseded, written, affected.length)
+      } finally src.foreach(_.unpersist())
     } finally b.unpersist()
   }
-
-  /** Shrink the tombstone sidecar by `drop` ids, through the checked
-    * rename chain (staged → hide live → promote → drop): a crash at any
-    * step leaves either the full old mask or the full new one — never a
-    * window where forgotten ids resurrect. */
-  private def existingMinus(spark: SparkSession, path: String, idCol: String,
-                            drop: Set[Any]): Unit =
-    loadTombstones(spark, path).foreach { case (tCol, tIds) =>
-      require(tCol == idCol,
-        s"zOrderUpsert: _tombstones is keyed on $tCol, not $idCol")
-      val keep = tIds.filterNot(drop)
-      if (keep.length != tIds.length) {
-        if (keep.isEmpty) clearTombstones(spark, path)
-        else {
-          val (fs, live) = fsFor(spark, tombDir(path))
-          val dt = spark.read.parquet(tombDir(path)).schema(tCol).dataType
-          val staged = new HPath(s"$path/.tombstones_staged")
-          val old = new HPath(s"$path/.tombstones_old")
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(tCol, dt, nullable = false)))
-          spark.createDataFrame(
-              spark.sparkContext.parallelize(
-                keep.map(org.apache.spark.sql.Row(_)), 1), schema)
-            .coalesce(1).write.mode("overwrite").parquet(staged.toString)
-          if (fs.exists(old)) require(fs.delete(old, true),
-            s"existingMinus: could not clear stale $old")
-          require(fs.rename(live, old),
-            s"existingMinus: rename $live -> $old failed (mask fully live)")
-          require(fs.rename(staged, live),
-            s"existingMinus: promote $staged failed (recover from $old)")
-          require(fs.delete(old, true),
-            s"existingMinus: could not remove the superseded $old")
-        }
-      }
-    }
 
   /** A FILE-LEVEL min/max manifest for a layout — the sidecar that makes
     * file pruning a driver-side lookup instead of a footer read per
@@ -729,34 +644,47 @@ object Layout {
     * posture). [[manifestUpdate]] reconciles incrementally: stats
     * compute ONLY for files the manifest has never seen, rows of dead
     * files drop — Θ(new files), the daily-append posture; call it after
-    * [[zOrderAppend]] or [[zOrderMaintain]]. */
+    * [[zOrderAppend]]. [[zOrderMaintain]], [[zOrderDelete]] and
+    * [[zOrderUpsert]] reconcile the manifest in their own commit. */
   def manifestRefresh(spark: SparkSession, path: String,
-                      cols: Seq[String]): Unit = {
-    val (fs, root) = fsFor(spark, path)
-    writeManifest(spark, path, manifestRows(spark, path,
-      dataFiles(fs, root).map(_.getPath.toString).toIndexedSeq, cols))
-  }
+                      cols: Seq[String]): Unit = writeManifest(spark, path, cols, reuse = false)
 
   def manifestUpdate(spark: SparkSession, path: String,
-                     cols: Seq[String]): Unit = {
+                     cols: Seq[String]): Unit = writeManifest(spark, path, cols, reuse = true)
+
+  private def writeManifest(spark: SparkSession, path: String, cols: Seq[String],
+                            reuse: Boolean): Unit = {
+    val (fs, root) = Swap.recovered(spark, path)
+    Swap.commit(fs, root, Seq(stageManifest(spark, path, dataFiles(fs, root), cols, reuse)))
+  }
+
+  /** Stage the `_manifest` of a layout whose data files are `files`
+    * (live, or staged to promote under the same name), as a [[graft.Swap]]
+    * move. With `reuse`, rows the current manifest holds for those names
+    * carry over and only the other files are scanned — Θ(new files).
+    * The driver holds only file NAMES here (what any manifest system's
+    * listing already pays), never the stat rows: the surviving rows ride
+    * a broadcast semi-join straight from the old manifest parquet into
+    * the staged write, so the reconcile shuffles nothing and collects
+    * nothing row-shaped. The manifest is derived state; the data files
+    * are the truth. */
+  private def stageManifest(spark: SparkSession, path: String, files: Seq[FileStatus],
+                            cols: Seq[String], reuse: Boolean): Swap.Move = {
     import spark.implicits._
-    val (fs, root) = fsFor(spark, path)
-    // the driver holds only file NAMES here (what any manifest system's
-    // listing already pays), never the stat rows: the surviving rows
-    // ride a broadcast semi-join straight from the old manifest parquet
-    // into the staged write, so reconcile shuffles nothing and collects
-    // nothing row-shaped
-    val live = dataFiles(fs, root).map(_.getPath.getName)
-    val manifest = readSidecar(spark, s"$path/_manifest")
-    val prior = manifest.select("file").as[String].collect().toSet
-    val fresh = live.filterNot(prior).sorted.toIndexedSeq
-    val kept = manifest.join(
-      broadcast(live.toIndexedSeq.toDF("file")), Seq("file"), "left_semi")
-    val rows =
-      if (fresh.isEmpty) kept
-      else kept.unionByName(
-        manifestRows(spark, path, fresh.map(n => s"$path/$n"), cols))
-    writeManifest(spark, path, rows)
+    val (_, root) = fsFor(spark, path)
+    val names = files.map(_.getPath.getName)
+    val kept = if (!reuse) None else Some(readSidecar(spark, s"$path/$ManifestName")
+      .join(broadcast(names.toDF("file")), Seq("file"), "left_semi"))
+    val prior = kept.map(_.select("file").as[String].collect().toSet).getOrElse(Set.empty)
+    val fresh = files.filterNot(f => prior(f.getPath.getName)).map(_.getPath.toString)
+    val rows = kept match {
+      case Some(k) if fresh.isEmpty => k
+      case Some(k) => k.unionByName(manifestRows(spark, fresh, cols))
+      case None => manifestRows(spark, fresh, cols)
+    }
+    rows.coalesce(1).write.mode("overwrite")
+      .parquet(new HPath(Swap.staging(root), ManifestName).toString)
+    Swap.Move(ManifestName, Some(s"${Swap.StagingName}/$ManifestName"))
   }
 
   /** One row per file in `files`: (file, min_/max_/nulls_ per tracked
@@ -770,8 +698,8 @@ object Layout {
     * Manifests written before the nulls_ columns existed fail
     * [[manifestUpdate]]'s union loudly — [[manifestRefresh]] upgrades
     * them in one pass. */
-  private def manifestRows(spark: SparkSession, path: String,
-                           files: Seq[String], cols: Seq[String]): DataFrame = {
+  private def manifestRows(spark: SparkSession, files: Seq[String],
+                           cols: Seq[String]): DataFrame = {
     def legs(c: String): Seq[Column] = Seq(
       min(c).as(s"min_$c"), max(c).as(s"max_$c"),
       sum(col(c).isNull.cast("long")).as(s"nulls_$c"))
@@ -781,27 +709,6 @@ object Layout {
         +: cols.map(col): _*)
       .groupBy("file")
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  private def writeManifest(spark: SparkSession, path: String,
-                            rows: DataFrame): Unit = {
-    // the swapCellDir rename chain (live → .old → promote → drop), every
-    // boolean checked: a crash at any step leaves the rows at `.old`
-    // and/or the staging dir — recover by hand or just manifestRefresh
-    // (the manifest is derived state; the data files are the truth)
-    val (fs, _) = fsFor(spark, path)
-    val staged = new HPath(s"$path/.manifest_staged")
-    val live = new HPath(s"$path/_manifest")
-    val old = new HPath(s"$path/.manifest_old")
-    rows.coalesce(1).write.mode("overwrite").parquet(staged.toString)
-    if (fs.exists(old)) require(fs.delete(old, true),
-      s"writeManifest: could not clear stale $old")
-    if (fs.exists(live)) require(fs.rename(live, old),
-      s"writeManifest: rename $live -> $old failed (manifest fully live)")
-    require(fs.rename(staged, live),
-      s"writeManifest: promote $staged failed (recover from $old or refresh)")
-    if (fs.exists(old)) require(fs.delete(old, true),
-      s"writeManifest: could not remove the superseded $old")
   }
 
   /** An inclusive range predicate against the manifest: files whose
@@ -842,12 +749,11 @@ object Layout {
     * footer at a time); parquet row-group stats prune within the
     * survivors as always.
     *
-    * Consistency contract: the manifest is derived state reconciled by
-    * the mutating ops themselves, but a reader racing a [[writeManifest]]
-    * rename chain can hit the brief no-`_manifest` window, and one
-    * racing a maintenance swap can see a partial file set — run reads
-    * and maintenance in separate windows, the same exclusion any
-    * lakehouse OPTIMIZE requires. */
+    * Consistency contract: the manifest is derived state committed with
+    * the data by the mutating ops themselves, but a reader racing a
+    * [[graft.Swap]] commit can hit the brief no-`_manifest` window or a
+    * partial file set — run reads and maintenance in separate windows,
+    * the same exclusion any lakehouse OPTIMIZE requires. */
   def readPruned(spark: SparkSession, path: String,
                  bounds: Seq[Bound], nullCols: Seq[String] = Nil): DataFrame = {
     val files = prunedFiles(spark, path, bounds, nullCols)

@@ -11,11 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native greedy left-to-right BPE pair merge: every non-overlapping
   * adjacent (a, b) in the symbol array becomes the single symbol a+b —
   * "aaa" under (a,a) → ["aa","a"], exactly the composed `aggregate`
-  * fold in [[graft.pipeline.Bpe]] (which stays as the parity
-  * reference). The composed form rebuilds the accumulator array per
-  * element (`concat(slice(acc, …), array(s))`) — O(len²) allocation
-  * per word per merge round, interpreted outside codegen; this is one
-  * forward pass with a single output buffer. A null element never
+  * fold kept as the parity reference in the test suite
+  * (`graft.ParityRefs.mergePairComposed`). The composed form rebuilds
+  * the accumulator array per element (`concat(slice(acc, …),
+  * array(s))`) — O(len²) allocation per word per merge round,
+  * interpreted outside codegen; this is one forward pass with a single
+  * output buffer. A null element never
   * merges (both of the fold's equality probes go null → the append
   * branch), reproduced verbatim.
   */

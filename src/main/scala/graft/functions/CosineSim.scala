@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity of two double arrays.
   *
-  * The composed `zip_with + aggregate` formulation (Similarity.cosine)
+  * The composed `zip_with + aggregate` formulation (kept as the parity
+  * reference `graft.ParityRefs.cosineComposed` in the test suite)
   * materializes an intermediate products array per row and walks three
   * higher-order loops; this expression does one fused loop with zero
   * allocation and participates in whole-stage codegen (`doGenCode`), which

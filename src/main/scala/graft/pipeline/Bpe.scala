@@ -57,18 +57,10 @@ object Bpe {
     * BPE formulation performs. Native single-pass expression (r19,
     * guide §4): the composed fold below rebuilds the accumulator array
     * per element — O(len²) allocation per word per round, interpreted
-    * outside codegen. Parity-tested against [[mergePairComposed]]. */
+    * outside codegen. Parity-tested against the composed fold kept in the
+    * test suite (`graft.ParityRefs.mergePairComposed`). */
   private def mergePair(syms: Column, a: String, b: String): Column =
     graft.functions.BpeMergePair.bpeMergePair(syms, a, b)
-
-  /** The composed-builtins fold — the parity reference for the native
-    * expression (the cosineComposed discipline). */
-  private[graft] def mergePairComposed(syms: Column, a: String, b: String): Column =
-    aggregate(syms, typedLit(Seq.empty[String]),
-      (acc, s) =>
-        when(size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(s))))
 
   /** Learn `numMerges` merges from the corpus. Stops early if the
     * vocabulary runs out of adjacent pairs (every word collapsed to one

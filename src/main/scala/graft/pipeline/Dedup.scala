@@ -1038,6 +1038,7 @@ object Dedup {
                       idCol: String = "doc_id", numPerms: Int = 32,
                       bands: Int = 16, shingleK: Int = 3): Unit = {
     val spark = reference.sparkSession
+    recoverRewrite(spark, tablePrefix)
     val buckets = lshBuckets(minhashSignatures(reference, textCol, idCol, numPerms,
       shingleK, portable = true), idCol, numPerms, bands, portable = true)
     spark.sql(s"DROP TABLE IF EXISTS `${tablePrefix}_buckets`")
@@ -1079,6 +1080,7 @@ object Dedup {
     * which the copy preserves. */
   def dedupIndexClone(spark: org.apache.spark.sql.SparkSession,
                       srcPrefix: String, dstPrefix: String, path: String): Unit = {
+    recoverRewrite(spark, srcPrefix)
     val catalog = spark.sessionState.catalog
     val conf = spark.sparkContext.hadoopConfiguration
     // two phases (r19, advisor item): copy EVERY side table's files
@@ -1182,6 +1184,7 @@ object Dedup {
   def dedupIndexAppend(increment: DataFrame, tablePrefix: String,
                        textCol: String = "text", idCol: String = "doc_id"): Unit = {
     val spark = increment.sparkSession
+    recoverRewrite(spark, tablePrefix)
     val meta = spark.table(s"${tablePrefix}_meta").head()
     val (numPerms, bands, shingleK) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val numBuckets = {
@@ -1227,6 +1230,7 @@ object Dedup {
     * them. */
   def dedupIndexCompact(spark: org.apache.spark.sql.SparkSession,
                         tablePrefix: String): Unit = {
+    recoverRewrite(spark, tablePrefix)
     val tomb = ensureTombstoneTable(spark, tablePrefix)
     val tombs = spark.table(tomb).select(col("doc_id").as("__drop_id"))
     val fold = if (tombs.isEmpty) None else Some(tombs)
@@ -1261,6 +1265,7 @@ object Dedup {
   def dedupIndexDelete(ids: DataFrame, tablePrefix: String,
                        idCol: String = "doc_id"): Long = {
     val spark = ids.sparkSession
+    recoverRewrite(spark, tablePrefix)
     val del = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
     val tomb = ensureTombstoneTable(spark, tablePrefix)
     val shingleTbl = spark.table(s"${tablePrefix}_shingles")
@@ -1291,14 +1296,14 @@ object Dedup {
     } finally newTombs.unpersist()
   }
 
-  /** The one staged-rewrite mechanism behind [[dedupIndexCompact]] and
-    * [[dedupIndexDelete]]: for each index table, write the (optionally
-    * id-filtered) content as a staged table at a fresh location under
-    * the SAME bucket/sort spec, then drop the live name and rename the
-    * staged table into it. The staged table is fully materialized before
-    * anything is dropped, so a crash leaves either the intact original
-    * or a complete `<name>_staged` to recover from; the superseded
-    * location is deleted last. */
+  /** The staged rewrite behind [[dedupIndexCompact]]: for each index
+    * table, write the (optionally id-filtered) content as a staged table
+    * at a fresh location `<loc>_r<i>` under the SAME bucket/sort spec,
+    * then drop the live name, delete its files and rename the staged
+    * table into it. The staged table is registered only once its files
+    * are complete, so a crash leaves either the intact original beside a
+    * staged table, or a lone `<name>_staged`; [[recoverRewrite]] rolls
+    * both forward. */
   private def dedupIndexRewrite(spark: org.apache.spark.sql.SparkSession,
                                 tablePrefix: String,
                                 dropIds: Option[DataFrame]): Unit = {
@@ -1334,7 +1339,6 @@ object Dedup {
         case None => live
       }
       val staged = s"${name}_staged"
-      spark.sql(s"DROP TABLE IF EXISTS `$staged`")
       // co-locate each bucket's rows in one task before the bucketed
       // write (repartition hashing matches the bucket-id hashing), so
       // the rewrite emits ONE file per bucket — otherwise every input
@@ -1351,9 +1355,42 @@ object Dedup {
        else writer)
         .format("parquet").saveAsTable(staged)
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      spark.sql(s"ALTER TABLE `$staged` RENAME TO `$name`")
-      fs.delete(oldLoc, true)
+      promoteStaged(spark, name)
     }
+  }
+
+  /** Finish a [[dedupIndexRewrite]] a crash interrupted, before any
+    * other operation on the index: a `<name>_staged` table beside a live
+    * `<name>` never reached the drop, so it is dropped with its files; a
+    * lone `<name>_staged` is the complete rewrite whose rename the crash
+    * cut, so it renames into place and the location it superseded
+    * (its own minus the `_r<i>` suffix) is deleted. */
+  private def recoverRewrite(spark: org.apache.spark.sql.SparkSession,
+                             tablePrefix: String): Unit =
+    Seq("buckets", "shingles").map(t => s"${tablePrefix}_$t")
+      .filter(name => spark.catalog.tableExists(s"${name}_staged")).foreach { name =>
+        if (!spark.catalog.tableExists(name)) promoteStaged(spark, name)
+        else {
+          val loc = stagedLocation(spark, name)
+          spark.sql(s"DROP TABLE `${name}_staged`")
+          loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+        }
+      }
+
+  private def stagedLocation(spark: org.apache.spark.sql.SparkSession,
+                             name: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_staged")).location)
+
+  /** Rename `<name>_staged` into the dropped `name`, after deleting the
+    * location it supersedes: its own minus the `_r<i>` suffix. */
+  private def promoteStaged(spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
+    val loc = stagedLocation(spark, name)
+    val old = new org.apache.hadoop.fs.Path(loc.toString.replaceFirst("_r[0-9]+$", ""))
+    val fs = old.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (old != loc && fs.exists(old)) require(fs.delete(old, true),
+      s"dedupIndexRewrite: could not delete the superseded $old")
+    spark.sql(s"ALTER TABLE `${name}_staged` RENAME TO `$name`")
   }
 
   /** [[crossCorpusNearDup]] against a PERSISTED reference index

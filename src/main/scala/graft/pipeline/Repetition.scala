@@ -97,8 +97,8 @@ object Repetition {
   def repetitionKeep(text: Column): Column = repetitionKeepBound(toks(text))
 
   /** The composed-builtins keep decision — kept as the reference the
-    * native-counts form is parity-tested against (the cosineComposed
-    * discipline). */
+    * native-counts form is parity-tested against (the discipline of the
+    * composed references in the test suite's `graft.ParityRefs`). */
   def repetitionKeepOf(t: Column): Column =
     distinctRatioOf(t) > MinDistinctRatio &&
       topTokenRatioOf(t) < MaxTopTokenRatio &&

@@ -40,15 +40,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim.cosineSim(a, b)
 
-  /** The composed-builtins formulation (zip_with + aggregate), kept as the
-    * reference implementation the native expression is tested against. */
-  def cosineComposed(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-    val nb = sqrt(aggregate(b, lit(0.0), (acc, v) => acc + v * v))
-    when(na === 0 || nb === 0, 0.0).otherwise(dot / (na * nb))
-  }
-
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
   /** Exact brute-force cosine top-k: for each query vector, the k nearest
@@ -875,6 +866,7 @@ object Similarity {
                  pqIters: Int = DefaultPqIters, pqSampleMod: Int = DefaultPqSampleMod,
                  idCol: String = "vec_id", vecCol: String = "embedding",
                  coarse: Option[Array[Array[Double]]] = None): Unit = {
+    graft.Swap.recovered(corpus.sparkSession, path)
     // `coarse`: reuse a pre-trained quantizer (see ivfWrite) — index
     // variants over one corpus share the coarse model, not retrain it
     val cents = coarse.getOrElse(timed("ivfpq-coarse")(ivfBuild(corpus, numCentroids,
@@ -925,6 +917,7 @@ object Similarity {
                     pqIters: Int = DefaultPqIters, pqSampleMod: Int = DefaultPqSampleMod,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     coarse: Option[Array[Array[Double]]] = None): Unit = {
+    graft.Swap.recovered(corpus.sparkSession, path)
     // `coarse`: reuse a pre-trained quantizer (see ivfWrite) — the
     // residual variant by design shares the raw variant's coarse model
     val cents = coarse.getOrElse(timed("ivfpqres-coarse")(ivfBuild(corpus, numCentroids,
@@ -971,6 +964,7 @@ object Similarity {
     * repeat delete of the same ids), never corrupt a result. Call this
     * after heavy churn to re-tighten. */
   def ivfPqIdsRefresh(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    graft.Swap.recovered(spark, path)
     spark.read.parquet(s"$path/lists")
       .select(col("corpus_id"), col("cid").cast("int").as("cid"))
       .repartitionByRange(col("corpus_id"))
@@ -978,31 +972,49 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/ids")
   }
 
-  /** Crash-safe swap of one coarse cell's directory: the staged rewrite
-    * replaces the live dir through rename(live → .old) + rename(staged →
-    * live) + delete(.old), every step's boolean checked, so ANY
-    * intermediate state is recoverable by hand (the cell's rows exist at
-    * `.old_cid=N` and/or the staging dir at all times — nothing is
-    * deleted before its replacement is in place). The `.old` holding dir
-    * lives INSIDE the lists root but leads with a dot, so Spark's file
-    * listing and partition discovery never see it even mid-crash. A
-    * missing staged dir means the rewrite emitted no survivors — the
-    * cell is dropped, which is the correct content. */
-  private def swapCellDir(fs: org.apache.hadoop.fs.FileSystem,
-                          listsRoot: org.apache.hadoop.fs.Path,
-                          stagingRoot: String, cid: Int): Unit = {
-    val live = new org.apache.hadoop.fs.Path(listsRoot, s"cid=$cid")
-    val staged = new org.apache.hadoop.fs.Path(s"$stagingRoot/cid=$cid")
-    val old = new org.apache.hadoop.fs.Path(listsRoot, s".old_cid=$cid")
-    if (fs.exists(old)) require(fs.delete(old, true),
-      s"swapCellDir: could not clear stale $old")
-    require(fs.rename(live, old),
-      s"swapCellDir: rename $live -> $old failed (cell left fully live)")
-    if (fs.exists(staged)) require(fs.rename(staged, live),
-      s"swapCellDir: rename $staged -> $live failed (recover the cell from $old)")
-    require(fs.delete(old, true),
-      s"swapCellDir: could not remove the superseded $old")
+  /** Replace `cells` of the index at `path` with their rows of `lists`
+    * (cid, corpus_id, codes) minus the ids in `dead`, in ONE
+    * [[graft.Swap]] commit: the rewrite is staged one sorted file per
+    * cell, then every cell swaps, and a cell the rewrite leaves empty is
+    * dropped. A crash at any step leaves either the old index or, once
+    * the next mutating call rolls the commit forward, the new one —
+    * never a hidden cell or a half-applied delete. The staged dirs lead
+    * with a dot, so Spark's partition discovery never sees them. */
+  private def rewriteCells(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                           lists: DataFrame, cells: Seq[Int], dead: Option[DataFrame],
+                           label: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val staged = new org.apache.hadoop.fs.Path(graft.Swap.staging(root), "lists")
+    val kept = lists.where(col("cid").isin(cells: _*))
+    timed(label)(dead.map(d => kept.join(broadcast(d), Seq("corpus_id"), "left_anti"))
+      .getOrElse(kept)
+      .select(col("corpus_id"), col("codes"), col("cid"))
+      .repartition(col("cid"))
+      .sortWithinPartitions(col("cid"), col("corpus_id"))
+      .write.mode("overwrite").partitionBy("cid").parquet(staged.toString))
+    graft.Swap.commit(fs, root, cells.map { c =>
+      val cell = s"${graft.Swap.StagingName}/lists/cid=$c"
+      graft.Swap.Move(s"lists/cid=$c",
+        Some(cell).filter(n => fs.exists(new org.apache.hadoop.fs.Path(root, n))))
+    })
   }
+
+  /** The lists with a uniform schema: (cid int, corpus_id, codes). */
+  private def readLists(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/lists")
+      .select(col("cid").cast("int").as("cid"), col("corpus_id"), col("codes"))
+
+  /** Cells holding more than `maxFilesPerCell` data files. */
+  private def fragmentedCells(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                              maxFilesPerCell: Int): Seq[Int] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/lists")).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
+      .filter(st => fs.listStatus(st.getPath)
+        .count { f =>
+          val n = f.getPath.getName
+          f.isFile && !n.startsWith("_") && !n.startsWith(".")
+        } > maxFilesPerCell)
+      .map(st => st.getPath.getName.stripPrefix("cid=").toInt)
 
   /** Append new vectors to a persisted IVF-PQ index WITHOUT retraining —
     * the incremental-maintenance posture a 100 TB corpus demands (a daily
@@ -1038,6 +1050,7 @@ object Similarity {
   def ivfPqAppend(corpus: DataFrame, path: String,
                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
+    val (fs, _) = graft.Swap.recovered(spark, path)
     val residual = readIndexMeta(spark, path).getOrElse(throw new IllegalArgumentException(
       s"ivfPqAppend: index at $path carries no encoding-mode marker (meta parquet) — " +
       "appending without knowing raw-vs-residual would corrupt the lists silently; " +
@@ -1070,8 +1083,6 @@ object Similarity {
     // right-to-be-forgotten miss with no error.
     val staged = codes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val fs = new org.apache.hadoop.fs.Path(s"$path/ids")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // a pre-sidecar index (older ivfPqWrite) keeps its full-scan
       // delete path; appending a partial sidecar would break the
       // superset contract
@@ -1143,9 +1154,8 @@ object Similarity {
     * dead counts then come from ONE aggregation over the CANDIDATE
     * cells' lists only (partition-pruned; stale sidecar tombstones can
     * re-nominate a cell, never miscount), and the surviving rows OF THE
-    * TRULY AFFECTED CELLS ONLY are written to a staging dir beside the
-    * lists and swapped in per cell via the checked rename chain
-    * ([[swapCellDir]] — every intermediate state recoverable). Untouched
+    * TRULY AFFECTED CELLS ONLY are staged and swapped in by one commit
+    * ([[rewriteCells]] — a crash rolls forward). Untouched
     * cells' files are never read twice, never rewritten, never moved;
     * cells the deletion EMPTIES are dropped (the staging write emits no
     * dir for them). Work is therefore Θ(affected cells) end to end:
@@ -1165,24 +1175,12 @@ object Similarity {
                   idCol: String = "vec_id"): Long = {
     val spark = ids.sparkSession
     val del = ids.select(col(idCol).cast("long").as("corpus_id")).distinct()
-    val lists = spark.read.parquet(s"$path/lists")
-      .select(col("cid").cast("int").as("cid"), col("corpus_id"), col("codes"))
-    val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val fs = listsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, _) = graft.Swap.recovered(spark, path)
+    val lists = readLists(spark, path)
     val affected = discoverDeadCells(spark, path, fs, lists, del)
     if (affected.isEmpty) return 0L
-    val deadTotal = affected.map(_._2).sum
-    val touched = affected.map(_._1)
-    val staging = s"$path/lists_delete_staging"
-    timed("ivfpq-delete")(lists
-      .where(col("cid").isin(touched.toSeq: _*))
-      .join(broadcast(del), Seq("corpus_id"), "left_anti")
-      .select(col("corpus_id"), col("codes"), col("cid"))
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(staging))
-    touched.foreach(swapCellDir(fs, listsRoot, staging, _))
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    deadTotal
+    rewriteCells(fs, path, lists, affected.map(_._1).toSeq, Some(del), "ivfpq-delete")
+    affected.map(_._2).sum
   }
 
   /** Compact a persisted IVF-PQ index's lists: every [[ivfPqAppend]]
@@ -1191,36 +1189,20 @@ object Similarity {
     * classic small-files decay of any append-only partitioned layout).
     * Cells at or under `maxFilesPerCell` are left ALONE — their files
     * never move — and only the fragmented cells rewrite, through the
-    * same staging-dir + per-cell-swap discipline as [[ivfPqDelete]], so
+    * same one-commit cell rewrite as [[ivfPqDelete]], so
     * compaction work is Θ(fragmented cells), not Θ(corpus). Returns the
     * number of cells rewritten. Content is unchanged (same rows, same
     * codes — only the file layout coalesces, one file per rewritten
     * cell). */
   def ivfPqCompact(spark: org.apache.spark.sql.SparkSession, path: String,
                    maxFilesPerCell: Int = 4): Int = {
-    val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val fs = listsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, _) = graft.Swap.recovered(spark, path)
     // a model-only index (write-less clone, lists never materialized)
     // has nothing to compact
-    if (!fs.exists(listsRoot)) return 0
-    val fragmented = fs.listStatus(listsRoot).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
-      .filter(st => fs.listStatus(st.getPath)
-        .count { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        } > maxFilesPerCell)
-      .map(st => st.getPath.getName.stripPrefix("cid=").toInt)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/lists"))) return 0
+    val fragmented = fragmentedCells(fs, path, maxFilesPerCell)
     if (fragmented.isEmpty) return 0
-    val staging = s"$path/lists_compact_staging"
-    timed("ivfpq-compact")(spark.read.parquet(s"$path/lists")
-      .where(col("cid").isin(fragmented: _*))
-      .select(col("corpus_id"), col("codes"), col("cid").cast("int").as("cid"))
-      .repartition(col("cid"))
-      .sortWithinPartitions(col("cid"), col("corpus_id"))
-      .write.mode("overwrite").partitionBy("cid").parquet(staging))
-    fragmented.foreach(swapCellDir(fs, listsRoot, staging, _))
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    rewriteCells(fs, path, readLists(spark, path), fragmented, None, "ivfpq-compact")
     fragmented.size
   }
 
@@ -1242,37 +1224,17 @@ object Similarity {
                     idCol: String = "vec_id"): (Long, Int) = {
     val spark = ids.sparkSession
     val del = ids.select(col(idCol).cast("long").as("corpus_id")).distinct()
-    val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val fs = listsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(listsRoot)) return (0L, 0)
-    val lists = spark.read.parquet(s"$path/lists")
-      .select(col("cid").cast("int").as("cid"), col("corpus_id"), col("codes"))
+    val (fs, _) = graft.Swap.recovered(spark, path)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/lists"))) return (0L, 0)
+    val lists = readLists(spark, path)
     // delete side: sidecar-candidate cells → exact dead counts
     val affected = discoverDeadCells(spark, path, fs, lists, del)
     val deadTotal = affected.map(_._2).sum
-    val deadCells = affected.map(_._1).toSet
     // compact side: fragmented cells from the file listing
-    val fragmented = fs.listStatus(listsRoot).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
-      .filter(st => fs.listStatus(st.getPath)
-        .count { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        } > maxFilesPerCell)
-      .map(st => st.getPath.getName.stripPrefix("cid=").toInt)
-      .toSet
-    val touched = (deadCells ++ fragmented).toSeq.sorted
+    val touched = (affected.map(_._1).toSet ++ fragmentedCells(fs, path, maxFilesPerCell))
+      .toSeq.sorted
     if (touched.isEmpty) return (0L, 0)
-    val staging = s"$path/lists_maintain_staging"
-    timed("ivfpq-maintain")(lists
-      .where(col("cid").isin(touched: _*))
-      .join(broadcast(del), Seq("corpus_id"), "left_anti")
-      .select(col("corpus_id"), col("codes"), col("cid"))
-      .repartition(col("cid"))
-      .sortWithinPartitions(col("cid"), col("corpus_id"))
-      .write.mode("overwrite").partitionBy("cid").parquet(staging))
-    touched.foreach(swapCellDir(fs, listsRoot, staging, _))
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    rewriteCells(fs, path, lists, touched, Some(del), "ivfpq-maintain")
     // sidecar RE-TIGHTENING: deletes leave their ids in `$path/ids` as
     // tombstones by the superset contract ([[ivfPqIdsRefresh]]), and
     // nothing else ever removes them — a long-lived index would

@@ -143,16 +143,15 @@ object EtlQueries extends Registry {
     * quarter snapshot written with a persisted `_zstats` sidecar and a
     * `_manifest`, three zOrderAppend increments (stats loaded FROM the
     * sidecar — the layout is self-describing), a manifest reconcile,
-    * then zOrderMaintain compacting the small files under the staged
-    * hide-promote-drop swap, and a final manifest reconcile. The two
+    * then zOrderMaintain compacting the small files and reconciling the
+    * manifest in one commit. The two
     * gates over it state (a) maintain is content-invisible and (b)
     * manifest file pruning is lossless for range predicates. Forks the
-    * snapshot+appends base and runs only the compaction + reconcile. */
+    * snapshot+appends base and runs only the compaction. */
   private val zorderMaintDocsFor =
     Scratch.fork("graft_zorder_mnt_", zorderSnapAppBaseFor) { (spark, _, p) =>
       val (zcLoaded, stLoaded) = graft.etl.Layout.loadZStats(spark, p)
       graft.etl.Layout.zOrderMaintain(spark, p, zcLoaded, stLoaded)
-      graft.etl.Layout.manifestUpdate(spark, p, zcLoaded)
     }
 
   /** The deterministic takedown batch of the forget fixtures. */
@@ -164,17 +163,16 @@ object EtlQueries extends Registry {
     * full table written with stats + manifest sidecars, then a
     * deterministic takedown batch (doc_id ≡ 13 mod 97) physically
     * dropped through [[graft.etl.Layout.zOrderDelete]] — the manifest
-    * names the affected files, only they rewrite (hide-promote-drop
-    * swap), and the manifest reconciles after. The gate's oracle is the
+    * names the affected files, only they rewrite, and the manifest
+    * reconciles in the same commit. The gate's oracle is the
     * shrunk table: deletion must be indistinguishable from never having
     * written the batch (the cross_corpus_dedup_forget statement, on the
     * base layout). Forks the full-docs base and runs only the physical
-    * takedown + reconcile. */
+    * takedown. */
   private val zorderForgetDocsFor =
     Scratch.fork("graft_zorder_fgt_", zorderFullBaseFor) { (spark, d, p) =>
       val (zc, st) = graft.etl.Layout.loadZStats(spark, p)
       graft.etl.Layout.zOrderDelete(spark, p, zc, st, "doc_id", takedownBatch(spark, d))
-      graft.etl.Layout.manifestUpdate(spark, p, zc)
     }
 
   /** One LOGICALLY-forgotten z-ordered documents copy per sf dir per
@@ -211,7 +209,7 @@ object EtlQueries extends Registry {
     * ([[graft.etl.Layout.zOrderUpsert]]): a batch of re-scored rows
     * (doc_id ≡ 7 mod 89, n_chars bumped — the daily quality-rescore
     * shape) plus brand-new rows (ids offset past the corpus) merged in
-    * ONE staged swap — the manifest names the affected files, their
+    * ONE commit — the manifest names the affected files, their
     * survivors + the whole batch re-curve-order together, untouched
     * files never open. The oracle is the merged table (anti-join the
     * updated ids, union the batch) computed by DuckDB from scratch.

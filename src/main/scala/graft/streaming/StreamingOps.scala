@@ -899,21 +899,21 @@ object StreamingOps {
     * next compaction, per the caller's pipeline contract.
     *
     * `maintainEvery > 0` makes the layout SELF-maintaining: every Nth
-    * micro-batch runs [[graft.etl.Layout.zOrderMaintain]] (+ a manifest
-    * reconcile) inside the same foreachBatch slot — serialized with the
-    * appends by the streaming engine, so compaction never races the
-    * sink's OWN landings, and the file count stays bounded without an
-    * external scheduler. Two caveats the batch Layout docs carry that
-    * apply here verbatim: (a) EXTERNAL readers racing the
-    * hide-promote-drop swap can see a partial file set — a maintaining
+    * micro-batch runs [[graft.etl.Layout.zOrderMaintain]] (which
+    * commits the manifest with the rewrite) inside the same foreachBatch
+    * slot — serialized with the appends by the streaming engine, so
+    * compaction never races the sink's OWN landings, and the file count
+    * stays bounded without an external scheduler. Two caveats the batch
+    * Layout docs carry that apply here verbatim: (a) EXTERNAL readers
+    * racing the maintenance commit can see a partial file set — a maintaining
     * sink needs the same reader-exclusion window as any lakehouse
     * OPTIMIZE, so leave `maintainEvery` off (the default) when readers
     * query the layout continuously and schedule maintenance in a quiet
-    * window instead; (b) a crash mid-swap leaves `.maintained` debris
-    * that makes the next maintenance call — and therefore stream
-    * RESTART once batchId reaches the next maintenance slot — fail
-    * loudly until the debris is hand-recovered per the
-    * requireNoSwapDebris message. */
+    * window instead; (b) a crash mid-commit leaves an intent that the
+    * restarted stream's next append rolls forward (every mutating Layout
+    * call recovers first, [[graft.Swap]]), so the layout comes back as
+    * the old or the maintained file set and no restart needs an
+    * operator. */
   def zOrderSinkStream(rows: DataFrame, path: String, checkpoint: String,
                        maintainEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -925,9 +925,8 @@ object StreamingOps {
         val (zc, st) = graft.etl.Layout.loadZStats(spark, path)
         graft.etl.Layout.zOrderAppend(batch.toDF(), zc, path, st)
         graft.etl.Layout.manifestUpdate(spark, path, zc)
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0
-            && graft.etl.Layout.zOrderMaintain(spark, path, zc, st) > 0)
-          graft.etl.Layout.manifestUpdate(spark, path, zc)
+        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
+          graft.etl.Layout.zOrderMaintain(spark, path, zc, st): Unit
       }
       .start()
 }

@@ -27,10 +27,11 @@ import org.apache.spark.sql.types._
   * shuffle, and Column windows keep Spark's own window exchange. The
   * typed folds group on the key COLUMN ([[groupsBySeries]]), not on a
   * key lambda, so no `AppendColumns` deserializes each row just to read
-  * its key, and the grouping reuses the series exchange. (Not when the
-  * key is a literal, e.g. `lit("p0")` as the portfolio: the optimizer
-  * folds it into the repartition, and the grouping adds its own
-  * exchange.)
+  * its key, and the grouping reuses the series exchange. A literal key
+  * (e.g. `lit("p0")` as the portfolio) is one series: the optimizer
+  * would fold it into the repartition, which the grouping cannot reuse,
+  * so [[groupsBySeries]] leaves the grouping's own exchange as the only
+  * one.
   *
   * Scale: one series' full history is materialized on one executor —
   * correct for daily/bar-level data (thousands of rows per key, millions of
@@ -54,7 +55,22 @@ object SeriesOps {
   /** [[bySeries]], grouped on the (string) `key` column itself; each
     * group's values are `df`'s full rows, key included. */
   def groupsBySeries(df: DataFrame, key: String): KeyValueGroupedDataset[String, Row] =
-    bySeries(df, key).groupBy(col(key)).as[String, Row](Encoders.STRING, Encoders.row(df.schema))
+    (if (literalKey(df, key)) df else bySeries(df, key))
+      .groupBy(col(key)).as[String, Row](Encoders.STRING, Encoders.row(df.schema))
+
+  /** Whether `key` is a literal in `df`'s analyzed plan: its alias, read
+    * through projections and casts, has a foldable child. */
+  private def literalKey(df: DataFrame, key: String): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression}
+    val plan = df.queryExecution.analyzed
+    val aliases = plan.flatMap(_.expressions).collect { case a: Alias => a.exprId -> a.child }.toMap
+    def literal(e: Expression): Boolean = e match {
+      case Cast(c, _, _, _) => literal(c)
+      case a: Attribute => aliases.get(a.exprId).exists(literal)
+      case _ => e.foldable
+    }
+    plan.output.find(_.name == key).exists(literal)
+  }
 
   /** @param df   input with `symbol` (string), `ord` (castable to long) and `in` numeric columns
     * @param in   input column names fed to the kernel (cast to double; null → NaN)

@@ -1505,20 +1505,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.etl.Layout.zOrderMaintain(spark, out, cols, loadedSt,
       bits = 8, smallFileBytes = resident.length) == 0,
       "a second maintain must be a no-op")
-    // interrupted-swap debris makes the next maintain fail LOUDLY (the
-    // hidden rows are reader-invisible; compacting on top would
-    // entangle two recovery states)
+    // an interrupted commit rolls forward on the next maintain: cut one
+    // after it hid a file and before it promoted the copy staged to
+    // replace it, while the file's rows are invisible to readers
     val vict = liveFiles().head
-    val hiddenPath = new java.io.File(vict.getParentFile,
-      s".${vict.getName}.maintained")
-    assert(vict.renameTo(hiddenPath))
-    try {
-      val e = intercept[IllegalArgumentException] {
-        graft.etl.Layout.zOrderMaintain(spark, out, cols, loadedSt, bits = 8)
-      }
-      assert(e.getMessage.contains("interrupted swap"),
-        s"maintain must refuse over swap debris, got: ${e.getMessage}")
-    } finally assert(hiddenPath.renameTo(vict))
+    val rowCount = spark.read.parquet(out).count()
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(out, Swap.StagingName, "data"))
+    java.nio.file.Files.copy(vict.toPath,
+      java.nio.file.Paths.get(out, Swap.StagingName, "data", "part-restaged.parquet"))
+    CrashFs.register(spark)
+    val crashRoot = new org.apache.hadoop.fs.Path(CrashFs.at(out))
+    CrashFs.arm(2)
+    intercept[CrashFs.Crash] {
+      Swap.commit(crashRoot.getFileSystem(spark.sparkContext.hadoopConfiguration), crashRoot,
+        Seq(Swap.Move(vict.getName, None), Swap.Move("part-restaged.parquet",
+          Some(s"${Swap.StagingName}/data/part-restaged.parquet"))))
+    }
+    CrashFs.disarm()
+    assert(!vict.exists() && spark.read.parquet(out).count() < rowCount,
+      "the cut commit must leave the victim hidden")
+    assert(graft.etl.Layout.zOrderMaintain(spark, out, cols, loadedSt, bits = 8) == 2,
+      "maintain must roll the commit forward, then compact the two files")
+    assert(keyset(spark.read.parquet(out)) == before &&
+        spark.read.parquet(out).count() == rowCount,
+      "the rolled-forward commit must preserve content exactly")
+    assert(new java.io.File(out).list().forall(n => !n.startsWith(".") || n.endsWith(".crc")),
+      "no intent, hidden copy or staging may remain")
   }
 
   test("zValue == scalar reference interleave on seeded-random inputs (clamp, nulls, 2 and 3 dims)") {
@@ -2635,9 +2648,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("id", "syms")
     val out = df.select(col("id"),
         graft.functions.BpeMergePair.bpeMergePair(col("syms"), "a", "b").as("nat"),
-        Bpe.mergePairComposed(col("syms"), "a", "b").as("ref"),
+        ParityRefs.mergePairComposed(col("syms"), "a", "b").as("ref"),
         graft.functions.BpeMergePair.bpeMergePair(col("syms"), "a", "a").as("nat2"),
-        Bpe.mergePairComposed(col("syms"), "a", "a").as("ref2"))
+        ParityRefs.mergePairComposed(col("syms"), "a", "a").as("ref2"))
       .collect()
     out.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2), s"(a,b) mismatch: $r")
@@ -3033,7 +3046,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(rows).toDF("id", "a", "b")
     val out = df.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineComposed(col("a"), col("b")).as("composed")).collect()
+      ParityRefs.cosineComposed(col("a"), col("b")).as("composed")).collect()
     out.foreach { r =>
       assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12,
         s"${r.getDouble(0)} != ${r.getDouble(1)}")

@@ -443,13 +443,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the equity curve (a LocalTableScan of driver-computed rows); the
     // distributed shape folds inside flatMapGroups, so the plan must show a
     // typed-groups node fed by the parquet scan and no local relation
-    for (name <- Seq("bt_sequential", "bt_multi_asset")) {
+    // the portfolio is the literal "p0", one series: the grouping's own
+    // exchange is its only one (a series repartition on the folded
+    // literal would add a second that the grouping cannot reuse)
+    for ((name, exchanges) <- Seq("bt_sequential" -> 2, "bt_multi_asset" -> 5)) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       val plan = executedPlan(df)
       assert(plan.contains("MapGroups"),
         s"$name: event loop must fold inside a task (flatMapGroups):\n$plan")
       assert(!plan.contains("LocalTableScan"),
         s"$name: no driver-side collect/re-parallelize in the query path:\n$plan")
+      assert(countShuffleExchanges(df) == exchanges,
+        s"$name: expected $exchanges exchanges:\n$plan")
     }
   }
 
