@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries so plan
   * regressions (extra shuffles, lost pushdown, broken codegen) are visible.
   * Usage: runMain graft.PlanAudit [sfDir] [query...] */
@@ -12,10 +10,7 @@ object PlanAudit {
       else Seq("sma_20", "cdlengulfing", "rsi_14", "ann_brute_top5", "exact_dedup",
         "minhash_buckets", "simhash_pairs", "ann_ivf_top5_probe", "embedding_dedup_clusters",
         "pack_text", "user_sessions", "repetition_stats", "vocab_top100")
-    val spark = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

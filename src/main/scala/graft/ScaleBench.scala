@@ -27,12 +27,15 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.ScaleBench [mult] [query ...]
   * The replica is generated once per mult into /tmp/graft_scale_x<mult>
-  * and reused (delete the dir to regenerate).
+  * and reused while its base dir and format match (see [[replica]]).
   */
 object ScaleBench {
   /** Replica layout version, written into `_DONE`. Bump on any change to
     * [[generate]] that alters replica CONTENT so existing dirs rebuild. */
   val ReplicaFormat = "v2"
+
+  /** The marker of the shared √n-cell index ([[hqScaledIndex]]). */
+  private val HqScaledDone = "_DONE_HQ_SCALED_v1"
 
   val DefaultQueries: Seq[String] = Seq(
     "align_grid", "align_grid_backward", "minhash_pairs", "pack_filtered",
@@ -259,7 +262,7 @@ object ScaleBench {
         // the delete/restore pair is in flight, so a crash between the
         // two leaves a rebuild trigger instead of a silently-short index,
         // and restore in finally so even a failed restore is attempted
-        val done = java.nio.file.Paths.get(s"$dir/_DONE_HQ_SCALED_v1")
+        val done = java.nio.file.Paths.get(s"$dir/$HqScaledDone")
         java.nio.file.Files.deleteIfExists(done)
         val removed = graft.pipeline.Similarity.ivfPqDelete(
           emb.where(sel).select("vec_id"), basePath)
@@ -282,7 +285,7 @@ object ScaleBench {
         val basePath = hqScaledIndex(spark, dir)
         val sel = pmod(col("vec_id"), lit(20000)) === 13
         val emb = Tables.embeddings(spark, dir)
-        val done = java.nio.file.Paths.get(s"$dir/_DONE_HQ_SCALED_v1")
+        val done = java.nio.file.Paths.get(s"$dir/$HqScaledDone")
         java.nio.file.Files.deleteIfExists(done)
         val (removed, rewritten) = graft.pipeline.Similarity.ivfPqMaintain(
           emb.where(sel).select("vec_id"), basePath, maxFilesPerCell = 4)
@@ -439,74 +442,53 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val queries = if (args.length > 1) args.drop(1).toSeq else DefaultQueries
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val out = s"/tmp/graft_scale_x$mult"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val counter = new TaskCounter(spark)
-
-    // _DONE doubles as a replica FORMAT marker: a format change bumps
-    // ReplicaFormat and stale replicas regenerate instead of silently
-    // serving old-layout data. An empty legacy _DONE is accepted because
-    // the only format change so far (row-count → max-id+1 offsets) is
-    // a no-op on the driver's dense 0-based ids — identical replicas.
-    val doneFile = java.nio.file.Paths.get(s"$out/_DONE")
-    val replicaOk = java.nio.file.Files.exists(doneFile) && {
-      val tag = new String(java.nio.file.Files.readAllBytes(doneFile), "UTF-8").trim
-      tag.isEmpty || tag == ReplicaFormat
-    }
-    if (!replicaOk) generate(spark, base, out, mult)
+    val spark = Harness.session()
+    val out = replica(spark, Harness.sfDir, mult)
 
     // derive the singleton-regime table OUTSIDE any timed query
     if (queries.exists(_.startsWith("remove_spans_singleton")))
       singletonDocs(spark, out).limit(1).collect(): Unit
 
-    // same warmups as Bench: tables + window/overSeries machinery
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Tables.bars(spark, out).limit(1).collect()
-    Tables.documents(spark, out).limit(1).collect()
-    Tables.embeddings(spark, out).limit(1).collect()
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      val wdf = spark.range(0, 64).selectExpr("CAST(id % 2 AS STRING) AS symbol",
-        "id AS ord", "CAST(id AS DOUBLE) AS close")
-      wdf.select(avg(col("close")).over(
-        Window.partitionBy("symbol").orderBy("ord").rowsBetween(-4, 0))).count()
-      ta.SeriesOps.overSeries(wdf, Seq("close"), Seq("o"))(a => Array(a(0))).count()
-    }
-
+    Harness.warm(spark, out)
+    val legs = new Harness.Legs(spark)
     queries.foreach { name =>
       val fn = ExtraQueries.getOrElse(name, SparkEntry.queries(name))
-      counter.reset()
-      val t0 = System.nanoTime()
-      try {
+      val leg = legs(s"[scale x$mult] $name FAILED") {
         val df = fn(spark, out)
         // recall gates return a tiny per-query frame — at scale points
         // the VALUE is the result (what the decade costs in recall),
         // so surface the mean instead of discarding it into noop
-        val recallNote =
-          if (!name.contains("recall")) {
-            df.write.format("noop").mode("overwrite").save(); ""
-          } else {
-            val rows = df.collect()
-            val col = df.schema.fieldNames.indexWhere(_.startsWith("recall"))
-            if (col < 0 || rows.isEmpty) { "" } else {
-              val m = rows.map(_.getDouble(col)).sum / rows.length
-              f"   mean-recall ${m}%.3f"
-            }
+        if (!name.contains("recall")) {
+          df.write.format("noop").mode("overwrite").save(); ""
+        } else {
+          val rows = df.collect()
+          val col = df.schema.fieldNames.indexWhere(_.startsWith("recall"))
+          if (col < 0 || rows.isEmpty) { "" } else {
+            val m = rows.map(_.getDouble(col)).sum / rows.length
+            f"   mean-recall ${m}%.3f"
           }
-        val wall = (System.nanoTime() - t0) / 1e9
-        println(f"[scale x$mult] $name%-22s wall ${wall}%7.2f s   shuffle-write ${counter.shuffleWriteBytes / 1e6}%9.2f MB$recallNote")
-      } catch { case e: Throwable =>
-        println(s"[scale x$mult] $name FAILED: ${e.toString.linesIterator.next()}")
+        }
       }
+      leg.value.foreach(recallNote => println(
+        f"[scale x$mult] $name%-22s wall ${leg.wall}%7.2f s   shuffle-write ${leg.shuffleMb}%9.2f MB$recallNote"))
     }
+    legs.close()
     spark.stop()
+  }
+
+  /** The ×mult replica of `base` at /tmp/graft_scale_x<mult>, generated
+    * unless its `_DONE` tag names this [[ReplicaFormat]] and this base
+    * dir. A mismatch deletes the whole dir first, so no table derived
+    * from the old replica survives beside the new one. */
+  def replica(spark: SparkSession, base: String, mult: Int): String = {
+    val out = s"/tmp/graft_scale_x$mult"
+    val tag = s"$ReplicaFormat ${java.nio.file.Paths.get(base).toAbsolutePath.normalize}"
+    val done = java.nio.file.Paths.get(s"$out/_DONE")
+    if (!java.nio.file.Files.exists(done) || java.nio.file.Files.readString(done) != tag) {
+      Scratch.delete(out)
+      generate(spark, base, out, mult, tag)
+    }
+    out
   }
 
   /** Singleton-regime documents table DERIVED from a replica's: 99% of
@@ -519,8 +501,7 @@ object ScaleBench {
     * to regenerate. */
   def singletonDocs(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/documents_singleton.parquet"
-    val done = java.nio.file.Paths.get(s"$dir/_DONE_SINGLETON_v1")
-    if (!java.nio.file.Files.exists(done)) {
+    Harness.once(s"$dir/_DONE_SINGLETON_v1") {
       println(s"[scale] deriving singleton-regime documents at $path ...")
       val salted = concat_ws(" ", transform(split(col("text"), "\\s+"),
         t => concat(t, lit("q"), col("doc_id").cast("string"))))
@@ -529,7 +510,6 @@ object ScaleBench {
           when(pmod(xxhash64(col("doc_id")), lit(100)) === 0, col("text"))
             .otherwise(salted))
         .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.createFile(done)
     }
     spark.read.parquet(path)
   }
@@ -542,21 +522,13 @@ object ScaleBench {
     * cell count — the knob a production index derives from corpus size. */
   def hqScaledIndex(spark: SparkSession, dir: String): String = {
     val path = s"$dir/ivfpq_hq_scaled"
-    val done = java.nio.file.Paths.get(s"$dir/_DONE_HQ_SCALED_v1")
-    if (!java.nio.file.Files.exists(done)) {
+    Harness.once(s"$dir/$HqScaledDone") {
       val emb = Tables.embeddings(spark, dir)
       val n = emb.where(col("embedding").isNotNull).count()
       val nc = graft.pipeline.Similarity.scaledNumCentroids(n)
       println(s"[scale] building hq-scaled IVF-PQ index: n=$n numCentroids=$nc ...")
       graft.pipeline.Similarity.ivfPqWrite(emb, path, numCentroids = nc,
         ksub = graft.pipeline.Similarity.HqPqK)
-      java.nio.file.Files.createFile(done)
-    } else if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/ids"))) {
-      // an index built before the id-sidecar existed: upgrade in place
-      // (one column-pruned lists scan) so the delete leg measures the
-      // Θ(batch) discovery, not the legacy fallback
-      println(s"[scale] refreshing id sidecar for pre-sidecar index at $path ...")
-      graft.pipeline.Similarity.ivfPqIdsRefresh(spark, path)
     }
     path
   }
@@ -566,12 +538,10 @@ object ScaleBench {
     * so the brute-force and probe sides read one materialization. */
   def collapsedEmb(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/embeddings_reps.parquet"
-    val done = java.nio.file.Paths.get(s"$dir/_DONE_EMB_REPS_v1")
-    if (!java.nio.file.Files.exists(done)) {
+    Harness.once(s"$dir/_DONE_EMB_REPS_v1") {
       println(s"[scale] deriving collapsed-representative embeddings at $path ...")
       graft.pipeline.Similarity.collapseReps(Tables.embeddings(spark, dir), dim = 64)
         .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.createFile(done)
     }
     spark.read.parquet(path)
   }
@@ -581,15 +551,13 @@ object ScaleBench {
     * production-shaped corpus. Marker-gated like the scaled index. */
   def hqCollapsedIndex(spark: SparkSession, dir: String): String = {
     val path = s"$dir/ivfpq_hq_reps"
-    val done = java.nio.file.Paths.get(s"$dir/_DONE_HQ_REPS_v1")
-    if (!java.nio.file.Files.exists(done)) {
+    Harness.once(s"$dir/_DONE_HQ_REPS_v1") {
       val reps = collapsedEmb(spark, dir)
       val n = reps.count()
       val nc = graft.pipeline.Similarity.scaledNumCentroids(n)
       println(s"[scale] building hq collapsed-reps IVF-PQ index: n=$n numCentroids=$nc ...")
       graft.pipeline.Similarity.ivfPqWrite(reps, path, numCentroids = nc,
         ksub = graft.pipeline.Similarity.HqPqK)
-      java.nio.file.Files.createFile(done)
     }
     path
   }
@@ -644,8 +612,10 @@ object ScaleBench {
   }
 
   /** Build the ×mult replica (see class doc for the distribution
-    * argument per table). One-time; `_DONE` marks completion. */
-  def generate(spark: SparkSession, base: String, out: String, mult: Int): Unit = {
+    * argument per table). One-time; `_DONE`, holding `tag`, marks
+    * completion. */
+  private def generate(spark: SparkSession, base: String, out: String, mult: Int,
+                       tag: String): Unit = {
     println(s"[scale x$mult] generating replica at $out from $base ...")
     val copies = explode(sequence(lit(0), lit(mult - 1))).as("copy")
 
@@ -710,8 +680,7 @@ object ScaleBench {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/_DONE"),
-      ReplicaFormat.getBytes("UTF-8"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$out/_DONE"), tag)
     println(s"[scale x$mult] replica ready: docs ${nDocs * mult}, events ${nEv * mult}, embeddings ${nEmb * mult}")
   }
 }

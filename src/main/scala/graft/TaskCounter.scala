@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** The task-metrics counter of the harness mains: shuffle-write bytes
+/** The task-metrics counter of [[Harness.Legs]]: shuffle-write bytes
   * and the longest task (ms) over the TaskEnd events since the last
   * [[reset]]. TaskEnd events ride the asynchronous listener bus and can
   * land after the action that ran the tasks returns, so every read first
@@ -40,9 +40,8 @@ private[graft] final class TaskCounter(spark: SparkSession) {
   /** Drain, then start counting from zero. */
   def reset(): Unit = { drain(); shuffleBytes.set(0); maxTaskMs.set(0) }
 
-  def shuffleWriteBytes: Long = { drain(); shuffleBytes.get() }
-
-  def longestTaskMs: Long = { drain(); maxTaskMs.get() }
+  /** Drain, then the shuffle-write bytes and the longest task (ms). */
+  def read(): (Long, Long) = { drain(); (shuffleBytes.get(), maxTaskMs.get()) }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(listener)
 }

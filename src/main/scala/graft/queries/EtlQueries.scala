@@ -495,8 +495,8 @@ object EtlQueries extends Registry {
       // over the z-ordered copy must hash-match the oracle over the
       // original table (selection commutes with layout). What the
       // layout BUYS — multi-dim row-group skipping measured in
-      // bytes-read against the single-dim time sort — is LayoutBench
-      // evidence (BASELINE.md r15), the SkewBench/BucketBench split:
+      // bytes-read against the single-dim time sort — is `Evidence layout`
+      // evidence (BASELINE.md r15), the skew/bucket families' split:
       // correctness here, physics there.
       (spark, dir) => spark.read.parquet(zorderEventsFor(spark, dir))
         .where(col("user_id").between(100, 200))

@@ -1764,7 +1764,7 @@ object PipelineQueries extends Registry {
       // flat text): top-50 by document frequency, regime-dispatched — a
       // sampled probe picks the direct string groupBy on this
       // repeated-vocabulary corpus and the fp-prefiltered plan on
-      // singleton-dominated ones (GramBench measures the 2×+ shuffle cut
+      // singleton-dominated ones (`Evidence gram` measures the 2×+ shuffle cut
       // there). TakeOrdered path — the LIMIT prunes per partition.
       (spark, dir) =>
         Dedup.frequentSpansAuto(Tables.documents(spark, dir), minDocs = 2)

@@ -1,8 +1,6 @@
 package graft
 
 import graft.ta.{Chunked, Cycle, Kernels, SeriesOps}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parity pin for the chunked-state executor: a series forced through
@@ -12,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * makes overSeriesChunked a legitimate escape hatch for series longer
   * than one executor's working set.
   */
-class ChunkedSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-chunked-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ChunkedSpec extends AnyFunSuite with SparkSuite {
   /** 3 symbols × 1200 rows of deterministic pseudo-random OHLC with
     * interior nulls (every 97th close, every 131st high) — nulls must ride
     * the skip-don't-poison convention across chunk boundaries too. */

@@ -2,9 +2,8 @@ package graft
 
 import graft.etl.Layout
 import graft.pipeline.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash-point spec for the persisted-artifact lifecycles: each
@@ -15,21 +14,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * post-op state, with no intent, hidden or staging debris. The dedup
   * index's catalog swap is not a file rename, so its two crash states
   * are planted directly. */
-class CrashSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class CrashSpec extends AnyFunSuite with SparkSuite {
+  override protected def cores = 2
+  override protected def partitions = 1
+  // every crash point fails a Spark job or a commit on purpose
+  override protected def logLevel = "OFF"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-crash-test").getOrCreate()
-    // every crash point fails a Spark job or a commit on purpose
-    spark.sparkContext.setLogLevel("OFF")
+    super.beforeAll()
     CrashFs.register(spark)
   }
   override def afterAll(): Unit = {
     CrashFs.disarm()
-    if (spark != null) { spark.sparkContext.setLogLevel("ERROR"); spark.stop() }
+    if (spark != null) spark.sparkContext.setLogLevel("ERROR")
+    super.afterAll()
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted

@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface of the native expressions, wired via
   * spark.sql.extensions — SQL and DataFrame paths must agree. */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-ext-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtensionsSpec extends AnyFunSuite with SparkSuite {
+  override protected def cores = 2
+  override protected def conf = Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   test("cosine_sim callable from SQL, agrees with the Column API") {
     val r = spark.sql(

@@ -1,8 +1,6 @@
 package graft
 
 import graft.ta._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-fixture parity with the standard TA-Lib formulas, standing in
@@ -15,18 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * walk) is the contract both must satisfy. Tolerance 1e-8 absolute:
   * identical recurrences, different summation order in the SMA seeds.
   */
-class GoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-golden-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GoldenSpec extends AnyFunSuite with SparkSuite {
   // (ord, open, high, low, close, volume, sma_20, ema_20, rsi_14, atr_14, adx_14)
   private lazy val rows: Array[Array[Double]] = {
     val src = scala.io.Source.fromInputStream(

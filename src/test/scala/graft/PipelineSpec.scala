@@ -1,25 +1,12 @@
 package graft
 
 import graft.pipeline._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pipeline operators on crafted corpora with known duplicates/neighbors
   * (the synthetic driver docs contain no true near-dups). */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pipeline-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PipelineSpec extends AnyFunSuite with SparkSuite {
   private def docs(texts: (Long, String)*) =
     spark.createDataFrame(texts).toDF("doc_id", "text")
 

@@ -1,9 +1,8 @@
 package graft
 
 import graft.pipeline._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-SHAPE regression tests: the scale properties this engine claims
@@ -13,18 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reintroduces a full-corpus shuffle or drops a pushdown fails CI — not
   * just the 100 TB cluster three weeks later.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-plan-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PlanSpec extends AnyFunSuite with SparkSuite {
   /** Executed (post-AQE) plan string: run the query first so adaptive
     * re-planning has happened, then render the final plan. */
   private def executedPlan(df: DataFrame): String = {

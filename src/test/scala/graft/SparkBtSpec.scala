@@ -2,26 +2,11 @@ package graft
 
 import graft.bt.Vectorized
 import graft.etl.Align
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed backtest + alignment ETL over real Spark. */
-class SparkBtSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-bt-test")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SparkBtSpec extends AnyFunSuite with SparkSuite {
   test("Vectorized.run distributes the fold per symbol and matches runSeries") {
     val cfg = Vectorized.Config(initialCapital = 1000.0, minCommission = 1.0,
       buyCommissionRate = 0.001, sellCommissionRate = 0.001)

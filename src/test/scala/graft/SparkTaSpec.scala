@@ -1,29 +1,15 @@
 package graft
 
 import graft.ta._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark-level tests: Frames vs Kernels agreement, overSeries mechanics,
   * and candlestick patterns on crafted bars that exercise specific firing
   * branches (the synthetic driver data cannot reach every pattern). */
-class SparkTaSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SparkTaSpec extends AnyFunSuite with SparkSuite {
   private def ohlcDf(rows: Seq[(Double, Double, Double, Double)]): DataFrame = {
     val data = rows.zipWithIndex.map { case ((o, h, l, c), i) =>
       ("s", i.toLong, o, h, l, c)

@@ -4,26 +4,14 @@ import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{BarIn, SigBarIn}
 import graft.bt.Vectorized
 import graft.ta.Kernels
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stream == batch equivalence: the streaming recurrences must reproduce
   * the batch kernels exactly, including across micro-batch boundaries
   * (state carry). Driven through MemoryStream + memory sink. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-streaming-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   private def tmpCheckpoint() =
     Scratch.dir("graft_ckpt_")
 

@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tables.eventsNs must deliver BIGINT nanos whatever timestamp unit the
   * driver's parquet writer chose — the round-10 testdata regen flipped
   * TIMESTAMP(NANOS) to TIMESTAMP(MICROS) and broke every raw `ts div`
   * consumer at bench time, which is exactly the drift this pins. */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-tables-test").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TablesSpec extends AnyFunSuite with SparkSuite {
+  override protected def cores = 2
 
   private def stage(df: org.apache.spark.sql.DataFrame): String = {
     val dir = Scratch.dir("graft_tables_spec_")
