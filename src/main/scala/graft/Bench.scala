@@ -28,18 +28,9 @@ object Bench {
       // computed, round 7). The noop write materializes every output
       // column, which is what a real consumer pays. r2–r6 walls were
       // recorded under count() semantics — NOT comparable to r7+.
-      val leg = legs(s"[bench] FAILED $name") {
+      name -> legs(s"[bench] FAILED $name") {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      // free this query's presentation-barrier blocks (r19): the output
-      // is materialized, nothing scans the barrier frame again, and
-      // leaving ~270 checkpointed outputs pinned for the sweep makes
-      // storage compete with execution memory (guide §5 "unpersist when
-      // done" — the r18 sweeps' in-sweep inflation class). OUTSIDE the
-      // timed region, like the shuffle drain: per-query timing
-      // methodology is unchanged.
-      graft.queries.Present.releaseBarriers()
-      name -> leg
     }
     if (args.nonEmpty) ran.foreach { case (n, l) =>
       System.err.println(f"[bench] $n%s ${wall(l)}%.3f s  shuffle ${l.shuffleMb}%.2f MB") }
@@ -55,8 +46,7 @@ object Bench {
     // repeats of a few queries and would masquerade as a sweep.
     def writeFull(name: String): Unit =
       Harness.attempt(s"[bench] $name write failed") {
-        java.nio.file.Files.write(java.nio.file.Paths.get(name),
-          (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(name), full + "\n")
       }
     if (args.isEmpty) {
       val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
@@ -93,20 +83,23 @@ object Bench {
     def qJson(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val total = r3(results.values.filter(_ >= 0.0).sum)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jsonList(ss: Seq[String]): String = ss.map("\"" + _ + "\"").mkString("[", ",", "]")
     // STDOUT gets a COMPACT line: the stdout capture that grades a round
     // keeps only a ~2 KB tail, and r9's full 204-query line blew past it
     // — the captured fragment lost its opening brace and parsed to null,
-    // i.e. NO bench number for the whole round. The headline
-    // subset keeps the line a few hundred bytes; the FULL map goes to
+    // i.e. NO bench number for the whole round. The headline subset keeps
+    // the line a few hundred bytes, the failed list keeps the names that
+    // fit and ends in one "+<n> more"; the FULL map goes to
     // BENCH_FULL.json, which is committed and diffable across rounds.
     val headlineQs = Headline.flatMap(n => results.get(n).map(n -> _))
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(headlineQs)},"n_queries":${results.size},"failed":$failedJson,"full_map":"BENCH_FULL.json","semantics":"noop-materialize (r7+; r2-r6 used count(), which pruned projection work - see BASELINE.md)","sf":"$sfDir"}"""
+    def lineWith(shown: Int): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(headlineQs)},"n_queries":${results.size},"failed":${jsonList(failed.take(shown) ++ Option.when(shown < failed.size)(s"+${failed.size - shown} more"))},"full_map":"BENCH_FULL.json","semantics":"noop-materialize (r7+; r2-r6 used count(), which pruned projection work - see BASELINE.md)","sf":"$sfDir"}"""
+    val line = (failed.size to 1 by -1).iterator.map(lineWith)
+      .find(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length < 2048).getOrElse(lineWith(0))
     // The full wall map AND the per-query shuffle-write map (r11+) — the
     // byte column is the one that scales.
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":${qJson(results)},"shuffle_mb":${qJson(shuffleMb)},"n_queries":${results.size},"failed":$failedJson,"semantics":"noop-materialize (r7+); shuffle_mb = task-metrics shuffle write per query (r11+)","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":${qJson(results)},"shuffle_mb":${qJson(shuffleMb)},"n_queries":${results.size},"failed":${jsonList(failed)},"semantics":"noop-materialize (r7+); shuffle_mb = task-metrics shuffle write per query (r11+)","sf":"$sfDir"}"""
     (line, full)
   }
 }

@@ -240,7 +240,7 @@ object Evidence {
     // group spans every user), and the z-order serves both from one
     // layout (each dimension keeps ~half its bits' worth of locality)
     val (t1, t2) = needleSlice(events)
-    val uid = 700L
+    val uid = { val ids = userIds(events); ids(ids.length / 2) } // 700 of sf0.1's 1,500
     val shapes = Seq(
       "user_only" -> (col("user_id") === uid),
       "time_slice" -> col("ts").between(t1, t2),
@@ -256,13 +256,14 @@ object Evidence {
       shapes.foreach { case (shape, pred) =>
         (1 to 2).foreach { run =>
           val q = df.where(pred).agg(count(lit(1)).as("n"), sum("value").as("sv"))
-          val (r, wall) = Harness.clock(q.collect())
-          val (scanRows, files) = scanMetrics(q)
-          println(f"[layout x$mult] $name%-10s $shape%-11s run$run wall ${wall}%6.3f s   scan-rows ${scanRows}%9d   files $files%3d   rows ${r(0).getLong(0)}")
+          println(f"[layout x$mult] $name%-10s $shape%-11s run$run ${needleRun(q)}")
         }
       }
     }
   }
+
+  private def userIds(events: DataFrame): Array[Long] =
+    events.select("user_id").distinct().orderBy("user_id").collect().map(_.getLong(0))
 
   /** The needle's time slice: 40–45% of the events' ts range. */
   private def needleSlice(events: DataFrame): (Long, Long) = {
@@ -271,13 +272,15 @@ object Evidence {
     (lo + ((hi - lo) * 0.40).toLong, lo + ((hi - lo) * 0.45).toLong)
   }
 
-  /** The scan nodes' own SQL metrics after execution: rows MATERIALIZED
-    * by the parquet reader (what survives row-group and page pruning,
-    * i.e. the IO a layout saves) and files read. (Task
+  /** One run of needle count `q`: its wall, the scan nodes' own SQL
+    * metrics — rows MATERIALIZED by the parquet reader (what survives
+    * row-group and page pruning, i.e. the IO a layout saves) and files
+    * read — and the rows it counted. (Task
     * inputMetrics.bytesRead is blind here: the local-fs vectorized
     * reader bypasses the metered stream — measured 0.19 MB for a 90 MB
     * full scan — so it cannot see skipping at all.) */
-  private def scanMetrics(df: DataFrame): (Long, Long) = {
+  private def needleRun(q: DataFrame): String = {
+    val (r, wall) = Harness.clock(q.collect())
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
@@ -285,9 +288,9 @@ object Evidence {
       case s: FileSourceScanExec => Seq(s)
       case other => other.children.flatMap(scans)
     }
-    val ss = scans(df.queryExecution.executedPlan)
-    (ss.map(_.metrics("numOutputRows").value).sum,
-      ss.map(_.metrics("numFiles").value).sum)
+    val ss = scans(q.queryExecution.executedPlan)
+    def sum(m: String) = ss.map(_.metrics(m).value).sum
+    f"wall $wall%6.3f s   scan-rows ${sum("numOutputRows")}%9d   files ${sum("numFiles")}%4d   rows ${r(0).getLong(0)}"
   }
 
   /** Layout LIFECYCLE physics: what appends cost the reader, what
@@ -303,6 +306,12 @@ object Evidence {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(lp), true)
     val zc = Seq("user_id", "ts")
+    // the replica's own users, increment users (pmod(user_id, 20) < 6)
+    // first: 0 is the needle, 0-2 are forgotten, 3-5 tombstoned, 6 and 7
+    // upserted (from the snapshot where a replica has < 8 increment users)
+    val roles = userIds(events).sortBy(u => Math.floorMod(u, 20L) >= 6)
+    require(roles.length >= 8, s"layout lifecycle needs 8 users, the replica has ${roles.length}")
+    val needleUser = roles(0)
     // 70% snapshot + six 5% increments — the daily-OPTIMIZE shape
     val snap = events.where(pmod(col("user_id"), lit(20)) >= 6)
     val st = Layout.zStats(snap, zc)
@@ -319,14 +328,11 @@ object Evidence {
     val (_, wUpdate) = Harness.clock(Layout.manifestUpdate(spark, lp, zc))
     val filesGrown = live().length
     val (t1, t2) = needleSlice(events)
-    val needleBox = Seq(Layout.Bound("user_id", 700L, 700L), Layout.Bound("ts", t1, t2))
+    val needleBox = Seq(Layout.Bound("user_id", needleUser, needleUser), Layout.Bound("ts", t1, t2))
     def needle(df: DataFrame, label: String): Unit = {
       df.limit(1).collect()
-      val q = df.where(col("user_id") === 700L && col("ts").between(t1, t2))
-        .agg(count(lit(1)).as("n"))
-      val (_, wall) = Harness.clock(q.collect())
-      val (rows, files) = scanMetrics(q)
-      println(f"[lifecycle x$mult] needle/$label%-9s wall $wall%6.3f s   scan-rows $rows%9d   files $files%4d")
+      println(f"[lifecycle x$mult] needle/$label%-9s " + needleRun(df.where(
+        col("user_id") === needleUser && col("ts").between(t1, t2)).agg(count(lit(1)).as("n"))))
     }
     needle(spark.read.parquet(lp), "grown")
     // manifest pruning on the grown layout: the needle box's file list
@@ -349,7 +355,7 @@ object Evidence {
     // rewrite — measure the affected fraction and the wall against
     // the full-rewrite comparator above
     val ((dropped, rewritten), wDel) = Harness.clock(Layout.zOrderDelete(spark, lp, zc, st,
-      "user_id", Seq(700L, 701L, 702L)))
+      "user_id", roles.slice(0, 3).toSeq))
     println(f"[lifecycle x$mult] forget: dropped $dropped%d rows, rewrote $rewritten%d/${live().length}%d files   wall $wDel%6.2f s (manifest included)")
     needle(spark.read.parquet(lp), "forgotten")
     // ---- Θ(batch) LOGICAL forgetting (zOrderForget): the same
@@ -359,7 +365,7 @@ object Evidence {
     // The three walls to compare: physical delete above, the logical
     // forget here, and the fold (amortized into maintenance).
     val (masked, wFgt) = Harness.clock(Layout.zOrderForget(spark, lp, "user_id",
-      Seq(703L, 704L, 705L)))
+      roles.slice(3, 6).toSeq))
     println(f"[lifecycle x$mult] forget-tomb: masked $masked%d rows   wall $wFgt%6.2f s   (vs physical $wDel%6.2f s)")
     needle(Layout.readLayout(spark, lp), "fgt-mask")
     val (folded, wFold) = Harness.clock(Layout.zOrderMaintain(spark, lp, zc, st,
@@ -377,14 +383,14 @@ object Evidence {
       spark.read.parquet(path)
     }
     val scratch = s"$out/upsert_batch.parquet"
-    val batch1 = staged(720L, scratch)
+    val batch1 = staged(roles(6), scratch)
     val ((sup, wrote, rw), wUps) = Harness.clock(Layout.zOrderUpsert(spark, lp, zc, st,
       "user_id", batch1))
     println(f"[lifecycle x$mult] upsert: superseded $sup%d rows, wrote $wrote%d, rewrote $rw%d files   wall $wUps%6.2f s")
     val scratch2 = s"$out/upsert_batch2.parquet"
-    val batch2 = staged(721L, scratch2)
+    val batch2 = staged(roles(7), scratch2)
     val (_, wDelApp) = Harness.clock {
-      Layout.zOrderDelete(spark, lp, zc, st, "user_id", Seq(721L))
+      Layout.zOrderDelete(spark, lp, zc, st, "user_id", Seq(roles(7)))
       Layout.zOrderAppend(batch2, zc, lp, st)
       Layout.manifestUpdate(spark, lp, zc)
     }

@@ -34,11 +34,9 @@ private[graft] object Harness {
     * before a timed loop. Otherwise the first query of each table is
     * billed the open/footer cost, and the first window plan, the first
     * typed-groups plan (`overSeries`), the first noop write and the
-    * first of each presentation sort (`queries.Present`: the
-    * single-partition sort most registrations ride, and the range
-    * sampler over a localCheckpoint that the barrier rides) each pay
-    * Catalyst/Janino classloading that has nothing to do with whichever
-    * query would absorb it. */
+    * first presentation sort (`queries.Present`'s single-partition
+    * sort) each pay Catalyst/Janino classloading that has nothing to do
+    * with whichever query would absorb it. */
   def warm(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{avg, col}
@@ -52,8 +50,6 @@ private[graft] object Harness {
       Window.partitionBy("symbol").orderBy("ord").rowsBetween(-4, 0))).count()
     ta.SeriesOps.overSeries(wdf, Seq("close"), Seq("o"))(a => Array(a(0))).count()
     wdf.repartition(1).sortWithinPartitions("symbol", "ord")
-      .write.format("noop").mode("overwrite").save()
-    wdf.localCheckpoint(eager = false).orderBy("ord")
       .write.format("noop").mode("overwrite").save()
   }
 

@@ -82,13 +82,13 @@ object ScaleBench {
         graft.pipeline.Dedup.removeFrequentSpans(
           Tables.documents(spark, dir), minDocs = 5, fpRewrite = Some(true))),
       // the direct leg WITHOUT the registered query's presentation
-      // orderBy, so the replica A/B above compares rewrite scans only
-      // (the registered entry's doc_id sort is its own RangeExchange)
+      // sort, so the replica A/B above compares rewrite scans only (the
+      // registered entry's doc_id sort is its own gather exchange)
       "remove_spans_direct" -> ((spark: SparkSession, dir: String) =>
         graft.pipeline.Dedup.removeFrequentSpans(
           Tables.documents(spark, dir), minDocs = 5, fpRewrite = Some(false))),
       // the beyond-literal-bound set-as-frame leg forced (no sort):
-      // prices the broadcast-join rewrite against the InSet-literal
+      // prices the broadcast-join rewrite against the set-literal
       // direct leg above on the same replica
       "remove_spans_join" -> ((spark: SparkSession, dir: String) =>
         graft.pipeline.Dedup.removeFrequentSpans(

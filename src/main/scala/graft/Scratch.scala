@@ -127,15 +127,16 @@ private[graft] object Scratch {
     }
   }
 
-  /** Release a DEAD localCheckpoint's storage blocks. A checkpointed
-    * frame's plan is one LogicalRDD leaf whose RDD owns the materialized
-    * blocks; freeing is safe ONLY once nothing will scan the frame again
-    * (the lineage is truncated, so a freed checkpoint cannot recompute —
-    * any later scan throws). The blocks go through the context directly
-    * ([[GraftBridge.freeBlocks]]): `RDD.unpersist` would log its "cannot
-    * be recomputed" WARN for every free, and every free here is
-    * deliberate. The freed RDD keeps reporting its old storage level, so
-    * it must never be persisted or scanned again. */
+  /** Release a DEAD localCheckpoint's storage blocks (the iterated frames
+    * of `pipeline.Dedup.components` and `pipeline.Bpe.train`). A
+    * checkpointed frame's plan is one LogicalRDD leaf whose RDD owns the
+    * materialized blocks; freeing is safe ONLY once nothing will scan the
+    * frame again (the lineage is truncated, so a freed checkpoint cannot
+    * recompute — any later scan throws). The blocks go through the context
+    * directly ([[GraftBridge.freeBlocks]]): `RDD.unpersist` would log its
+    * "cannot be recomputed" WARN for every free, and every free here is
+    * deliberate. The freed RDD keeps its old storage level: never persist
+    * or scan it again. */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: LogicalRDD => GraftBridge.freeBlocks(lr.rdd, blocking = false)

@@ -14,25 +14,12 @@ object Verify {
       Harness.attempt(s"[verify] $name failed") {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // the dump is written; free this query's presentation-barrier
-      // blocks so a 276-query verify sweep doesn't pin every output in
-      // storage memory for the JVM's lifetime (same as Bench, r19)
-      graft.queries.Present.releaseBarriers()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(o => only.isEmpty || only(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes ALL control chars: a raw tab or CR in an oracle's SQL
+    // would make oracle_sql.json unparseable and fail every oracle check.
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      scala.jdk.javaapi.CollectionConverters.asJava(
+        SparkEntry.oracleSql.filter(o => only.isEmpty || only(o._1))))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,5 +1,7 @@
 package graft.etl
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -307,20 +309,24 @@ object Layout {
 
   /** Replace `victims` with `rewritten` in ONE [[graft.Swap]] commit,
     * shared by [[zOrderMaintain]], [[zOrderDelete]] and [[zOrderUpsert]].
-    * The rewrite is staged first, and so is the `_manifest` of the
-    * post-swap file set when the layout keeps one (rows of surviving
-    * files carry over, only the new files are scanned). The commit then
-    * drops the victims and promotes the new files (per-write UUID names,
-    * no collision with residents), the manifest and, when given,
-    * `tombstones` as the new `_tombstones` content (empty drops the
-    * sidecar). So a crash never leaves data without its manifest, nor a
-    * shrunk mask over rows the rewrite has not yet replaced. */
+    * The rewrite is staged first (minus an empty part: no manifest row
+    * would list it, and later mutations would refuse), and so is the
+    * `_manifest` of the post-swap file set when the layout keeps one
+    * (rows of surviving files carry over, only new files are scanned).
+    * The commit then drops the victims and promotes the new files
+    * (per-write UUID names, no collision with residents), the manifest
+    * and, when given, `tombstones` as the new `_tombstones` content
+    * (empty drops the sidecar). So a crash never leaves data without its
+    * manifest, nor a shrunk mask over rows the rewrite has not replaced. */
   private def swapIn(spark: SparkSession, path: String, victims: Seq[FileStatus],
                      rewritten: DataFrame, tombstones: Option[Seq[Any]]): Unit = {
     val (fs, root) = fsFor(spark, path)
     val staged = new HPath(Swap.staging(root), "data")
     rewritten.write.mode("overwrite").parquet(staged.toString)
-    val parts = dataFiles(fs, staged).toSeq
+    val parts = dataFiles(fs, staged).toSeq.filter { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(p, fs.getConf))
+      try r.getRecordCount > 0 finally r.close()
+    }
     val gone = victims.map(_.getPath.getName).toSet
     val manifest = manifestColumns(spark, path).map(cols => stageManifest(spark, path,
       dataFiles(fs, root).filterNot(s => gone(s.getPath.getName)) ++ parts, cols, reuse = true))

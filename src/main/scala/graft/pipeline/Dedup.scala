@@ -1582,8 +1582,8 @@ object Dedup {
     * recount makes the set exact under any fp behavior), collected under
     * an explicit bound (`maxLiteralSpans` — a REMOVAL-grade frequent set
     * is boilerplate, bounded by totalSpans/minDocs, not corpus-sized),
-    * and inlined into the returned plan as a native `InSet` probe — the
-    * set hash is built once per task, membership is O(1) per gram
+    * and inlined into the returned plan as a native `InFixedSet` probe —
+    * the set hash is built once per task, membership is O(1) per gram
     * (contrast the per-row `array_intersect` trap documented on
     * [[spanBoilerplateStats]]). The rewrite itself is then a PURE
     * projection: position p is covered iff some gram window
@@ -1637,8 +1637,8 @@ object Dedup {
       // set-size regime dispatch, not a capacity refusal: past the
       // literal bound (a repetition-dominated corpus, or a 100 TB one
       // whose rare-by-definition boilerplate tail is still millions of
-      // grams) the frequent set stops riding the plan as an InSet
-      // literal and stays a distributed frame joined in executor memory
+      // grams) the frequent set stops riding the plan as a set literal
+      // and stays a distributed frame joined in executor memory
       // — no driver-side ceiling. Pays one extra detection pass (the
       // probe collect above) — the price of not guessing the regime.
       spanRewriteJoin(docs, freq.select("gram"), textCol, idCol, k)
@@ -1669,7 +1669,7 @@ object Dedup {
     * STATIC frequent-gram set — shared verbatim by the batch op and the
     * streaming twin (same Columns ⇒ per-doc results identical by
     * construction). Zero shuffles, zero joins: the set rides the plan as
-    * a native `InSet` whose hash is built once per task.
+    * a native `InFixedSet`, hashed once per task, printed by its size.
     *
     * `fpShortCircuit` flips the probe order for singleton-dominated
     * corpora (the dispatcher's call in [[removeFrequentSpans]]): probe
@@ -1691,13 +1691,7 @@ object Dedup {
                                  idCol: String = "doc_id",
                                  k: Int = 3,
                                  fpShortCircuit: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.InSet
-    import org.apache.spark.unsafe.types.UTF8String
-    val hset: Set[Any] =
-      freqGrams.iterator.map(UTF8String.fromString).toSet
-    def isFreq(g: Column): Column =
-      GraftBridge.column(InSet(GraftBridge.expression(g), hset))
+    val grams = graft.functions.InFixedSet.strings(freqGrams)
     // stage the token array as a REAL column first, so every reference
     // below — and in particular the slices inside the transform lambdas,
     // which Catalyst never CSEs — reads the attribute instead of
@@ -1711,19 +1705,16 @@ object Dedup {
     val toks = col("__toks")
     val freqFlags: Column =
       if (!fpShortCircuit)
-        transform(shinglesOfTokens(toks, k), isFreq _)
+        transform(shinglesOfTokens(toks, k), grams.contains _)
       else {
-        val fpSet: Set[Any] =
-          freqGrams.iterator.map(g => java.lang.Long.valueOf(gramPolyFp(g))).toSet
-        def isFpHit(f: Column): Column =
-          GraftBridge.column(InSet(GraftBridge.expression(f), fpSet))
+        val fps = graft.functions.InFixedSet.longs(freqGrams.map(gramPolyFp))
         // gram string for ONE window, built lazily inside the And's
         // right branch; the <k fallback mirrors shingles()
         def gramAt(p: Column): Column =
           when(size(toks) < k, concat_ws(" ", toks))
             .otherwise(concat_ws(" ", slice(toks, p + 1, lit(k))))
         transform(graft.functions.TextHashes.shingleFps(toks, k),
-          (f, p) => isFpHit(f) && isFreq(gramAt(p)))
+          (f, p) => fps.contains(f) && grams.contains(gramAt(p)))
       }
     val staged = docs.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), col("__toks"), freqFlags.as("__freq"))
@@ -1733,8 +1724,8 @@ object Dedup {
   /** Shared rebuild tail of both rewrite legs: from (idCol, __toks,
     * __freq — per-gram-position frequent flags) drop every token covered
     * by a flagged window and re-join the survivors. Pure per-row
-    * projection regardless of where the flags came from (InSet literal
-    * or distributed join), so the two legs are output-identical by
+    * projection regardless of where the flags came from (set literal or
+    * distributed join), so the two legs are output-identical by
     * construction. */
   private def rebuildFromFlags(staged: DataFrame, idCol: String, k: Int): DataFrame = {
     val g = size(col("__freq"))

@@ -2495,16 +2495,14 @@ object PipelineQueries extends Registry {
       // cross-document duplicated-span REMOVAL (the rewrite on top of
       // frequent_spans' detection): tokens covered by any 3-gram in ≥5
       // docs are dropped and the doc rebuilt. The frequent set is exact
-      // per STRING (frequentSpans' recount) and probes via a native
-      // InSet — the rewrite itself is a pure scan (plan-tested, zero
-      // exchanges). minDocs=5 exercises both regimes the synthetic
-      // corpora present: sparse tails (sf0.001/0.01 remove ~9%) and the
-      // template-dominated sf0.1 (~99.8% removed — mass removal IS the
-      // honest stress of the rebuild path). Barrier sort: the frequent
-      // set rides the plan as an InSet literal, and the one-plan sort
-      // measured slower over it (see Present).
+      // per STRING (frequentSpans' recount) and probes via a native set
+      // literal (InFixedSet) — the rewrite itself is a pure scan
+      // (plan-tested, zero exchanges). minDocs=5 exercises both regimes
+      // the synthetic corpora present: sparse tails (sf0.001/0.01 remove
+      // ~9%) and the template-dominated sf0.1 (~99.8% removed — mass
+      // removal IS the honest stress of the rebuild path).
       (spark, dir) =>
-        Present.sortedBarrier(
+        Present.sorted(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5),
           "doc_id"),
       Some(removeFrequentSpansSql)),
@@ -2517,9 +2515,8 @@ object PipelineQueries extends Registry {
       // confirm), while the dispatcher keeps real traffic on whichever
       // probe the regime verdict picks. Its sf-corpus price (fp probe +
       // per-hit string build where ~every position hits) is deliberate.
-      // Barrier sort for the same InSet literal as the leg above.
       (spark, dir) =>
-        Present.sortedBarrier(
+        Present.sorted(
           Dedup.removeFrequentSpans(Tables.documents(spark, dir), minDocs = 5,
             fpRewrite = Some(true)),
           "doc_id"),
@@ -2529,7 +2526,7 @@ object PipelineQueries extends Registry {
       // the beyond-the-literal-bound rewrite leg FORCED (maxLiteralSpans
       // = 0 makes every non-empty frequent set overflow the literal
       // regime): the frequent set stays a distributed frame riding a
-      // broadcast left_semi join instead of collecting to an InSet —
+      // broadcast left_semi join instead of collecting to a set literal —
       // the plan a 100 TB corpus whose boilerplate tail outgrows the
       // 256k driver literal takes. SAME oracle as the other two legs:
       // the set-placement dispatch cannot change a byte of output

@@ -586,7 +586,7 @@ object StreamingOps {
     * meaningless on a stream). Not a re-implementation: the stream runs
     * the SAME pure-projection Columns as the batch
     * [[graft.pipeline.Dedup.removeFrequentSpans]] rewrite leg
-    * (`spanRewrite` — native InSet probe, per-task set hash), so per-doc
+    * (`spanRewrite` — native set probe, per-task set hash), so per-doc
     * results are identical by construction; stateless, shuffle-free,
     * join-free per micro-batch at any reference-set size under the
     * inline bound. Returns (idCol, n_tokens, n_removed, cleaned_text)

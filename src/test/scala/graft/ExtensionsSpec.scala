@@ -122,7 +122,9 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
       "top_k_by_score" -> column(TopKByScore(expression(lit(1.0f)), expression(lit(1L)), 2)
         .toAggregateExpression()),
       "shingle_fps" -> column(TextHashes.ShingleFps(ints, 2)),
-      "repetition_counts" -> column(RepetitionCounts(ints)))
+      "repetition_counts" -> column(RepetitionCounts(ints)),
+      "in_set" -> column(InFixedSet(ints, InFixedSet.strings(Seq("a")))),
+      "in_set (bigint)" -> column(InFixedSet(expression(lit("a")), InFixedSet.longs(Seq(1L)))))
     wrong.foreach { case (name, c) =>
       val e = intercept[org.apache.spark.sql.AnalysisException](spark.range(1).select(c))
       assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$name: ${e.getMessage}")

@@ -49,6 +49,20 @@ class HarnessSpec extends AnyFunSuite with SparkSuite {
     assert(line.getBytes(UTF_8).length < 2048, line)
   }
 
+  test("Bench's stdout line stays under 2 KB when every query fails: the failed list ends in a count") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val all = names.map(_ -> threw)
+    val (line, full) = Bench.lines(all, "32", "/datasets/graft/sf0.1")
+    assert(line.getBytes(UTF_8).length < 2048, line)
+    val f = fields(line)
+    assert(f.map(_._1) == Seq("metric", "value", "unit", "queries", "n_queries", "failed",
+      "full_map", "semantics", "sf"))
+    val shown = f.toMap.apply("failed").asInstanceOf[java.util.List[String]].asScala.toSeq
+    assert(shown.init == names.take(shown.size - 1) && shown.size > 1)
+    assert(shown.last == s"+${names.size - shown.size + 1} more")
+    assert(fields(full).toMap.apply("failed").asInstanceOf[java.util.List[String]].asScala == names)
+  }
+
   test("Bench's full map: every query with its wall and shuffle MB") {
     val (_, full) = Bench.lines(ran, "4", "/data/sf0.001")
     val f = fields(full)

@@ -1642,6 +1642,25 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
       "a batch outside every file interval must touch nothing")
   }
 
+  test("a Layout rewrite that keeps no rows promotes no empty file, so the manifest stays complete") {
+    import graft.etl.Layout
+    val df = spark.range(0, 40).selectExpr("id AS k", "CAST(id AS STRING) AS payload")
+    val st = Layout.zStats(df, Seq("k"))
+    val out = Scratch.dir("graft_zempty_") + "/t"
+    Layout.zOrderWrite(df, Seq("k"), out, bits = 8, numFiles = 2, stats = Some(st))
+    Layout.saveZStats(spark, out, Seq("k"), st)
+    Layout.manifestRefresh(spark, out, Seq("k"))
+    // the tombstone fold empties every file it rewrites
+    Layout.zOrderForget(spark, out, "k", 0L until 40L)
+    assert(Layout.zOrderMaintain(spark, out, Seq("k"), st, bits = 8,
+      smallFileBytes = 1, targetFileBytes = 1L << 30) == 2)
+    val live = new java.io.File(out).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    assert(live.isEmpty, s"no data file may survive an empty rewrite: ${live.map(_.getName).toSeq}")
+    // a manifest-guarded mutation after it must not refuse
+    assert(Layout.zOrderDelete(spark, out, Seq("k"), st, "k", Seq(1L), bits = 8) == ((0L, 0)))
+  }
+
   test("zOrderForget: tombstone mask hides exactly the batch; maintain folds only affected files and clears the sidecar") {
     import org.apache.spark.sql.functions.col
     import graft.etl.Layout

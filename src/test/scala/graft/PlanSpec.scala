@@ -202,31 +202,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       s"keep filter must run ONE counting pass per row, got:\n$plan")
   }
 
-  test("sortedBarrier plans as a checkpoint leaf under the presentation sort") {
-    // the r18 barrier: the sort's range sampler must read stored blocks
-    // (Scan ExistingRDD), never re-execute the body — pinned because the
-    // optimizer could legally collapse an un-checkpointed plan back
-    val df = graft.queries.Present.sortedBarrier(
-      docs(50).select(col("doc_id"), length(col("text")).as("len")), "doc_id")
-    val plan = executedPlan(df)
-    graft.queries.Present.releaseBarriers()
-    assert(plan.contains("ExistingRDD"),
-      s"barriered sort must scan the checkpointed leaf:\n$plan")
-    assert(plan.contains("rangepartitioning"),
-      s"presentation sort must still be a single range sort:\n$plan")
-  }
-
-  test("releaseBarriers frees the barrier's checkpoint blocks") {
-    val df = graft.queries.Present.sortedBarrier(spark.range(0, 100, 1, 2).toDF("k"), "k")
-    df.collect()
-    val ids = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
-    assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
-    graft.queries.Present.releaseBarriers()
-    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains))
-  }
-
   test("Present.sorted plans as one single-partition sort over the body") {
     // the default presentation sort: one plan, no
     // checkpoint leaf, no range sampler, one gather exchange
@@ -243,16 +218,47 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       s"exactly one SinglePartition exchange:\n$plan")
   }
 
-  test("Present.sorted and sortedBarrier yield the body's rows ordered by unique keys") {
+  test("Present.sorted yields the body's rows ordered by unique keys") {
     // 4 input partitions, each holding keys from across the range, so
-    // both forms must interleave them; keys are unique, as every
-    // registration's are (neither form specifies the order of ties)
+    // the sort must interleave them; keys are unique, as every
+    // registration's are (the sort does not specify the order of ties)
     val body = spark.range(0, 200, 1, 4)
       .select((col("id") * 7 % 200).as("k"), (col("id") * 3).as("v"))
     val expected = body.collect().toSeq.sortBy(_.getLong(0))
     assert(graft.queries.Present.sorted(body, "k").collect().toSeq == expected)
-    assert(graft.queries.Present.sortedBarrier(body, "k").collect().toSeq == expected)
-    graft.queries.Present.releaseBarriers()
+  }
+
+  test("frequent-span removal over a 10k-gram set: one plan, one gather, the set printed by its size") {
+    // two copies of one 10,002-token doc: its 10,000 3-grams are all
+    // frequent at minDocs = 2, and the set rides the plan as a literal
+    val n = 10002
+    val text = (0 until n).map(i => s"w$i").mkString(" ")
+    val corpus = spark.createDataFrame(Seq((0L, text), (1L, text), (2L, "a lone doc")))
+      .toDF("doc_id", "text")
+    val grams = (0 until n - 2).map(i => s"w$i w${i + 1} w${i + 2}")
+    Seq(false, true).foreach { fp =>
+      val df = graft.queries.Present.sorted(
+        Dedup.removeFrequentSpans(corpus, minDocs = 2, fpRewrite = Some(fp)), "doc_id")
+      val plan = executedPlan(df)
+      assert(!plan.contains("ExistingRDD") && !df.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]), s"fp=$fp: no checkpoint leaf:\n$plan")
+      val exchanges = physicalNodes(df.queryExecution.executedPlan).collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      assert(exchanges.map(_.outputPartitioning) ==
+        Seq(org.apache.spark.sql.catalyst.plans.physical.SinglePartition),
+        s"fp=$fp: exactly one SinglePartition exchange:\n$plan")
+      assert(df.collect().map(_.getAs[Int]("n_removed")).toSeq == Seq(n, n, 0))
+      val described = df.queryExecution.toString
+      val rewriteSql = df.queryExecution.analyzed.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project => p.projectList
+      }.flatten.filter(_.name == "__freq").map(_.sql)
+      assert(rewriteSql.nonEmpty, s"fp=$fp: the rewrite column is in the analyzed plan")
+      (described +: rewriteSql).foreach { text =>
+        assert(text.length < 60000, s"fp=$fp: ${text.length} chars")
+        assert(!grams.exists(text.contains), s"fp=$fp: a gram is printed in:\n${text.take(2000)}")
+      }
+    }
   }
 
   test("identical-signature collapse adds exactly one exchange, and it is reused") {
@@ -588,7 +594,7 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   test("frequent-span removal rewrite is a pure scan: zero exchanges, no join") {
     val d = docs(40)
     // the frequent set is collected at construction time and inlined as a
-    // native InSet probe, so the REWRITE plan a consumer actually runs —
+    // native set probe (InFixedSet), so the REWRITE plan a consumer actually runs —
     // the thing that scans the 100 TB corpus — must stay join-free and
     // shuffle-free regardless of set size
     val rewrite = Dedup.removeFrequentSpans(d, minDocs = 2)
