@@ -1,6 +1,6 @@
 package graft.bt
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -142,9 +142,8 @@ object Sequential {
   }
 
   /** Distributed multi-portfolio driver: each portfolio's event loop runs
-    * inside ONE task via `SeriesOps.groupsBySeries(portfolio).flatMapGroups`
-    * — the same shape Vectorized uses per symbol, with `portfolio` as the
-    * series key: a fixed hash partitioning that adaptive execution does
+    * inside ONE task via the series fold ([[graft.ta.SeriesFold]]) — the same
+    * shape Vectorized uses per symbol, with `portfolio` as the series key: a fixed hash partitioning that adaptive execution does
     * not coalesce, so portfolios spread over every core. Portfolios are
     * embarrassingly parallel across executors; each loop stays
     * sequential, as an order-queue simulation must. Nothing is collected
@@ -166,15 +165,13 @@ object Sequential {
                     cfg: Config = Config()): DataFrame = {
     val proj = df.select(col("portfolio").cast(StringType), col("symbol").cast(StringType),
       col("ord").cast(LongType), col("close").cast(DoubleType))
-    val schema = StructType(Seq(
-      StructField("portfolio", StringType), StructField("ord", LongType),
-      StructField("equity", DoubleType)))
-    graft.ta.SeriesOps.groupsBySeries(proj, "portfolio")
-      .flatMapGroups { (pf: String, it: Iterator[Row]) =>
-        val rows = it.toArray
-        val ords = rows.map(_.getLong(2)).distinct.sorted
+    graft.ta.SeriesFold(proj, "portfolio", "ord", Seq("portfolio"),
+      Seq(StructField("ord", LongType), StructField("equity", DoubleType))) { () =>
+      val out = new graft.ta.SeriesFold.Out(3)
+      (_, rows) => {
+        val ords = rows.map(_.getLong(2)).distinct // rows arrive sorted by ord
         val idx = ords.zipWithIndex.toMap
-        val syms = rows.map(_.getString(1)).distinct.sorted
+        val syms = rows.map(_.getUTF8String(1).toString).distinct.sorted
         // missing (symbol, ord) cells AND null closes stay 0.0 —
         // OrderContext rejects zero-price orders, matching the pre-grid
         // default-fill contract (a NaN here would instead make strategy
@@ -182,11 +179,13 @@ object Sequential {
         val closes: Map[String, Array[Double]] =
           syms.map(s => s -> new Array[Double](ords.length)).toMap
         rows.foreach { r =>
-          closes(r.getString(1))(idx(r.getLong(2))) =
+          closes(r.getUTF8String(1).toString)(idx(r.getLong(2))) =
             if (r.isNullAt(3)) 0.0 else r.getDouble(3)
         }
         val res = run(ords.length, mkStrategy(syms, closes), cfg)
-        ords.indices.iterator.map(i => Row(pf, ords(i), res.equity(i)))
-      }(Encoders.row(schema))
+        ords.indices.iterator.map(i =>
+          out.start().stringAt(rows(0), 0).long(ords(i)).double(res.equity(i)).row)
+      }
+    }
   }
 }

@@ -1,14 +1,15 @@
 package graft.bt
 
-import graft.ta.SeriesOps
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import graft.ta.{SeriesFold, SeriesOps}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Signal-driven vectorized backtester — port of reference
   * `src/backtest/vectorized.rs:69-224`, lifted from single-asset to
   * per-symbol-parallel: the same scan-fold runs inside
-  * `SeriesOps.groupsBySeries(symbol).flatMapGroups`, so a universe of
+  * the series fold ([[SeriesFold]]), so a universe of
   * symbols backtests in one shuffle with each symbol's fold sequential
   * (as it must be) and symbols embarrassingly parallel across executors.
   * That shuffle is the series partitioning ([[SeriesOps.bySeries]]), a
@@ -83,57 +84,53 @@ object Vectorized {
     SeriesResult(posA, cashA, eqA, s.trades, s.wins)
   }
 
-  private def foldGroups[T](df: DataFrame, outSchema: StructType, cfg: Config)
-                           (emit: (String, Array[Long], SeriesResult, Array[Double]) => Iterator[Row]): DataFrame = {
+  /** The scan per symbol; `emit` writes the symbol's output rows (`keep`
+    * columns of the projected input, then `added`) from its rows, the
+    * scan's result and its prices. */
+  private def foldGroups(df: DataFrame, keep: Seq[String], added: Seq[String], cfg: Config)
+                        (emit: (SeriesFold.Out, Array[InternalRow], SeriesResult, Array[Double]) =>
+                          Iterator[InternalRow]): DataFrame = {
     val proj = df.select(
       col("symbol").cast(StringType), col("ord").cast(LongType),
       col("price").cast(DoubleType), col("buy_sig").cast(BooleanType),
       col("sell_sig").cast(BooleanType))
-    SeriesOps.groupsBySeries(proj, "symbol")
-      .flatMapGroups { (sym: String, it: Iterator[Row]) =>
-        val rows = it.toArray
-        java.util.Arrays.sort(rows, Ordering.by((r: Row) => r.getLong(1)))
-        val ords = rows.map(_.getLong(1))
+    SeriesFold(proj, "symbol", "ord", keep, added.map(StructField(_, DoubleType))) { () =>
+      val out = new SeriesFold.Out(keep.length + added.length)
+      (_, rows) => {
         val prices = rows.map(r => if (r.isNullAt(2)) Double.NaN else r.getDouble(2))
         val buys = rows.map(r => !r.isNullAt(3) && r.getBoolean(3))
         val sells = rows.map(r => !r.isNullAt(4) && r.getBoolean(4))
-        emit(sym, ords, runSeries(prices, buys, sells, cfg), prices)
-      }(Encoders.row(outSchema))
+        emit(out, rows, runSeries(prices, buys, sells, cfg), prices)
+      }
+    }
   }
 
   /** Per-bar portfolio curves: (symbol, ord, position, cash, equity). */
-  def run(df: DataFrame, cfg: Config = Config()): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("symbol", StringType), StructField("ord", LongType),
-      StructField("position", DoubleType), StructField("cash", DoubleType),
-      StructField("equity", DoubleType)))
-    foldGroups(df, schema, cfg) { (sym, ords, r, _) =>
-      ords.indices.iterator.map(i =>
-        Row(sym, ords(i), r.positions(i), r.cash(i), r.equity(i)))
+  def run(df: DataFrame, cfg: Config = Config()): DataFrame =
+    foldGroups(df, Seq("symbol", "ord"), Seq("position", "cash", "equity"), cfg) { (out, rows, r, _) =>
+      rows.indices.iterator.map(i => out.start().stringAt(rows(i), 0).longAt(rows(i), 1)
+        .double(r.positions(i)).double(r.cash(i)).double(r.equity(i)).row)
     }
-  }
 
   /** Per-symbol summary (metrics.rs-port applied to each symbol's curve). */
-  def summary(df: DataFrame, cfg: Config = Config()): DataFrame = {
-    val schema = StructType(StructField("symbol", StringType) ::
-      Metrics.columns.toList.map(StructField(_, DoubleType)))
-    foldGroups(df, schema, cfg) { (sym, _, r, _) =>
-      val m = Metrics.summary(r.equity, Array.empty, cfg.initialCapital, r.trades, r.wins)
-      Iterator.single(Row.fromSeq(sym +: Metrics.columns.map(m)))
-    }
-  }
+  def summary(df: DataFrame, cfg: Config = Config()): DataFrame =
+    summaries(df, cfg)(_ => Array.empty)
 
   /** Per-symbol summary with CAPM alpha/beta measured against the
     * symbol's own price curve as the benchmark (buy-and-hold): the
     * benchmark series Metrics needs is exactly the bar-aligned price
     * array the fold already has, so no extra input or join — and beta is
     * genuinely nonzero whenever the strategy holds the asset at all. */
-  def summaryVsPrice(df: DataFrame, cfg: Config = Config()): DataFrame = {
-    val schema = StructType(StructField("symbol", StringType) ::
-      Metrics.columns.toList.map(StructField(_, DoubleType)))
-    foldGroups(df, schema, cfg) { (sym, _, r, prices) =>
-      val m = Metrics.summary(r.equity, prices, cfg.initialCapital, r.trades, r.wins)
-      Iterator.single(Row.fromSeq(sym +: Metrics.columns.map(m)))
+  def summaryVsPrice(df: DataFrame, cfg: Config = Config()): DataFrame =
+    summaries(df, cfg)(identity)
+
+  /** One row per symbol: the symbol, then [[Metrics.columns]] against
+    * the benchmark `bench` derives from the symbol's prices. */
+  private def summaries(df: DataFrame, cfg: Config)(bench: Array[Double] => Array[Double]): DataFrame =
+    foldGroups(df, Seq("symbol"), Metrics.columns, cfg) { (out, rows, r, prices) =>
+      val m = Metrics.summary(r.equity, bench(prices), cfg.initialCapital, r.trades, r.wins)
+      out.start().stringAt(rows(0), 0)
+      Metrics.columns.foreach(c => out.double(m(c)))
+      Iterator.single(out.row)
     }
-  }
 }

@@ -1,8 +1,9 @@
 package graft.etl
 
-import graft.ta.SeriesOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.ta.SeriesFold
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, GenericInternalRow,
+  InterpretedUnsafeProjection}
 import org.apache.spark.sql.functions._
 
 /** Multi-file market-data alignment ETL — port of reference
@@ -14,11 +15,14 @@ import org.apache.spark.sql.functions._
   *     (= Polars `concat(how="diagonal_relaxed")`)
   *   - dates × symbols grid via crossJoin (symbols side broadcast — it is
   *     small by construction; the grid never materializes on the driver)
-  *   - left-join the data onto the grid, sort, per-symbol forward/backward/
-  *     zero fill via `last/first(ignoreNulls)` windows, then default fill
+  *   - left-join the data onto the grid, then per-symbol forward/backward
+  *     fill (the last non-null value per column in date order) and the
+  *     default fill in one pass of the series fold
+  *     ([[graft.ta.SeriesFold]], not a window), or the zero fill as a
+  *     projection
   *
   * Scale: the shuffles are the distinct()s, the grid join and one
-  * repartition of the join output by symbol for the fill windows. That
+  * repartition of the join output by symbol for the fill. That
   * repartition is the series partitioning
   * ([[graft.ta.SeriesOps.bySeries]]): a fixed hash partitioning that
   * adaptive execution does not coalesce, so the fill runs one task per
@@ -63,13 +67,13 @@ object Align {
   /** Grid + fill on an already-loaded long frame. With `sorted = true`
     * (the default, reference-parity presentation) output rows are ordered
     * by (date, symbol) — the final orderBy guarantees it for every fill
-    * strategy, including "backward" whose fill window scans descending.
+    * strategy, including "backward" whose fill scans descending.
     * That orderBy is a full range exchange + global sort that exists for
     * OUTPUT ORDERING only — the grid and fills are complete without it —
     * and at corpus scale it is the operator's single biggest cost (the
     * #1 line of the sf0.1 bench). Pass `sorted = false` when downstream
     * consumers don't care about row order (joins, aggregations, writes
-    * partitioned by symbol): the plan then ends at the fill projection
+    * partitioned by symbol): the plan then ends at the fill
     * with no global Sort/RangeExchange (plan-pinned in PlanSpec). */
   def align(master: DataFrame, dateCol: String = "date", symbolCol: String = "symbol",
             fillNullStrategy: String = "forward", defaultFillValue: Double = 0.0,
@@ -82,32 +86,35 @@ object Align {
     var aligned = grid.join(master, Seq(dateCol, symbolCol), "left")
 
     if (valueCols.nonEmpty) {
-      // a running last-non-null over the series partitioning of the join
-      // output, in the given date order
-      def fill(order: Column): DataFrame = {
-        val w = Window.partitionBy(symbolCol).orderBy(order)
-          .rowsBetween(Window.unboundedPreceding, 0)
-        SeriesOps.bySeries(aligned, symbolCol).select(col(dateCol) +: col(symbolCol) +:
-          valueCols.map(c => last(col(c), ignoreNulls = true).over(w).as(c)): _*)
-      }
-      fillNullStrategy match {
-        case "forward" => aligned = fill(col(dateCol))
-        // backward fill = forward fill over the REVERSED date order. The
-        // natural formulation — first(ignoreNulls) over (0,
-        // unboundedFollowing) — makes Spark re-scan the remainder of the
-        // partition for EVERY row (growing-from-below frames are not
-        // maintained incrementally): O(rows²) per symbol, measured 573 s at
-        // sf0.1 vs 8.5 s for the forward twin. A running
-        // (unboundedPreceding, 0) frame over descending dates is the same
-        // value, maintained incrementally — O(rows).
-        case "backward" => aligned = fill(col(dateCol).desc)
-        case "zero" =>
-          aligned = aligned.select(col(dateCol) +: col(symbolCol) +:
-            valueCols.map(c => coalesce(col(c), lit(0.0)).as(c)): _*)
+      def coalesced(v: Double) = aligned.select(col(dateCol) +: col(symbolCol) +:
+        valueCols.map(c => coalesce(col(c), lit(v)).as(c)): _*)
+      aligned = fillNullStrategy match {
+        case "zero" => coalesced(0.0)
+        // each value column's last non-null value over the series in date
+        // order (backward = forward over descending dates), then the
+        // default fill, in one pass of the series fold
+        case "forward" | "backward" =>
+          val out = coalesced(defaultFillValue)
+          val exprs = out.queryExecution.analyzed.expressions
+            .map(BindReferences.bindReference(_, aligned.queryExecution.analyzed.output))
+          val types = aligned.schema.map(_.dataType).toArray
+          SeriesFold(aligned, symbolCol, dateCol, Seq(dateCol, symbolCol), out.schema.drop(2),
+            descending = fillNullStrategy == "backward") { () =>
+            val project = InterpretedUnsafeProjection.createProjection(exprs)
+            (_, rows) => {
+              val last = new GenericInternalRow(types.length)
+              rows.iterator.map { r => // date and symbol lead the join output
+                var j = 0
+                while (j < types.length) {
+                  if (j < 2 || !r.isNullAt(j)) last.update(j, r.get(j, types(j)))
+                  j += 1
+                }
+                project(last)
+              }
+            }
+          }
         case other => throw new IllegalArgumentException(s"fill strategy: $other")
       }
-      aligned = aligned.select(col(dateCol) +: col(symbolCol) +:
-        valueCols.map(c => coalesce(col(c), lit(defaultFillValue)).as(c)): _*)
     }
     if (sorted) aligned.orderBy(dateCol, symbolCol) else aligned
   }

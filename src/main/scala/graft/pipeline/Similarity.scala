@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -599,7 +601,8 @@ object Similarity {
   def ivfQuery(spark: org.apache.spark.sql.SparkSession, path: String, queries: DataFrame,
                k: Int = DefaultTopK, nprobe: Int = DefaultNProbe, idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = readArtifact(spark, path, "centroids")
+    // the IVF lists carry the caller's id column, so their schema is read
     val assignments = spark.read.parquet(s"$path/lists")
     ivfProbe(centroids, assignments, queries, k, nprobe, idCol, vecCol)
   }
@@ -818,11 +821,32 @@ object Similarity {
     pqAdcRerank(spark.read.parquet(s"$path/codes"), corpus, queries,
       readPqCodebook(spark, s"$path/codebook"), k, shortlist, idCol, vecCol)
 
+  /** The schemas the index writers give their artifacts (`centroids`,
+    * `codebook`, `meta`, the IVF-PQ `ids` sidecar and cid-partitioned
+    * `lists`), as Spark reads them back. A read that declares its schema
+    * runs no schema-inference job (one footer read per inferred read). */
+  private[graft] val ArtifactSchemas: Map[String, StructType] = {
+    val doubles = ArrayType(DoubleType)
+    Map(
+      "centroids" -> StructType(Seq(StructField("cid", IntegerType), StructField("centroid", doubles))),
+      "codebook" -> StructType(Seq(StructField("j", IntegerType), StructField("k", IntegerType),
+        StructField("c", doubles))),
+      "meta" -> StructType(Seq(StructField("residual", BooleanType))),
+      "ids" -> StructType(Seq(StructField("corpus_id", LongType), StructField("cid", IntegerType))),
+      "lists" -> StructType(Seq(StructField("corpus_id", LongType),
+        StructField("codes", ArrayType(IntegerType)), StructField("cid", IntegerType))))
+  }
+
+  /** Read the index artifact `name` under `path` with its written schema. */
+  private[graft] def readArtifact(spark: org.apache.spark.sql.SparkSession, path: String,
+                                  name: String): DataFrame =
+    spark.read.schema(ArtifactSchemas(name)).parquet(s"$path/$name")
+
   /** Load a codebook written by [[pqWrite]]/[[ivfPqWrite]] back into the
     * driver-side (j)(k)(d) array shape the encode/ADC expressions take. */
   private[graft] def readPqCodebook(spark: org.apache.spark.sql.SparkSession,
                                     path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(path).collect()
+    val rows = spark.read.schema(ArtifactSchemas("codebook")).parquet(path).collect()
     require(rows.nonEmpty, s"readPqCodebook: empty codebook at $path")
     val cbMap = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
     val mEff = rows.iterator.map(_.getInt(0)).max + 1
@@ -965,7 +989,7 @@ object Similarity {
     * after heavy churn to re-tighten. */
   def ivfPqIdsRefresh(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     graft.Swap.recovered(spark, path)
-    spark.read.parquet(s"$path/lists")
+    readArtifact(spark, path, "lists")
       .select(col("corpus_id"), col("cid").cast("int").as("cid"))
       .repartitionByRange(col("corpus_id"))
       .sortWithinPartitions("corpus_id")
@@ -1001,7 +1025,7 @@ object Similarity {
 
   /** The lists with a uniform schema: (cid int, corpus_id, codes). */
   private def readLists(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/lists")
+    readArtifact(spark, path, "lists")
       .select(col("cid").cast("int").as("cid"), col("corpus_id"), col("codes"))
 
   /** Cells holding more than `maxFilesPerCell` data files. */
@@ -1055,7 +1079,7 @@ object Similarity {
       s"ivfPqAppend: index at $path carries no encoding-mode marker (meta parquet) — " +
       "appending without knowing raw-vs-residual would corrupt the lists silently; " +
       "rewrite the index with ivfPqWrite/ivfPqResWrite to stamp it"))
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = readArtifact(spark, path, "centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2)
     val cb = readPqCodebook(spark, s"$path/codebook")
     val codes =
@@ -1115,7 +1139,7 @@ object Similarity {
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/ids"))) {
         val cap = spark.conf.getOption("spark.graft.ann.maxDeleteDiscoveryIds")
           .map(_.toInt).getOrElse(1 << 20)
-        val sidecar = spark.read.parquet(s"$path/ids")
+        val sidecar = readArtifact(spark, path, "ids")
         val delIds = del.limit(cap + 1).collect().map(_.getLong(0))
         val probed =
           if (delIds.length <= cap)
@@ -1248,8 +1272,8 @@ object Similarity {
     if (deadTotal > 0 && fs.exists(idsPath)) {
       val ratio = spark.conf.getOption("spark.graft.ann.sidecarRefreshRatio")
         .map(_.toDouble).getOrElse(0.1)
-      val sidecarRows = spark.read.parquet(s"$path/ids").count()
-      val liveRows = spark.read.parquet(s"$path/lists").count()
+      val sidecarRows = readArtifact(spark, path, "ids").count()
+      val liveRows = readArtifact(spark, path, "lists").count()
       if (sidecarRows > liveRows * (1.0 + ratio)) ivfPqIdsRefresh(spark, path)
     }
     (deadTotal, touched.size)
@@ -1346,7 +1370,7 @@ object Similarity {
   private def ivfPqResScored(spark: org.apache.spark.sql.SparkSession, path: String,
                              queries: DataFrame, nprobe: Int,
                              idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = readArtifact(spark, path, "centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2)
     val cb = readPqCodebook(spark, s"$path/codebook")
     val mEff = cb.length
@@ -1400,9 +1424,9 @@ object Similarity {
   private def ivfPqPrunedCodes(spark: org.apache.spark.sql.SparkSession, path: String,
                                qDf: DataFrame, nprobe: Int,
                                extraQc: Option[DataFrame] = None): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = readArtifact(spark, path, "centroids")
     val probes = ivfPqProbes(centroids, qDf, nprobe)
-    val base = spark.read.parquet(s"$path/lists")
+    val base = readArtifact(spark, path, "lists")
       .join(broadcast(probes), "cid")
       .join(broadcast(qDf.select("query_id", "lut")), "query_id")
     extraQc.fold(base)(qc => base.join(broadcast(qc), Seq("query_id", "cid")))
@@ -1467,7 +1491,7 @@ object Similarity {
     * cid-partitioned lists where they sit, nothing driver-side). */
   def loadIvfPq(spark: org.apache.spark.sql.SparkSession, path: String,
                 maxRows: Long = -1L): IvfPqIndex = {
-    val listsDf = spark.read.parquet(s"$path/lists")
+    val listsDf = readArtifact(spark, path, "lists")
       .select(col("cid").cast("int"), col("corpus_id"), col("codes"))
     val bound =
       if (maxRows >= 0) maxRows
@@ -1479,7 +1503,7 @@ object Similarity {
       "collect/broadcast; probe it in place with StreamingOps.annAdcStreamJoin " +
       "(stream-static join against the cid-partitioned lists), or raise " +
       "spark.graft.ann.maxIndexRows / the maxRows argument if the driver has headroom")
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = readArtifact(spark, path, "centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2)
     val cb = readPqCodebook(spark, s"$path/codebook")
     val lists = listsDf.collect()
@@ -1496,7 +1520,7 @@ object Similarity {
                                    path: String): Option[Boolean] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/meta")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(s"$path/meta").select("residual").head.getBoolean(0))
+    if (fs.exists(p)) Some(readArtifact(spark, path, "meta").select("residual").head.getBoolean(0))
     else None
   }
 

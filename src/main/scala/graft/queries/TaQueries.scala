@@ -33,7 +33,7 @@ object TaQueries extends Registry {
   }
 
   /** Loop-op query: overSeries output (inputs carried) → rounded outputs,
-    * sorted like [[frameQ]]: the typed flatMapGroups kernel loop runs
+    * sorted like [[frameQ]]: the series-fold kernel loop runs
     * once, feeding the single-partition sort directly. */
   private def recQ(outs: String*)(f: DataFrame => DataFrame): Q = (spark, dir) =>
     Present.sorted(f(Tables.bars(spark, dir))
@@ -1278,8 +1278,8 @@ object TaQueries extends Registry {
     Entry("bt_sequential",
       // The event-driven engine is inherently serial per portfolio
       // (SURVEY.md §3.3), but the fold itself runs INSIDE a task:
-      // runPortfolios groups by portfolio and executes the event loop in
-      // flatMapGroups, so nothing crosses the driver and a universe of
+      // runPortfolios folds per portfolio on the series fold, so
+      // nothing crosses the driver and a universe of
       // portfolios backtests in parallel. The demo runs one symbol's bar
       // stream through a scripted momentum strategy.
       (spark, dir) => {

@@ -1,37 +1,37 @@
 package graft.ta
 
-import org.apache.spark.sql.{DataFrame, Encoders, KeyValueGroupedDataset, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Generic distributed executor for per-series recurrence kernels.
   *
-  * `overSeries` groups the frame by `symbol`, sorts each group by `ord`,
-  * hands the input columns to an array kernel, and emits
+  * `overSeries` folds the frame per `symbol` ([[SeriesFold]]), each
+  * series sorted by `ord`, hands the input columns to an array kernel, and emits
   * `(symbol, ord, outCols…)` rows. This is the idiomatic Spark shape for
   * order-dependent state machines (SURVEY.md §7.2): one shuffle on the
   * series key, then embarrassingly parallel sequential folds.
   *
-  * Partitioning contract: the typed per-series stages in graft (this
-  * fold, [[graft.bt.Vectorized]], [[graft.bt.Sequential.runPortfolios]])
-  * and the [[graft.etl.Align]] fill window run on [[bySeries]]'s
-  * partitioning, a fixed hash partitioning on the series key into the
-  * session's shuffle partition count. Adaptive execution never coalesces
-  * such a repartition, so a small universe still runs one task per core
-  * rather than one task in all (AQE will not make a coalesced partition
-  * smaller than `coalescePartitions.minPartitionSize`, 1 MB). A frame
-  * that is already partitioned that way is not shuffled again: the
-  * planner drops a repartition whose child already has the same hash
-  * partitioning. The sources ([[graft.Tables.series]]/`bars`) carry no
-  * partitioning, so a reader that never groups by series pays no
-  * shuffle, and Column windows keep Spark's own window exchange. The
-  * typed folds group on the key COLUMN ([[groupsBySeries]]), not on a
-  * key lambda, so no `AppendColumns` deserializes each row just to read
-  * its key, and the grouping reuses the series exchange. A literal key
-  * (e.g. `lit("p0")` as the portfolio) is one series: the optimizer
-  * would fold it into the repartition, which the grouping cannot reuse,
-  * so [[groupsBySeries]] leaves the grouping's own exchange as the only
-  * one.
+  * Partitioning contract: graft's batch per-series folds (this one,
+  * [[graft.bt.Vectorized]]'s, [[graft.bt.Sequential.runPortfolios]] and
+  * the [[graft.etl.Align]] fill) all run on one operator, [[SeriesFold]],
+  * over [[bySeries]]'s partitioning: a fixed hash partitioning on the
+  * series key into the session's shuffle partition count. Adaptive
+  * execution never coalesces such a repartition, so a small universe
+  * still runs one task per core rather than one task in all (AQE will
+  * not make a coalesced partition smaller than
+  * `coalescePartitions.minPartitionSize`, 1 MB). The operator requires
+  * only that rows of a series share a partition, so it reuses the series
+  * exchange; it sorts each partition itself, and passes the key column
+  * through, so its output keeps the partitioning and a frame already
+  * partitioned that way is not shuffled again (the planner drops a
+  * repartition whose child already has the same hash partitioning). The
+  * sources ([[graft.Tables.series]]/`bars`) carry no partitioning, so a
+  * reader that never groups by series pays no shuffle, and Column
+  * windows keep Spark's own window exchange. A literal key (e.g.
+  * `lit("p0")` as the portfolio) is one series: the optimizer would fold
+  * it into the repartition, which the operator cannot reuse, so the
+  * operator's own exchange is the only one.
   *
   * Scale: one series' full history is materialized on one executor —
   * correct for daily/bar-level data (thousands of rows per key, millions of
@@ -52,26 +52,6 @@ object SeriesOps {
   def bySeries(df: DataFrame, key: String): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(key))
 
-  /** [[bySeries]], grouped on the (string) `key` column itself; each
-    * group's values are `df`'s full rows, key included. */
-  def groupsBySeries(df: DataFrame, key: String): KeyValueGroupedDataset[String, Row] =
-    (if (literalKey(df, key)) df else bySeries(df, key))
-      .groupBy(col(key)).as[String, Row](Encoders.STRING, Encoders.row(df.schema))
-
-  /** Whether `key` is a literal in `df`'s analyzed plan: its alias, read
-    * through projections and casts, has a foldable child. */
-  private def literalKey(df: DataFrame, key: String): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression}
-    val plan = df.queryExecution.analyzed
-    val aliases = plan.flatMap(_.expressions).collect { case a: Alias => a.exprId -> a.child }.toMap
-    def literal(e: Expression): Boolean = e match {
-      case Cast(c, _, _, _) => literal(c)
-      case a: Attribute => aliases.get(a.exprId).exists(literal)
-      case _ => e.foldable
-    }
-    plan.output.find(_.name == key).exists(literal)
-  }
-
   /** @param df   input with `symbol` (string), `ord` (castable to long) and `in` numeric columns
     * @param in   input column names fed to the kernel (cast to double; null → NaN)
     * @param out  output column names
@@ -89,14 +69,10 @@ object SeriesOps {
       col("symbol").cast(StringType) +:
       col("ord").cast(LongType) +:
       carried.map(c => col(c).cast(DoubleType)): _*)
-    val outSchema = StructType(
-      StructField("symbol", StringType) ::
-      StructField("ord", LongType) ::
-      (carried.toList ++ out.toList).map(StructField(_, DoubleType)))
-    val inIdx = in.map(c => carried.indexOf(c) + 2)
-    groupsBySeries(proj, "symbol")
-      .flatMapGroups { (sym: String, it: Iterator[Row]) =>
-        val rows = it.toArray
+    val inIdx = in.map(c => carried.indexOf(c) + 2).toArray
+    SeriesFold(proj, "symbol", "ord", proj.columns.toSeq, out.map(StructField(_, DoubleType))) { () =>
+      val row = new SeriesFold.Out(2 + carried.length + out.length)
+      (sym, rows) => {
         // One series' history is materialized on one executor. Guard the
         // assumption instead of OOMing opaquely: beyond this bound, run the
         // kernel's step form through overSeriesChunked (state carried
@@ -106,8 +82,7 @@ object SeriesOps {
           s"series '$sym' has ${rows.length} rows (> $MaxRowsPerSeries); " +
             "use SeriesOps.overSeriesChunked (or overSeriesAuto) with the " +
             "kernel's Chunked.StepKernel form for unbounded series")
-        java.util.Arrays.sort(rows, Ordering.by((r: Row) => r.getLong(1)))
-        val ins = inIdx.toArray.map { j =>
+        val ins = inIdx.map { j =>
           Array.tabulate(rows.length) { i =>
             if (rows(i).isNullAt(j)) Double.NaN else rows(i).getDouble(j)
           }
@@ -115,12 +90,16 @@ object SeriesOps {
         val outs = f(ins)
         require(outs.length == out.length, s"kernel returned ${outs.length} cols, expected ${out.length}")
         rows.indices.iterator.map { i =>
-          Row.fromSeq(
-            sym +: rows(i).getLong(1) +:
-            (carried.indices.map(j => if (rows(i).isNullAt(j + 2)) null else rows(i).getDouble(j + 2)) ++
-             outs.indices.map(j => if (java.lang.Double.isNaN(outs(j)(i))) null else outs(j)(i))))
+          val r = rows(i)
+          row.start().stringAt(r, 0).longAt(r, 1)
+          var j = 0
+          while (j < carried.length) { row.doubleAt(r, j + 2); j += 1 }
+          j = 0
+          while (j < outs.length) { row.nanNull(outs(j)(i)); j += 1 }
+          row.row
         }
-      }(Encoders.row(outSchema))
+      }
+    }
   }
 
   /** Chunked-state executor for UNBOUNDED series: the same per-series

@@ -1058,6 +1058,51 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(got == bf, "full-coverage probe over write+append must equal brute force")
   }
 
+  /** 40 8-dim vectors; an IVF-PQ index of the first 20 at a fresh dir. */
+  private def smallIvfPq(): (org.apache.spark.sql.DataFrame, String) = {
+    val vecs = (0L until 40L).map { i =>
+      (i, (0 until 8).map(d =>
+        (java.lang.Math.floorMod(graft.functions.TextHashes.splitmix(i * 31 + d), 1000L)
+          .toDouble / 500.0) - 1.0))
+    }
+    val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
+    val dir = Scratch.dir("graft_ivfpq_small_")
+    Similarity.ivfPqWrite(df.where(col("vec_id") < 20), dir, numCentroids = 4, lloydIters = 1,
+      ivfSampleMod = 1, m = 4, ksub = 4, pqIters = 2, pqSampleMod = 2)
+    (df, dir)
+  }
+
+  test("the IVF-PQ artifacts' declared schemas equal the schemas Spark infers") {
+    val (_, dir) = smallIvfPq()
+    for ((name, declared) <- Similarity.ArtifactSchemas)
+      assert(spark.read.parquet(s"$dir/$name").schema == declared, name)
+  }
+
+  test("one ivfPqAppend and one ivfPqQuery run a pinned number of jobs") {
+    // an artifact read that declares its schema runs no footer job
+    val (df, dir) = smallIvfPq()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // job-start events ride the asynchronous listener bus: wait until
+    // the count holds for 4 reads 25 ms apart
+    def settled(): Int = {
+      var last = -1; var stable = 0
+      while (stable < 4) { Thread.sleep(25); val n = jobs.get; if (n == last) stable += 1 else { stable = 0; last = n } }
+      last
+    }
+    def counted(run: => Unit): Int = { settled(); jobs.set(0); run; settled() }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val append = counted(Similarity.ivfPqAppend(df.where(col("vec_id") >= 20), dir))
+      val query = counted(Similarity.ivfPqQuery(spark, dir, df, df.where(col("vec_id") < 3),
+        k = 5, nprobe = 4, shortlist = 100).collect())
+      assert((append, query) == (9, 10), s"append $append jobs, query $query jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("ivfPqAppend: residual indexes append residual codes; unmarked indexes are refused") {
     import org.apache.spark.sql.functions.col
     val vecs = (0L until 40L).map { i =>

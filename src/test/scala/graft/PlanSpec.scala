@@ -297,10 +297,17 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     val bars = spark.createDataFrame((0 until 60).map(i =>
       (s"s${i % 3}", i.toLong, if (i % 4 == 0) Some(i.toDouble) else None)))
       .toDF("symbol", "date", "close")
-    val plan = executedPlan(graft.etl.Align.align(bars, fillNullStrategy = "backward"))
-      .toLowerCase
+    val df = graft.etl.Align.align(bars, fillNullStrategy = "backward")
+    val plan = executedPlan(df).toLowerCase
     assert(!plan.contains("unboundedfollowing"),
       s"backward fill must run as a reversed running frame:\n$plan")
+    // the fill is the series fold over descending dates, not a window
+    val nodes = physicalNodes(df.queryExecution.executedPlan)
+    val folds = nodes.collect { case f: graft.ta.SeriesFoldExec => f }
+    assert(folds.map(_.order.direction) == Seq(org.apache.spark.sql.catalyst.expressions.Descending),
+      s"backward fill must be one fold over descending dates:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
+      s"backward fill must plan no Window:\n$plan")
   }
 
   test("align with sorted=false ends at the fill, no global sort / range exchange") {
@@ -435,16 +442,16 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   test("sequential backtest event loop executes inside a task, not on the driver") {
     // pre-r8 these queries collected bars to the driver and re-parallelized
     // the equity curve (a LocalTableScan of driver-computed rows); the
-    // distributed shape folds inside flatMapGroups, so the plan must show a
-    // typed-groups node fed by the parquet scan and no local relation
+    // distributed shape folds inside a task, so the plan must show the
+    // series-fold operator fed by the parquet scan and no local relation
     // the portfolio is the literal "p0", one series: the grouping's own
     // exchange is its only one (a series repartition on the folded
     // literal would add a second that the grouping cannot reuse)
     for ((name, exchanges) <- Seq("bt_sequential" -> 2, "bt_multi_asset" -> 5)) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       val plan = executedPlan(df)
-      assert(plan.contains("MapGroups"),
-        s"$name: event loop must fold inside a task (flatMapGroups):\n$plan")
+      assert(plan.contains("SeriesFold"),
+        s"$name: event loop must fold inside a task (SeriesFold):\n$plan")
       assert(!plan.contains("LocalTableScan"),
         s"$name: no driver-side collect/re-parallelize in the query path:\n$plan")
       assert(countShuffleExchanges(df) == exchanges,
@@ -913,7 +920,73 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     val seq = nodesAfterRun(graft.bt.Sequential.runPortfolios(pf,
       (syms, closes) => (ctx, p) => ctx.buy(syms(0), 1, closes(syms(0))(p))))
     assert(!hasAppendColumns(seq))
-    assert(seq.exists(_.isInstanceOf[org.apache.spark.sql.execution.MapGroupsExec]))
+    assert(seq.exists(_.isInstanceOf[graft.ta.SeriesFoldExec]))
+  }
+
+  test("the batch folds plan one SeriesFold: no sort, object or window nodes at the fold") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val bars = Tables.bars(spark, eventsDir)
+    val kernels: Seq[(String, Array[Array[Double]] => Array[Double])] =
+      Seq("ema5" -> (a => graft.ta.Kernels.ema(a(0), 5)))
+    val sig = bars.select(col("symbol"), col("ord"), col("close").as("price"),
+      (col("ord") % 7 === 0).as("buy_sig"), (col("ord") % 7 === 3).as("sell_sig"))
+    val pf = bars.select(concat(lit("P"), (col("ord") % 2).cast("string")).as("portfolio"),
+      col("symbol"), col("ord"), col("close"))
+    val sparse = bars.where(col("ord") % 3 =!= 0)
+      .select(col("symbol"), col("ord").as("date"), col("close"))
+    /** The fold's operators down to its exchange. */
+    def atFold(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: ShuffleExchangeLike | _: QueryStageExec | _: AQEShuffleReadExec => Nil
+      case other => other +: other.children.flatMap(atFold)
+    }
+    for ((name, df, exchanges) <- Seq(
+        ("Recursive.multi", graft.ta.Recursive.multi(bars, Seq("close"), kernels), 1),
+        ("Vectorized.summaryVsPrice", graft.bt.Vectorized.summaryVsPrice(sig), 1),
+        ("Sequential.runPortfolios", graft.bt.Sequential.runPortfolios(pf,
+          (syms, closes) => (ctx, p) => ctx.buy(syms(0), 1, closes(syms(0))(p))), 1),
+        ("Align.align", graft.etl.Align.align(sparse, sorted = false), 3))) {
+      val nodes = nodesAfterRun(df)
+      val folds = nodes.collect { case f: graft.ta.SeriesFoldExec => f }
+      assert(folds.size == 1, s"$name: one fold: $nodes")
+      val seg = atFold(folds.head)
+      assert(!seg.exists(_.isInstanceOf[SortExec]), s"$name: the fold sorts itself: $seg")
+      assert(!nodes.exists(n => n.isInstanceOf[DeserializeToObjectExec] ||
+        n.isInstanceOf[MapGroupsExec] || n.isInstanceOf[SerializeFromObjectExec] ||
+        n.isInstanceOf[window.WindowExec]), s"$name: no object or window nodes: $nodes")
+      assert(shuffles(nodes).size == exchanges, s"$name: $exchanges exchanges: ${shuffles(nodes)}")
+    }
+  }
+
+  test("a series fold generates no class of its own") {
+    // the codegen cache is keyed by source, so a shape no other test
+    // builds (6 inputs, 5 outputs, fresh names) makes a typed fold's
+    // sort, deserializer and serializer classes fresh; the input stage
+    // and the exchange, which a bare series repartition plans too, are
+    // warmed first
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+    def in(t: String) = (0 until 6).map(i => s"v${i}_$t")
+    def frame(t: String) = spark.range(0, 400, 1, 2).select(
+      Seq((col("id") % 8).cast("string").as("symbol"), col("id").as("ord")) ++
+        in(t).zipWithIndex.map { case (c, i) => (col("id") * (i + 0.5)).as(c) }: _*)
+    def folded(t: String) = graft.ta.SeriesOps.overSeries(frame(t), in(t),
+      (0 until 5).map(i => s"o${i}_$t"))(a => a.take(5))
+    def plain(t: String) = graft.ta.SeriesOps.bySeries(frame(t).select(
+      Seq(col("symbol").cast(StringType), col("ord").cast(LongType)) ++
+        in(t).map(c => col(c).cast(DoubleType)): _*), "symbol")
+    def compiled(df: DataFrame): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      df.write.format("noop").mode("overwrite").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    compiled(plain(tag + "w"))
+    val fold = compiled(folded(tag + "a"))
+    val repartition = compiled(plain(tag + "b"))
+    assert(fold == repartition,
+      s"the fold compiled $fold classes, the bare series repartition $repartition")
   }
 
   test("a small series query keeps every series partition: no coalesced AQE read") {
